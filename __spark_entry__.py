@@ -63,8 +63,8 @@ def _configure(spark: SparkSession) -> SparkSession:
     except Exception:
         pass  # runtime-immutable in some builds; load_tables copes
     try:
-        # perf-only: let AQE re-plan inside cached subplans (the
-        # engine persists shared frames; see session.get_spark)
+        # perf-only: let AQE re-plan inside cached subplans (operations
+        # persist the frames they share; see session.get_spark)
         spark.conf.set(
             "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
             "true",

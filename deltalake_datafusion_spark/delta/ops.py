@@ -48,6 +48,7 @@ from deltalake_datafusion_spark.delta.writer import (
     maybe_checkpoint,
     physical_schema,
 )
+from deltalake_datafusion_spark.materialize import needs_materializing, scope
 from pyspark.sql.types import (
     BinaryType,
     LongType,
@@ -175,28 +176,6 @@ def _restart_on_conflict(attempt, max_restarts: int = 3):
         except ConcurrentModificationError as e:
             last = e
     raise last
-
-
-def _plan_is_cheap(df) -> bool:
-    """True when re-evaluating ``df`` costs no more than a scan pass:
-    its analyzed plan has no shuffle-inducing, Python-eval, or
-    plan-multiplying operators (it is e.g. a localCheckpoint's
-    LogicalRDD, a LocalRelation, or a filtered/projected file scan).
-    Persisting such a source buys nothing — the materialization
-    barrier plus cache write cost MORE than the re-scan (measured:
-    the unconditional MERGE source persist made per-micro-batch MV
-    refresh 2.8x slower at local[32], driver BENCH_r12
-    streaming_mv_join_refresh 8.6 -> 24.2 s)."""
-    try:
-        plan = df._jdf.queryExecution().analyzed().toString()
-    except Exception:
-        return False
-    heavy = (
-        "Join", "Aggregate", "Window", "Deduplicate", "Generate",
-        "Sort", "Union", "EvalPython", "MapInPandas", "MapInArrow",
-        "FlatMapGroups", "CoGroup", "Repartition", "GlobalLimit",
-    )
-    return not any(h in plan for h in heavy)
 
 
 _FID_KEY = "spark.sql.parquet.fieldId.read.enabled"
@@ -671,68 +650,65 @@ def _delete_plan(
     from deltalake_datafusion_spark.delta.cdf import cdf_enabled as _cdf_en
 
     cdc_on = emit_cdc and _cdf_en(snap.metadata.configuration)
-    matched = None
-    enc = {"actions": [], "owners": [], "full_removes": [],
-           "rows_deleted": 0}
-    if candidates:
-        # Scan candidates (DV-aware: rows already deleted in place are
-        # invisible, so re-deletes never double-count), evaluate the
-        # predicate over logical columns; DV-encode the matched rows
-        # executor-side (_dv_soft_delete_actions). UPDATE hands the
-        # scan it already ran in via ``rowmeta``.
-        if rowmeta is not None:
-            matched = rowmeta.select("__file_path", "__row_index")
-        else:
-            matched = _scan_with_rowmeta(
-                spark, snap, predicate, files=candidates
-            ).filter(F.expr(predicate))
-        if cdc_on and rowmeta is None:
-            # the matched rows feed BOTH the DV encoder and the cdc
-            # capture below — persist once instead of re-scanning the
-            # candidate files (bounded by deleted-row volume)
-            matched = matched.persist()
-        enc = _dv_soft_delete_actions(spark, snap, matched, candidates, fs)
-    total_deleted = enc["rows_deleted"] + stats_full_live
+    with scope() as persist:
+        matched = None
+        enc = {"actions": [], "owners": [], "full_removes": [],
+               "rows_deleted": 0}
+        if candidates:
+            # Scan candidates (DV-aware: rows already deleted in place are
+            # invisible, so re-deletes never double-count), evaluate the
+            # predicate over logical columns; DV-encode the matched rows
+            # executor-side (_dv_soft_delete_actions). UPDATE hands the
+            # scan it already ran in via ``rowmeta``.
+            if rowmeta is not None:
+                matched = rowmeta.select("__file_path", "__row_index")
+            else:
+                matched = _scan_with_rowmeta(
+                    spark, snap, predicate, files=candidates
+                ).filter(F.expr(predicate))
+            if cdc_on and rowmeta is None:
+                # the matched rows feed BOTH the DV encoder and the cdc
+                # capture below — persist once instead of re-scanning the
+                # candidate files (bounded by deleted-row volume)
+                matched = persist(matched)
+            enc = _dv_soft_delete_actions(spark, snap, matched, candidates, fs)
+        total_deleted = enc["rows_deleted"] + stats_full_live
 
-    if not enc["owners"] and not enc["full_removes"] and not stats_full:
-        if matched is not None and cdc_on:
-            matched.unpersist()
-        return _noop_delete()
+        if not enc["owners"] and not enc["full_removes"] and not stats_full:
+            return _noop_delete()
 
-    blob_owners = enc["owners"]
-    full_removes = list(stats_full) + enc["full_removes"]
-    actions = list(enc["actions"])
-    for f in full_removes:
-        actions.append(_remove_action(f))
+        blob_owners = enc["owners"]
+        full_removes = list(stats_full) + enc["full_removes"]
+        actions = list(enc["actions"])
+        for f in full_removes:
+            actions.append(_remove_action(f))
 
-    # CDF: a DELETE commit mixes removes and DV-adds, so per spec it
-    # must carry its changed rows as cdc files (readers of a commit
-    # with cdc use only cdc). The matched rows were persisted above so
-    # the capture re-reads nothing; only the stats-full files the fast
-    # path never scanned need a read here — exactly as Delta's own
-    # writer does when the feed is enabled.
-    from deltalake_datafusion_spark.delta.cdf import (
-        CHANGE_TYPE_COL,
-        cdf_enabled,
-        stage_cdc,
-    )
+        # CDF: a DELETE commit mixes removes and DV-adds, so per spec it
+        # must carry its changed rows as cdc files (readers of a commit
+        # with cdc use only cdc). The matched rows were persisted above so
+        # the capture re-reads nothing; only the stats-full files the fast
+        # path never scanned need a read here — exactly as Delta's own
+        # writer does when the feed is enabled.
+        from deltalake_datafusion_spark.delta.cdf import (
+            CHANGE_TYPE_COL,
+            cdf_enabled,
+            stage_cdc,
+        )
 
-    if cdc_on:
-        parts = []
-        if matched is not None:
-            parts.append(matched)  # persisted above — no second scan
-        if stats_full:
-            parts.append(_scan_with_rowmeta(spark, snap, None, files=stats_full))
-        if parts:
-            cdc_df = parts[0]
-            for p in parts[1:]:
-                cdc_df = cdc_df.unionByName(p)
-            cdc_df = cdc_df.drop("__row_index", "__file_path").withColumn(
-                CHANGE_TYPE_COL, F.lit("delete")
-            )
-            actions.extend(stage_cdc(spark, snap, cdc_df))
-        if matched is not None:
-            matched.unpersist()
+        if cdc_on:
+            parts = []
+            if matched is not None:
+                parts.append(matched)  # persisted above — no second scan
+            if stats_full:
+                parts.append(_scan_with_rowmeta(spark, snap, None, files=stats_full))
+            if parts:
+                cdc_df = parts[0]
+                for p in parts[1:]:
+                    cdc_df = cdc_df.unionByName(p)
+                cdc_df = cdc_df.drop("__row_index", "__file_path").withColumn(
+                    CHANGE_TYPE_COL, F.lit("delete")
+                )
+                actions.extend(stage_cdc(spark, snap, cdc_df))
 
     return {
         "actions": actions,
@@ -835,154 +811,154 @@ def _update_attempt(
     matched_df = _scan_with_rowmeta(
         spark, snap, predicate, files=candidates, row_id_col=rt_mat
     ).filter(F.expr(predicate))
-    # matched rows feed the rewrite, the DV encode of the old copies
-    # (via _delete_plan's rowmeta reuse) AND (with the feed on) the
-    # cdc pre/post images — persist once instead of rescanning the
-    # candidate files per use; bounded by matched-row volume, which
-    # UPDATE materializes as new files anyway
-    matched_df = matched_df.persist()
-    # Nested-field assignments (delta-spark `SET addr.city = …`):
-    # group dotted targets by their top-level struct column; the
-    # struct is rebuilt via withField, every RHS still evaluated
-    # against the OLD row.
-    top_sets: dict[str, str] = {}
-    nested_sets: dict[str, list[tuple[str, str]]] = {}
-    for k, v in set_exprs.items():
-        if "." in k:
-            base, rest = k.split(".", 1)
-            nested_sets.setdefault(base, []).append((rest, v))
-        else:
-            top_sets[k] = v
-    both = sorted(set(top_sets) & set(nested_sets))
-    if both:
-        raise ValueError(
-            f"UPDATE SET assigns both column(s) {both} and their "
-            "nested fields — pick one level"
-        )
-    unknown = [
-        c
-        for c in list(top_sets) + list(nested_sets)
-        if c not in matched_df.columns
-    ]
-    if unknown:
-        raise ValueError(
-            f"UPDATE SET targets unknown column(s) {unknown}; "
-            f"table columns: {snap.schema.fieldNames()}"
-        )
-    _reject_generated_set(snap.schema, set_exprs, "UPDATE")
-
-    def _new_col(c):
-        # assignments cast to the declared field type (delta-spark
-        # implicit cast: `SET score = 1.0` must stay DOUBLE, not the
-        # literal's DECIMAL(2,1) — a type drift here would write
-        # parquet files unreadable under the table schema)
-        if c in top_sets:
-            return (
-                F.expr(top_sets[c]).cast(snap.schema[c].dataType).alias(c)
+    with scope() as persist:
+        # matched rows feed the rewrite, the DV encode of the old copies
+        # (via _delete_plan's rowmeta reuse) AND (with the feed on) the
+        # cdc pre/post images — persist once instead of rescanning the
+        # candidate files per use; bounded by matched-row volume, which
+        # UPDATE materializes as new files anyway
+        matched_df = persist(matched_df)
+        # Nested-field assignments (delta-spark `SET addr.city = …`):
+        # group dotted targets by their top-level struct column; the
+        # struct is rebuilt via withField, every RHS still evaluated
+        # against the OLD row.
+        top_sets: dict[str, str] = {}
+        nested_sets: dict[str, list[tuple[str, str]]] = {}
+        for k, v in set_exprs.items():
+            if "." in k:
+                base, rest = k.split(".", 1)
+                nested_sets.setdefault(base, []).append((rest, v))
+            else:
+                top_sets[k] = v
+        both = sorted(set(top_sets) & set(nested_sets))
+        if both:
+            raise ValueError(
+                f"UPDATE SET assigns both column(s) {both} and their "
+                "nested fields — pick one level"
             )
-        if c in nested_sets:
-            e = F.col(c)
-            for rest, rhs in nested_sets[c]:
-                ft = _nested_field_type(snap.schema, f"{c}.{rest}")
-                rc = F.expr(rhs)
-                e = e.withField(rest, rc.cast(ft) if ft else rc)
-            return e.alias(c)
-        return F.col(c)
-
-    # ANSI/Delta UPDATE is simultaneous assignment: every SET
-    # right-hand side is evaluated against the OLD row, so
-    # `SET a = b, b = a` swaps. One select over the pre-update row
-    # (never a sequential withColumn chain, which would leak
-    # already-updated values into later assignments).
-    updated = matched_df.select(
-        *[_new_col(c) for c in matched_df.columns]
-    )
-    # Generated columns not explicitly SET are recomputed from the
-    # post-update row — updating a base column must never leave its
-    # generated column stale (delta-spark UPDATE semantics).
-    for _gf in snap.schema.fields:
-        if (
-            _gf.metadata
-            and "delta.generationExpression" in _gf.metadata
-            and _gf.name not in set_exprs
-        ):
-            updated = updated.withColumn(
-                _gf.name,
-                F.expr(
-                    _gf.metadata["delta.generationExpression"]
-                ).cast(_gf.dataType),
+        unknown = [
+            c
+            for c in list(top_sets) + list(nested_sets)
+            if c not in matched_df.columns
+        ]
+        if unknown:
+            raise ValueError(
+                f"UPDATE SET targets unknown column(s) {unknown}; "
+                f"table columns: {snap.schema.fieldNames()}"
             )
-    updated = updated.drop("__row_index", "__file_path")
-    # CHECK constraints validate up front; NOT NULL invariants verify
-    # from the staged files' footer nullCount stats (no second pass
-    # over the update plan)
-    validate_constraints(
-        updated, table_constraints(snap.metadata.configuration)
-    )
-    from deltalake_datafusion_spark.delta.constraints import (
-        notnull_columns_to_verify as _nncv,
-        verify_notnull_from_stats as _vnns,
-    )
+        _reject_generated_set(snap.schema, set_exprs, "UPDATE")
 
-    _nn_verify = _nncv(snap.schema, updated)
+        def _new_col(c):
+            # assignments cast to the declared field type (delta-spark
+            # implicit cast: `SET score = 1.0` must stay DOUBLE, not the
+            # literal's DECIMAL(2,1) — a type drift here would write
+            # parquet files unreadable under the table schema)
+            if c in top_sets:
+                return (
+                    F.expr(top_sets[c]).cast(snap.schema[c].dataType).alias(c)
+                )
+            if c in nested_sets:
+                e = F.col(c)
+                for rest, rhs in nested_sets[c]:
+                    ft = _nested_field_type(snap.schema, f"{c}.{rest}")
+                    rc = F.expr(rhs)
+                    e = e.withField(rest, rc.cast(ft) if ft else rc)
+                return e.alias(c)
+            return F.col(c)
 
-    from deltalake_datafusion_spark.delta.writer import _stage_and_move
-
-    # New files with the updated rows (physical projection if mapped).
-    # Row tracking: each updated copy persists its pre-update stable id
-    # in the materialized column, so _row_id survives the UPDATE.
-    from deltalake_datafusion_spark.delta.writer import _rename_to_physical
-
-    logical = snap.schema
-    if rt_mat:
-        updated = updated.withColumn(rt_mat, F.col("__old_row_id"))
-    keep = list(logical.fieldNames()) + ([rt_mat] if rt_mat else [])
-    out_df = (
-        _rename_to_physical(
-            updated.select(*keep), logical,
-            extra_cols=[rt_mat] if rt_mat else None,
-            field_ids=snap.column_mapping_mode == "id",
+        # ANSI/Delta UPDATE is simultaneous assignment: every SET
+        # right-hand side is evaluated against the OLD row, so
+        # `SET a = b, b = a` swaps. One select over the pre-update row
+        # (never a sequential withColumn chain, which would leak
+        # already-updated values into later assignments).
+        updated = matched_df.select(
+            *[_new_col(c) for c in matched_df.columns]
         )
-        if snap.column_mapping_mode != "none"
-        else updated.select(*keep)
-    )
-    phys = physical_schema(logical)
-    phys_parts = [
-        phys.fields[logical.fieldNames().index(p)].name
-        for p in snap.partition_columns
-    ]
-    moved = _stage_and_move(
-        spark, out_df, snap.table_path, phys_parts,
-        optimize_write=_ow_enabled(snap),
-    )
-
-    # DV the old copies of the matched rows — PLANNED against the same
-    # snapshot, committed together with the replacement adds in ONE
-    # atomic version: no reader or crash window ever observes the rows
-    # deleted but not yet re-added. The persisted matched rows feed
-    # the DV encode directly (rowmeta) — no second candidate scan.
-    plan = _delete_plan(
-        spark, snap, predicate, emit_cdc=False, candidates=candidates,
-        rowmeta=matched_df,
-    )
-
-    from deltalake_datafusion_spark.delta.cdf import (
-        CHANGE_TYPE_COL,
-        cdf_enabled,
-        stage_cdc,
-    )
-
-    cdc_actions: list[dict] = []
-    if cdf_enabled(snap.metadata.configuration):
-        pre = matched_df.drop("__row_index", "__file_path").withColumn(
-            CHANGE_TYPE_COL, F.lit("update_preimage")
+        # Generated columns not explicitly SET are recomputed from the
+        # post-update row — updating a base column must never leave its
+        # generated column stale (delta-spark UPDATE semantics).
+        for _gf in snap.schema.fields:
+            if (
+                _gf.metadata
+                and "delta.generationExpression" in _gf.metadata
+                and _gf.name not in set_exprs
+            ):
+                updated = updated.withColumn(
+                    _gf.name,
+                    F.expr(
+                        _gf.metadata["delta.generationExpression"]
+                    ).cast(_gf.dataType),
+                )
+        updated = updated.drop("__row_index", "__file_path")
+        # CHECK constraints validate up front; NOT NULL invariants verify
+        # from the staged files' footer nullCount stats (no second pass
+        # over the update plan)
+        validate_constraints(
+            updated, table_constraints(snap.metadata.configuration)
         )
-        post = updated.select(*logical.fieldNames()).withColumn(
-            CHANGE_TYPE_COL, F.lit("update_postimage")
+        from deltalake_datafusion_spark.delta.constraints import (
+            notnull_columns_to_verify as _nncv,
+            verify_notnull_from_stats as _vnns,
         )
-        cdc_actions = stage_cdc(spark, snap, pre.unionByName(post))
 
-    matched_df.unpersist()
+        _nn_verify = _nncv(snap.schema, updated)
+
+        from deltalake_datafusion_spark.delta.writer import _stage_and_move
+
+        # New files with the updated rows (physical projection if mapped).
+        # Row tracking: each updated copy persists its pre-update stable id
+        # in the materialized column, so _row_id survives the UPDATE.
+        from deltalake_datafusion_spark.delta.writer import _rename_to_physical
+
+        logical = snap.schema
+        if rt_mat:
+            updated = updated.withColumn(rt_mat, F.col("__old_row_id"))
+        keep = list(logical.fieldNames()) + ([rt_mat] if rt_mat else [])
+        out_df = (
+            _rename_to_physical(
+                updated.select(*keep), logical,
+                extra_cols=[rt_mat] if rt_mat else None,
+                field_ids=snap.column_mapping_mode == "id",
+            )
+            if snap.column_mapping_mode != "none"
+            else updated.select(*keep)
+        )
+        phys = physical_schema(logical)
+        phys_parts = [
+            phys.fields[logical.fieldNames().index(p)].name
+            for p in snap.partition_columns
+        ]
+        moved = _stage_and_move(
+            spark, out_df, snap.table_path, phys_parts,
+            optimize_write=_ow_enabled(snap),
+        )
+
+        # DV the old copies of the matched rows — PLANNED against the same
+        # snapshot, committed together with the replacement adds in ONE
+        # atomic version: no reader or crash window ever observes the rows
+        # deleted but not yet re-added. The persisted matched rows feed
+        # the DV encode directly (rowmeta) — no second candidate scan.
+        plan = _delete_plan(
+            spark, snap, predicate, emit_cdc=False, candidates=candidates,
+            rowmeta=matched_df,
+        )
+
+        from deltalake_datafusion_spark.delta.cdf import (
+            CHANGE_TYPE_COL,
+            cdf_enabled,
+            stage_cdc,
+        )
+
+        cdc_actions: list[dict] = []
+        if cdf_enabled(snap.metadata.configuration):
+            pre = matched_df.drop("__row_index", "__file_path").withColumn(
+                CHANGE_TYPE_COL, F.lit("update_preimage")
+            )
+            post = updated.select(*logical.fieldNames()).withColumn(
+                CHANGE_TYPE_COL, F.lit("update_postimage")
+            )
+            cdc_actions = stage_cdc(spark, snap, pre.unionByName(post))
+
     adds = []
     p2l = dict(zip(phys_parts, snap.partition_columns))
     from deltalake_datafusion_spark.delta.stats import (
@@ -1231,36 +1207,25 @@ def merge_delta(
     def _run():
         last: Exception | None = None
         for _ in range(max(1, max_restarts)):
-            # every frame _merge_attempt persists lands in _pins and
-            # is released here no matter how the attempt exits
-            # (success, conflict retry, constraint violation, parse
-            # error, stage failure) — ADVICE r12: the old code only
-            # unpersisted on success and the strict-cardinality raise,
-            # leaking cached blocks per failed attempt.
-            _pins: list = []
+            # one scope per attempt: what it persisted is released
+            # however it exits (success, restart, raised error)
             try:
-                return _merge_attempt(
-                    spark, table_path, source, on,
-                    m_clauses=m_clauses,
-                    nm_clauses=nm_clauses,
-                    bs_clauses=bs_clauses,
-                    strict=strict,
-                    schema_evolution=schema_evolution,
-                    strategy=strategy,
-                    extra_actions=extra_actions,
-                    txn_guards=txn_guards,
-                    _pins=_pins,
-                )
+                with scope() as persist:
+                    return _merge_attempt(
+                        spark, table_path, source, on, persist,
+                        m_clauses=m_clauses,
+                        nm_clauses=nm_clauses,
+                        bs_clauses=bs_clauses,
+                        strict=strict,
+                        schema_evolution=schema_evolution,
+                        strategy=strategy,
+                        extra_actions=extra_actions,
+                        txn_guards=txn_guards,
+                    )
             except _TxnRangeCovered:
                 return {"skipped": "txn-covered"}
             except ConcurrentModificationError as e:
                 last = e
-            finally:
-                for _df in _pins:
-                    try:  # idempotent on the success path
-                        _df.unpersist()
-                    except Exception:
-                        pass
         raise last
 
     return _with_field_id_restore(spark, _run)
@@ -1271,6 +1236,7 @@ def _merge_attempt(
     table_path: str,
     source,
     on: str,
+    persist,
     m_clauses: list[dict],
     nm_clauses: list[dict],
     bs_clauses: list[dict],
@@ -1279,9 +1245,9 @@ def _merge_attempt(
     strategy: str = "auto",
     extra_actions: list[dict] | None = None,
     txn_guards: list[dict] | None = None,
-    _pins: list | None = None,
 ) -> dict:
-    """One MERGE INTO attempt against the current snapshot,
+    """One MERGE INTO attempt against the current snapshot (frames
+    are cached through ``persist``, the caller's materialize scope),
     copy-on-write strategy:
 
     1. join source↔target on ``on`` to find *touched files* (any file
@@ -1382,22 +1348,10 @@ def _merge_attempt(
     )
 
     # The source plan feeds the match join AND the not-matched
-    # anti-join (and may be an arbitrarily expensive derived frame —
-    # e.g. a CDF read + aggregation in incremental MV maintenance):
-    # materialize it once, exactly as delta-spark's MERGE source
-    # materialization does. Skipped when the caller already persisted
-    # it, AND when the source plan is cheap to re-evaluate (already a
-    # localCheckpoint / LocalRelation / bare scan) — there the persist
-    # is pure overhead that scales with core count (guide §5; driver
-    # BENCH_r12 measured 2.8x on per-micro-batch MV refresh).
-    _src_lvl = source.storageLevel
-    _src_persisted_here = not (
-        _src_lvl.useMemory or _src_lvl.useDisk
-    ) and not _plan_is_cheap(source)
-    if _src_persisted_here:
-        source = source.persist()
-        if _pins is not None:
-            _pins.append(source)
+    # anti-join: one that cannot be re-read identically and cheaply
+    # is materialized once (materialize.needs_materializing).
+    if needs_materializing(source):
+        source = persist(source)
     t = target.alias("t")
     s = source.alias("s")
     cond = F.expr(on)
@@ -1412,9 +1366,7 @@ def _merge_attempt(
     # collect and the rewrite join — persist once (bounded by matched
     # rows + source columns) instead of re-running target⋈source per
     # consumer.
-    matched = matched.persist()
-    if _pins is not None:
-        _pins.append(matched)
+    matched = persist(matched)
     # Strict merges fold the cardinality check INTO the touched-file
     # collect: one O(files)-row aggregation (a file with more matched
     # rows than distinct matched row_indexes holds a duplicate)
@@ -1452,9 +1404,6 @@ def _merge_attempt(
                 .collect()
             )
         if dup:
-            matched.unpersist()
-            if _src_persisted_here:
-                source.unpersist()
             raise MergeCardinalityError(
                 "MERGE source has multiple rows matching the same target "
                 "row (e.g. target row_index "
@@ -1550,13 +1499,10 @@ def _merge_attempt(
         # matching one target row duplicates that row (ANSI MERGE
         # errors; see MergeCardinalityError above).
         joined = tf.join(m, ["__file_path", "__row_index"], "left")
-        joined_persisted = _cdf_on or strategy == "dv"
-        if joined_persisted:
+        if _cdf_on or strategy == "dv":
             # the join feeds the rewrite/DV rowmeta AND the cdc
             # pre/post images — persist once instead of recomputing it
-            joined = joined.persist()
-            if _pins is not None:
-                _pins.append(joined)
+            joined = persist(joined)
         # Evolved columns are absent from the target scan: back-fill
         # typed nulls so every downstream select over the (possibly
         # evolved) logical schema resolves; SET/INSERT overwrite them.
@@ -2128,11 +2074,6 @@ def _merge_attempt(
         actions.extend(stage_cdc(spark, snap, cdc_df))
     if extra_actions:
         actions.extend(extra_actions)
-    if touched and joined_persisted:
-        joined.unpersist()
-    matched.unpersist()
-    if _src_persisted_here:
-        source.unpersist()
 
     from deltalake_datafusion_spark.delta.writer import (
         ConcurrentModificationError,

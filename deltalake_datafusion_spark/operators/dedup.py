@@ -10,7 +10,7 @@ Scale design (100 TB corpora):
 - Exact dedup is one hash-shuffle on a 128-bit digest (md5), not on
   the full text — shuffle payload stays tiny even for MB documents.
 - The hashed-shingle corpus (normalize → n-gram → xxhash64, int64
-  arrays) is computed ONCE per pipeline, persisted, and shared by
+  arrays) is computed ONCE per pipeline, materialized, and shared by
   signature build and verification — the step a production pipeline
   checkpoints to a table.
 - MinHash signatures: two interchangeable, bit-identical builds — a
@@ -41,6 +41,7 @@ import random
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from deltalake_datafusion_spark.delta.smalldf import local_rows_df as _local_rows_df
+from deltalake_datafusion_spark.materialize import scope
 
 # 2^31-1: keeps h*a+b inside int64 under ANSI arithmetic (h,a,b < 2^31)
 MERSENNE_PRIME = (1 << 31) - 1
@@ -309,21 +310,18 @@ def minhash_dedup_pairs(
     verified with exact shingle-set Jaccard (array_intersect) — no
     false positives survive.
 
-    The hashed-shingle corpus is materialized once (MEMORY_AND_DISK)
-    and shared by the signature build and both verification joins;
+    The hashed-shingle corpus is materialized once (eager local
+    checkpoint) and shared by the signature build and both verify joins;
     Jaccard is computed over the hashed shingle sets (identical values
     barring a ~2⁻⁶⁴ collision, 8-byte array elements in the join
     instead of strings)."""
-    from pyspark import StorageLevel
-
-    sh = _hashed_shingles(_spread(df), text_col, id_col, shingle_n).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
     # Eager materialization: the signature build and both verify joins
-    # scan `sh` from parallel stages of one job; without this, each
-    # racing stage recomputes the shingle pipeline before the cache is
-    # populated (Spark's cache doesn't block concurrent fills).
-    sh.count()
+    # scan `sh` from parallel stages of one job; a lazy cut lets each
+    # racing stage recompute the shingle pipeline before the blocks
+    # exist (Spark's cache doesn't block concurrent fills).
+    sh = _hashed_shingles(
+        _spread(df), text_col, id_col, shingle_n
+    ).localCheckpoint(eager=True)
     sigs = _signature_of_arrow(sh, num_perm, seed)
     cands = minhash_lsh_candidates(sigs, bands)
     return (
@@ -530,14 +528,13 @@ def ngram_jaccard_pairs(
     degenerate corpora where random pairs share many shingles (tiny
     vocabularies, boilerplate). Choose ``shingle_n`` large enough that
     unrelated documents rarely collide."""
-    from pyspark import StorageLevel
-
     # The shingled corpus feeds three plan branches (inverted index
-    # and both sides of the verification join); without persistence
-    # each branch re-runs normalize→shingle→hash over the full corpus.
+    # and both sides of the verification join); without a cut each
+    # branch re-runs normalize→shingle→hash over the full corpus.
     # At scale this is the step a production pipeline checkpoints to a
-    # table; in-session, MEMORY_AND_DISK is the same contract. Arrays
-    # are stored sorted so the prefix is a slice.
+    # table; in-session, an eager localCheckpoint is the same contract
+    # (a lazy one races parallel consumers). Arrays are stored sorted
+    # so the prefix is a slice.
     sh = _spread(df).select(
         F.col(id_col).alias("id"),
         F.array_sort(
@@ -546,10 +543,7 @@ def ngram_jaccard_pairs(
                 lambda s: F.xxhash64(s),
             )
         ).alias("sh"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    # Eager fill — parallel consumer stages would otherwise race the
-    # cache and each recompute the shingle pipeline.
-    sh.count()
+    ).localCheckpoint(eager=True)
 
     # Prefix inverted index: first ⌊(1−t)n⌋+1 tokens in hash order.
     prefix = sh.select(
@@ -1050,8 +1044,6 @@ def incremental_minhash_dedup(
 
     Returns the surviving rows of ``new_docs`` (original columns).
     """
-    from pyspark import StorageLevel
-
     from deltalake_datafusion_spark.delta.scan import read_delta
     from deltalake_datafusion_spark.delta.snapshot import DeltaNotFoundError
     from deltalake_datafusion_spark.delta.writer import write_delta
@@ -1064,102 +1056,95 @@ def incremental_minhash_dedup(
     except DeltaNotFoundError:
         store_docs = store_bands = None
 
-    sh = _hashed_shingles(
-        _spread(new_docs), text_col, id_col, shingle_n
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    sh.count()  # eager: shared by signature build + verify joins
-    sigs = _signature_of_arrow(sh, num_perm, seed).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    new_bands = _band_hashes(sigs, bands)
-
-    def _verified(pairs, left_sh, right_sh):
-        return (
-            pairs.join(
-                left_sh.withColumnRenamed("id", "a").withColumnRenamed(
-                    "sh", "sh_a"
-                ),
-                "a",
-            )
-            .join(
-                right_sh.withColumnRenamed("id", "b").withColumnRenamed(
-                    "sh", "sh_b"
-                ),
-                "b",
-            )
-            .withColumn(
-                "jaccard",
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b")),
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select("a", "b")
+    with scope() as persist:
+        sh = persist(
+            _hashed_shingles(_spread(new_docs), text_col, id_col, shingle_n)
         )
+        sh.count()  # eager: shared by signature build + verify joins
+        sigs = persist(_signature_of_arrow(sh, num_perm, seed))
+        new_bands = _band_hashes(sigs, bands)
 
-    # In-batch: lower id wins (keep-first), bucket-joined, verified.
-    intra = minhash_lsh_candidates(sigs, bands, max_bucket)
-    dup_ids = _verified(intra, sh, sh).select(F.col("b").alias("id"))
+        def _verified(pairs, left_sh, right_sh):
+            return (
+                pairs.join(
+                    left_sh.withColumnRenamed("id", "a").withColumnRenamed(
+                        "sh", "sh_a"
+                    ),
+                    "a",
+                )
+                .join(
+                    right_sh.withColumnRenamed("id", "b").withColumnRenamed(
+                        "sh", "sh_b"
+                    ),
+                    "b",
+                )
+                .withColumn(
+                    "jaccard",
+                    F.size(F.array_intersect("sh_a", "sh_b"))
+                    / F.size(F.array_union("sh_a", "sh_b")),
+                )
+                .filter(F.col("jaccard") >= threshold)
+                .select("a", "b")
+            )
 
-    if store_bands is not None:
-        # vs store: only buckets the new batch touches are counted /
-        # joined — corpus-side cost ∝ matching band rows. Oversized
-        # matched buckets are skew-capped like the in-batch path.
-        matched = store_bands.join(
-            new_bands.select("band", "bucket").distinct(),
-            ["band", "bucket"],
-            "left_semi",
-        )
-        small_buckets = (
-            matched.groupBy("band", "bucket")
-            .count()
-            .filter(F.col("count") <= max_bucket)
-            .select("band", "bucket")
-        )
-        cross = (
-            new_bands.withColumnRenamed("id", "a")
-            .join(small_buckets, ["band", "bucket"], "left_semi")
-            .join(
-                matched.withColumnRenamed("id", "b"),
+        # In-batch: lower id wins (keep-first), bucket-joined, verified.
+        intra = minhash_lsh_candidates(sigs, bands, max_bucket)
+        dup_ids = _verified(intra, sh, sh).select(F.col("b").alias("id"))
+
+        if store_bands is not None:
+            # vs store: only buckets the new batch touches are counted /
+            # joined — corpus-side cost ∝ matching band rows. Oversized
+            # matched buckets are skew-capped like the in-batch path.
+            matched = store_bands.join(
+                new_bands.select("band", "bucket").distinct(),
                 ["band", "bucket"],
+                "left_semi",
             )
-            .select("a", "b")
-            .distinct()
-        )
-        dup_vs_store = _verified(
-            cross, sh, store_docs.select("id", "sh")
-        ).select(F.col("a").alias("id"))
-        dup_ids = dup_ids.unionByName(dup_vs_store)
+            small_buckets = (
+                matched.groupBy("band", "bucket")
+                .count()
+                .filter(F.col("count") <= max_bucket)
+                .select("band", "bucket")
+            )
+            cross = (
+                new_bands.withColumnRenamed("id", "a")
+                .join(small_buckets, ["band", "bucket"], "left_semi")
+                .join(
+                    matched.withColumnRenamed("id", "b"),
+                    ["band", "bucket"],
+                )
+                .select("a", "b")
+                .distinct()
+            )
+            dup_vs_store = _verified(
+                cross, sh, store_docs.select("id", "sh")
+            ).select(F.col("a").alias("id"))
+            dup_ids = dup_ids.unionByName(dup_vs_store)
 
-    # Materialize the (small) duplicate-id set ONCE: everything
-    # downstream — both store writes and whatever the caller does with
-    # the returned survivors — is then an anti-join against a cached
-    # id list instead of a re-execution of the whole LSH pipeline.
-    dup_ids = dup_ids.distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    dup_ids.count()
-    survivors = new_docs.join(
-        dup_ids.withColumnRenamed("id", id_col), id_col, "left_anti"
-    )
-    surv_ids = survivors.select(F.col(id_col).alias("id"))
-    surv_docs = sigs.join(surv_ids, "id", "left_semi").join(sh, "id")
-    write_delta(
-        spark, surv_docs.select("id", "sig", "sh"), docs_path, mode="append"
-    )
-    write_delta(
-        spark,
-        new_bands.join(surv_ids, "id", "left_semi"),
-        bands_path,
-        mode="append",
-    )
-    # Materialize the survivors (batch-scale) so every cached
-    # intermediate can be released NOW instead of leaking for the
-    # session's lifetime: localCheckpoint blocks are reclaimed by the
-    # ContextCleaner when the returned frame is garbage-collected,
-    # unlike a .persist() nobody unpersists.
-    survivors = survivors.localCheckpoint()
-    dup_ids.unpersist()
-    sh.unpersist()
-    sigs.unpersist()
-    return survivors
+        # Materialize the (small) duplicate-id set ONCE: everything
+        # downstream — both store writes and whatever the caller does with
+        # the returned survivors — is then an anti-join against a cached
+        # id list instead of a re-execution of the whole LSH pipeline.
+        dup_ids = persist(dup_ids.distinct())
+        dup_ids.count()
+        survivors = new_docs.join(
+            dup_ids.withColumnRenamed("id", id_col), id_col, "left_anti"
+        )
+        surv_ids = survivors.select(F.col(id_col).alias("id"))
+        surv_docs = sigs.join(surv_ids, "id", "left_semi").join(sh, "id")
+        write_delta(
+            spark, surv_docs.select("id", "sig", "sh"), docs_path, mode="append"
+        )
+        write_delta(
+            spark,
+            new_bands.join(surv_ids, "id", "left_semi"),
+            bands_path,
+            mode="append",
+        )
+        # Materialize the survivors (batch-scale) before the scope
+        # releases every cached intermediate: the returned frame then
+        # reads only its own localCheckpoint blocks.
+        return survivors.localCheckpoint()
 
 
 def dedup_substring_spans(

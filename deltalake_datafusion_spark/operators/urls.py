@@ -251,13 +251,11 @@ def domain_mirror_pairs(
     # local[32], unchanged by a lazy persist). Eager fill is therefore
     # justified here — unlike r12's setjoin case, where AQE reuse
     # already shared the exchange and the eager count was pure cost
-    # (guide §5).
-    from pyspark import StorageLevel
-
+    # (guide §5). The returned plan reads these rows lazily, so the
+    # cut is a localCheckpoint the ContextCleaner reclaims.
     sets_ = paths.groupBy("domain").agg(
         F.collect_set(F.xxhash64("__path")).alias("sh")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    sets_.count()
+    ).localCheckpoint(eager=True)
     hsh = sets_.select(F.xxhash64("domain").alias("id"), "sh")
     names = sets_.select(
         F.xxhash64("domain").alias("id"),

@@ -253,15 +253,16 @@ def sim_recall_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hit-join). r12's EAGER localCheckpoints here cost 3.2x at
     # local[32] (driver BENCH_r12: 3.99 -> 12.58 s; the barrier
     # materialized cpus partitions per checkpoint) — r13 keeps the
-    # sharing but LAZY (guide §5): the first consumer fills the cache
-    # inside the one real job, no standalone materialization jobs.
-    # Both frames are tiny (8 query rows / 80 truth rows).
-    queries = _recall_queries(corpus).persist()
+    # sharing but LAZY (guide §5): the first consumer fills the cut
+    # inside the one real job. Both frames are tiny (8 query rows / 80
+    # truth rows) and the returned plan reads them, so they are local
+    # checkpoints the ContextCleaner reclaims, not session-cache leaks.
+    queries = _recall_queries(corpus).localCheckpoint(eager=False)
     kw = dict(id_col="vec_id", vec_col="v")
     truth = (
         brute_force_topk(corpus, queries, k=_RECALL_K, **kw)
         .select("query_id", "neighbor_id")
-        .persist()
+        .localCheckpoint(eager=False)
     )
     anchors = corpus.filter(F.col("vec_id") < _RECALL_NLISTS).select(
         F.col("vec_id").cast("int").alias("list_id"),

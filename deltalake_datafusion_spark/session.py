@@ -59,9 +59,9 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Let AQE re-plan (broadcast conversion, partition coalescing)
-        # INSIDE cached subplans: the engine persists shared frames
-        # (MERGE matched rows, dedup shingle sets) and without this a
-        # .persist() freezes the pre-AQE plan — a cached tiny join
+        # INSIDE cached subplans: operations persist the frames they
+        # share (see materialize.py) and without this a persist
+        # freezes the pre-AQE plan — a cached tiny join
         # stays sort-merge over the static shuffle-partition count.
         .config(
             "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",

@@ -15,6 +15,30 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _plans_run_by(spark, build) -> str:
+    """The physical plan of every SQL execution ``build()`` runs (an
+    eager checkpoint cuts its subtree out of the returned frame's
+    plan), followed by the returned frame's own plan."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def last_id():
+        runs = store.executionsList()
+        n = runs.size()
+        return runs.apply(n - 1).executionId() if n else -1
+
+    before = last_id()
+    df = build()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    runs = store.executionsList()
+    plans = [_plan(df)]
+    for i in range(runs.size() - 1, -1, -1):
+        run = runs.apply(i)
+        if run.executionId() <= before:
+            break
+        plans.append(run.physicalPlanDescription())
+    return "\n".join(plans)
+
+
 def test_filter_and_projection_pushed_to_parquet(spark, sf_dir):
     t = load_tables(spark, sf_dir, "lineitem")
     df = (
@@ -533,7 +557,7 @@ def test_domain_mirror_plan_is_banded_not_all_pairs(spark):
         [(f"https://site{i % 9}.co.uk/p/{i}",) for i in range(200)],
         "url string",
     )
-    plan = _plan(domain_mirror_pairs(df, "url"))
+    plan = _plans_run_by(spark, lambda: domain_mirror_pairs(df, "url"))
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "BroadcastHashJoin" in plan  # the K PSL suffix joins

@@ -159,13 +159,37 @@ def test_struct_nullcount_dict_routes_to_fallback(spark, tmp_path):
 
 
 def test_merge_source_persist_skipped_for_cheap_plans(spark):
-    from deltalake_datafusion_spark.delta.ops import _plan_is_cheap
+    import random
+
+    from deltalake_datafusion_spark.materialize import needs_materializing
 
     base = spark.range(0, 10).select(
         F.col("id"), (F.col("id") * 2).alias("v")
     )
-    assert _plan_is_cheap(base)  # bare projected scan
-    assert _plan_is_cheap(base.filter("id > 3"))
-    assert not _plan_is_cheap(base.groupBy("v").count())
-    assert not _plan_is_cheap(base.join(base.select("id"), "id"))
-    assert not _plan_is_cheap(base.repartition(4))
+    assert not needs_materializing(base)  # bare projected scan
+    assert not needs_materializing(base.filter("id > 3"))
+    assert needs_materializing(base.groupBy("v").count())
+    assert needs_materializing(base.join(base.select("id"), "id"))
+    assert needs_materializing(base.repartition(4))
+    # sources that cannot be re-read identically
+    assert needs_materializing(base.filter(F.rand(7) < 0.5))
+    assert needs_materializing(base.withColumn("u", F.expr("uuid()")))
+    assert needs_materializing(base.sample(0.5, seed=7))
+    plus_one = F.udf(lambda x: x + 1, "long")
+    assert needs_materializing(base.withColumn("w", plus_one("id")))
+    coin = F.udf(lambda: random.random() < 0.5, "boolean")
+    assert needs_materializing(
+        base.filter(coin.asNondeterministic()())
+    )
+    # already-materialized sources
+    assert not needs_materializing(
+        base.groupBy("v").count().localCheckpoint()
+    )
+    assert not needs_materializing(
+        spark.createDataFrame([(1, 2)], "id long, v long")
+    )
+    cached = base.groupBy("v").count().persist()
+    try:
+        assert not needs_materializing(cached)
+    finally:
+        cached.unpersist()
