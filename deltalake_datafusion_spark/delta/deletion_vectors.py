@@ -5,10 +5,10 @@ Spark-first analog of the reference's selection-vector machinery
 converts per-file selection vectors into parquet access plans;
 ``snapshot.rs:188-195`` resolves DV descriptors). Spark's parquet
 reader exposes ``_metadata.row_index`` (per-file row position, stable
-across splits on Spark ≥3.5), so DV application becomes a vectorized
-anti-membership filter:
+across splits on Spark ≥3.5) and ``_metadata.file_path``, so DV
+application is an anti-membership filter on (file_path, row_index):
 
-    rows where bitmap.contains(row_index) are dropped.
+    rows whose (file_path, row_index) a DV lists are dropped.
 
 Implementation notes:
 - 32-bit roaring containers per the public RoaringFormatSpec
@@ -20,9 +20,14 @@ Implementation notes:
 - DV files: 1-byte format version, then per-DV [int32 BE length]
   [blob] [int32 BE CRC32(blob)]; descriptors reference (offset,
   sizeInBytes). Inline DVs carry z85(blob) in ``pathOrInlineDv``.
-- The filter ships decoded bitmaps to executors as numpy arrays via
-  a broadcast and applies ``np.isin`` inside an Arrow-batched pandas
-  UDF — O(batch) vectorized, no Python-per-row cost.
+- The scan filter (:func:`dv_row_filter`) keys every file on the raw
+  ``_metadata.file_path`` string. Up to ``DV_ANTI_JOIN_MAX_ROWS``
+  deleted rows per scan it is one broadcast left-anti join against
+  the decoded positions, built as an Arrow ``LocalRelation`` — pure
+  JVM, no Python in the plan. Above the bound, contiguous
+  prefix/suffix spans drop in a codegen range filter and interior
+  deletions are tested against roaring blobs in an Arrow-batched
+  pandas UDF. SCALING.md §DV has the measurements.
 
 Whole-file deletions should be (and are) dropped at planning time by
 the writer emitting a ``remove``; a DV covering every row still
@@ -328,28 +333,40 @@ def _dv_access_plan(deleted, num_records):
     return min_live, max_live, interior
 
 
-def dv_row_filter(spark, snapshot, group, df, drop_meta: bool = True):
+# Deleted-row count up to which a scan applies its deletion vectors as
+# ONE broadcast left-anti join on (file_path, row_index): a
+# LocalRelation of the deleted positions, so the filter is pure JVM
+# codegen and its broadcast needs no Python worker. Above it the map
+# would grow past a metadata-scale broadcast (one row per deleted row,
+# ~100 B each with its path), so the range triage + roaring-blob UDF
+# below takes over. See SCALING.md §DV for the measurements.
+DV_ANTI_JOIN_MAX_ROWS = 100_000
+
+
+def dv_row_filter(spark, snapshot, keyed, df):
     """Filter deleted rows out of a DataFrame read with
-    ``__row_index`` / ``__file_path`` metadata columns attached.
-    Files in ``df`` but not in ``group`` (no DV) pass through intact.
+    ``__row_index`` / ``__file_path`` metadata columns attached (kept
+    in the result).
+    ``keyed`` maps each file's ``_metadata.file_path`` string to its
+    AddFile (:func:`~deltalake_datafusion_spark.delta.scan.keyed_by_file_path`);
+    files without a DV pass through intact.
 
-    Two stages, mirroring the reference's access-plan triage
-    (Skip / Scan / RowSelection):
-
-    1. A broadcast (file → live ``row_index`` range) join plus a
-       whole-stage-codegen range filter drops every contiguously-
-       deleted prefix/suffix span JVM-side — the common shapes
-       (time-ordered DELETEs, retention trims) never reach Python at
-       all.
-    2. Only files with INTERIOR deletions keep the exact membership
-       test: their residual bitmaps are broadcast as compressed
-       roaring blobs (bytes ∝ runs, never 8 B × cardinality — a 90 %-
-       deleted 10 M-row file broadcasts KBs, not 80 MB) and decoded
-       once per executor task inside an Arrow-batched pandas UDF.
-       When no file has interior deletions the UDF is not even in
-       the plan.
+    - At most :data:`DV_ANTI_JOIN_MAX_ROWS` deleted rows in total: one
+      broadcast ``left_anti`` join against the decoded (file_path,
+      row_index) pairs — no Python in the plan, no range join beside
+      it.
+    - Above it, the reference's access-plan triage (Skip / Scan /
+      RowSelection): a broadcast (file → live ``row_index`` range)
+      join plus a codegen range filter drops each file's contiguously
+      deleted prefix/suffix; only files with INTERIOR deletions keep
+      the exact membership test, their residual bitmaps broadcast as
+      compressed roaring blobs (bytes ∝ runs, never 8 B × cardinality)
+      and decoded once per executor task inside an Arrow-batched
+      pandas UDF. When no file has interior deletions the UDF is not
+      in the plan.
     """
     import numpy as np
+    import pyarrow as pa
     from pyspark.sql import functions as F
     from pyspark.sql.types import (
         BooleanType, LongType, StringType, StructField, StructType,
@@ -360,21 +377,40 @@ def dv_row_filter(spark, snapshot, group, df, drop_meta: bool = True):
     from deltalake_datafusion_spark.delta.stats import parse_stats
 
     fs = fs_for(snapshot.table_path, spark)
-    # Keyed by decoded on-disk path; Spark reports file_path as a
-    # percent-encoded URI, decoded at lookup time (decode_file_uri).
+    deleted = {
+        key: read_dv(snapshot.table_path, f.dv, fs)
+        for key, f in keyed.items() if f.dv is not None
+    }
+    ri = F.col("__row_index")
+    if sum(len(d) for d in deleted.values()) <= DV_ANTI_JOIN_MAX_ROWS:
+        if deleted:
+            keys = list(deleted)
+            counts = [len(deleted[k]) for k in keys]
+            gone = spark.createDataFrame(pa.table({
+                "__dv_path": pa.array(keys, pa.string()).take(
+                    np.repeat(np.arange(len(keys)), counts)
+                ),
+                "__dv_row": np.concatenate(
+                    [deleted[k] for k in keys]
+                ).astype(np.int64),
+            }))
+            df = df.join(
+                F.broadcast(gone),
+                (F.col("__file_path") == gone["__dv_path"])
+                & (ri == gone["__dv_row"]),
+                "left_anti",
+            )
+        return df
+
     meta_rows = []
     interior_blobs: dict[str, bytes] = {}
-    for f in group:
-        abs_path = os.path.join(snapshot.table_path, f.path)
-        deleted = read_dv(snapshot.table_path, f.dv, fs)
-        stats = parse_stats(f.stats)
+    for key, rows in deleted.items():
+        stats = parse_stats(keyed[key].stats)
         nrec = stats.get("numRecords") if stats else None
-        min_live, max_live, interior = _dv_access_plan(deleted, nrec)
-        meta_rows.append((abs_path, min_live, max_live))
+        min_live, max_live, interior = _dv_access_plan(rows, nrec)
+        meta_rows.append((key, min_live, max_live))
         if len(interior):
-            interior_blobs[abs_path] = serialize_bitmap(interior)
-
-    from deltalake_datafusion_spark.delta.scan import _file_path_key
+            interior_blobs[key] = serialize_bitmap(interior)
 
     from deltalake_datafusion_spark.delta.smalldf import local_rows_df
 
@@ -390,9 +426,8 @@ def dv_row_filter(spark, snapshot, group, df, drop_meta: bool = True):
         ),
     )
     df = df.join(
-        F.broadcast(meta), _file_path_key() == F.col("__dvr_path"), "left"
+        F.broadcast(meta), F.col("__file_path") == F.col("__dvr_path"), "left"
     ).drop("__dvr_path")
-    ri = F.col("__row_index")
     df = df.filter(
         F.col("__dvr_min").isNull()
         | ((ri >= F.col("__dvr_min")) & (ri <= F.col("__dvr_max")))
@@ -402,20 +437,17 @@ def dv_row_filter(spark, snapshot, group, df, drop_meta: bool = True):
         bc = spark.sparkContext.broadcast(interior_blobs)
 
         def _is_live(file_path, row_index):
-            from deltalake_datafusion_spark.delta.fs import decode_file_uri
-
             out = pd.Series(True, index=file_path.index)
             table = bc.value
             cache = _is_live.__dict__.setdefault("_decoded", {})
             for fp in file_path.unique():
-                decoded_path = decode_file_uri(fp)
-                blob = table.get(decoded_path)
-                if blob is None:
+                blob = table.get(fp)
+                if blob is None:  # no interior deletions in this file
                     continue
-                arr = cache.get(decoded_path)
+                arr = cache.get(fp)
                 if arr is None:
                     arr = deserialize_bitmap(blob)
-                    cache[decoded_path] = arr
+                    cache[fp] = arr
                 mask = file_path == fp
                 out[mask] = ~np.isin(row_index[mask].to_numpy(), arr)
             return out
@@ -428,6 +460,6 @@ def dv_row_filter(spark, snapshot, group, df, drop_meta: bool = True):
             "return": pd.Series,
         }
         is_live = F.pandas_udf(_is_live, BooleanType())
-        df = df.filter(is_live(F.col("__file_path"), F.col("__row_index")))
+        df = df.filter(is_live(F.col("__file_path"), ri))
 
-    return df.drop("__row_index", "__file_path") if drop_meta else df
+    return df

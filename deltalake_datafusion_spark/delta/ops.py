@@ -2489,64 +2489,29 @@ def _optimize_attempt(
         n_out = max(1, -(-total // target_file_size))
         paths = [os.path.join(snap.table_path, f.path) for f in group]
         df = spark.read.schema(read_schema).parquet(*paths)
-        dv_files = [f for f in group if f.dv is not None]
-        if dv_files or rt_cols:
+        if any(f.dv is not None for f in group) or rt_cols:
+            from deltalake_datafusion_spark.delta.deletion_vectors import (
+                dv_row_filter,
+            )
+            from deltalake_datafusion_spark.delta.scan import (
+                _inject_row_ids,
+                keyed_by_file_path,
+            )
+
             df = df.select(
                 "*",
                 F.col("_metadata.row_index").alias("__row_index"),
                 F.col("_metadata.file_path").alias("__file_path"),
             )
-        if rt_cols:
-            from deltalake_datafusion_spark.delta.scan import _file_path_key
-
-            from deltalake_datafusion_spark.delta.smalldf import (
-                local_rows_df,
-            )
-
-            rid_map = local_rows_df(
-                spark,
-                [
-                    (
-                        os.path.join(snap.table_path, f.path),
-                        f.base_row_id,
-                        f.default_row_commit_version,
-                    )
-                    for f in group
-                ],
-                StructType(
-                    [StructField("__rid_path", StringType()),
-                     StructField("__rid_base", LongType()),
-                     StructField("__rid_dcv", LongType())]
-                ),
-            )
-            df = df.join(
-                F.broadcast(rid_map),
-                _file_path_key() == F.col("__rid_path"),
-                "left",
-            ).drop("__rid_path")
-            if rt_mat:
-                df = df.withColumn(
-                    rt_mat,
-                    F.coalesce(
-                        F.col(f"`{rt_mat}`"),
-                        F.col("__rid_base") + F.col("__row_index"),
-                    ),
-                )
-            if rt_ver:
-                df = df.withColumn(
-                    rt_ver,
-                    F.coalesce(F.col(f"`{rt_ver}`"), F.col("__rid_dcv")),
-                )
-            df = df.drop("__rid_base", "__rid_dcv")
-        if dv_files:
+            keyed = keyed_by_file_path(df, snap, group, bool(rt_cols))
             # Materialize deletion vectors during the rewrite — never
             # resurrect deleted rows; the compacted files carry no DV.
-            from deltalake_datafusion_spark.delta.deletion_vectors import (
-                dv_row_filter,
-            )
-
-            df = dv_row_filter(spark, snap, dv_files, df)
-        elif rt_cols:
+            df = dv_row_filter(spark, snap, keyed, df)
+            if rt_cols:
+                df = _inject_row_ids(
+                    spark, keyed, df, rt_mat, rt_ver,
+                    id_col=rt_mat, ver_out=rt_ver,
+                )
             df = df.drop("__row_index", "__file_path")
         if zorder_by:
             zcols = []
@@ -2824,8 +2789,13 @@ def _scan_with_rowmeta(
     # partition count (partition values come from the same broadcast
     # (file → values) map the read path uses), not one union branch
     # per partition tuple.
+    from deltalake_datafusion_spark.delta.deletion_vectors import (
+        dv_row_filter,
+    )
     from deltalake_datafusion_spark.delta.scan import (
         _inject_partition_values,
+        _inject_row_ids,
+        keyed_by_file_path,
     )
 
     paths = [os.path.join(snap.table_path, f.path) for f in candidates]
@@ -2838,63 +2808,19 @@ def _scan_with_rowmeta(
             F.col("_metadata.file_path").alias("__file_path"),
         )
     )
+    keyed = keyed_by_file_path(out, snap, candidates, bool(mat_cols))
     if part_cols:
-        out = _inject_partition_values(
-            spark, snap, candidates, out, phys_full
-        )
+        out = _inject_partition_values(spark, snap, keyed, out, phys_full)
     out = apply_schema(out, logical, extra_cols=meta_cols)
-    dv_files = [f for f in candidates if f.dv is not None]
-    if dv_files:
-        # Apply deletion vectors — DML must never see (or resurrect)
-        # rows already deleted in place; files without a DV pass
-        # through the filter intact.
-        from deltalake_datafusion_spark.delta.deletion_vectors import (
-            dv_row_filter,
-        )
-
-        out = dv_row_filter(spark, snap, dv_files, out, drop_meta=False)
+    # Apply deletion vectors — DML must never see (or resurrect) rows
+    # already deleted in place; files without a DV pass through intact.
+    out = dv_row_filter(spark, snap, keyed, out)
     if mat_cols:
-        from deltalake_datafusion_spark.delta.scan import _file_path_key
-
-        from deltalake_datafusion_spark.delta.smalldf import local_rows_df
-
-        rid_map = local_rows_df(
-            spark,
-            [
-                (
-                    os.path.join(snap.table_path, f.path),
-                    f.base_row_id,
-                    f.default_row_commit_version,
-                )
-                for f in candidates
-            ],
-            StructType(
-                [StructField("__rid_path", StringType()),
-                 StructField("__rid_base", LongType()),
-                 StructField("__rid_dcv", LongType())]
-            ),
+        out = _inject_row_ids(
+            spark, keyed, out, row_id_col, row_ver_col,
+            id_col="__old_row_id" if row_id_col else None,
+            ver_out="__old_row_commit" if row_ver_col else None,
         )
-        out = out.join(
-            F.broadcast(rid_map),
-            _file_path_key() == F.col("__rid_path"),
-            "left",
-        ).drop("__rid_path")
-        if row_id_col:
-            out = out.withColumn(
-                "__old_row_id",
-                F.coalesce(
-                    F.col(f"`{row_id_col}`"),
-                    F.col("__rid_base") + F.col("__row_index"),
-                ),
-            ).drop(row_id_col)
-        if row_ver_col:
-            out = out.withColumn(
-                "__old_row_commit",
-                F.coalesce(
-                    F.col(f"`{row_ver_col}`"), F.col("__rid_dcv")
-                ),
-            ).drop(row_ver_col)
-        out = out.drop("__rid_base", "__rid_dcv")
     return out
 
 

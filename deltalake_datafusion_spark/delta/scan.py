@@ -159,27 +159,64 @@ def _read_files(
     return df
 
 
-def _file_path_key() -> F.Column:
-    """Normalize ``__file_path`` (a percent-encoded URI) to the
-    on-disk path — the Column-expression twin of
-    :func:`deltalake_datafusion_spark.delta.fs.decode_file_uri`, kept
-    JVM-side so the partition-value join stays inside codegen.
-    ``+`` is pre-escaped because ``url_decode`` (URLDecoder) would
-    turn a literal ``+`` into a space, unlike ``urllib.unquote``."""
-    stripped = F.regexp_replace(F.col("__file_path"), r"^file:(//)?", "")
-    return F.url_decode(F.regexp_replace(stripped, r"\+", "%2B"))
+def keyed_by_file_path(
+    df: DataFrame, snapshot: Snapshot, files, with_row_ids: bool
+) -> dict:
+    """``{_metadata.file_path string: AddFile}`` for the files ``df``
+    reads, so every per-file broadcast map (partition values, row ids,
+    deletion vectors) joins on the raw column — no per-row decoding.
+    When no map joins on it (no DV, no row ids, at most one partition
+    tuple) the files are returned keyed by their log path instead.
+
+    Each key is computed once per file with Spark's own path handling:
+    the read path qualified by its file system (as the reader's file
+    listing does), then FileFormat's ``FILE_PATH`` conversion
+    ``new Path(p.toString).toUri.toString``. ``df.inputFiles()`` lists
+    the same qualified paths as URIs; a file missing from it raises,
+    because its rows would otherwise join against no map row (passing
+    deletion-vector rows through, or dropping the file from the inner
+    partition-value join)."""
+    if not (
+        with_row_ids
+        or any(f.dv is not None for f in files)
+        or len(_partition_tuples(snapshot, files)) > 1
+    ):
+        return {f.path: f for f in files}
+    spark = df.sparkSession
+    path_cls = spark._jvm.org.apache.hadoop.fs.Path
+    table_path = snapshot.table_path
+    fs = path_cls(table_path).getFileSystem(spark._jsc.hadoopConfiguration())
+    listed = set(df.inputFiles())
+    keyed = {}
+    for f in files:
+        qualified = fs.makeQualified(path_cls(os.path.join(table_path, f.path)))
+        if qualified.toUri().toString() not in listed:
+            raise ValueError(
+                f"{f.path}: qualified as {qualified.toString()}, which is "
+                "not among the files Spark listed for the scan"
+            )
+        keyed[path_cls(qualified.toString()).toUri().toString()] = f
+    return keyed
+
+
+def _partition_tuples(snapshot: Snapshot, files) -> set:
+    return {
+        tuple(f.partition_values.get(p) for p in snapshot.partition_columns)
+        for f in files
+    }
 
 
 def _inject_partition_values(
     spark,
     snapshot: Snapshot,
-    files: list[AddFile],
+    keyed: dict,
     df: DataFrame,
     phys_full: StructType,
 ) -> DataFrame:
     """Attach partition values (S3) via a broadcast (file → values)
     join instead of per-partition-tuple literal branches: one row per
-    surviving file, so plan size is O(1) in partition count."""
+    surviving file (``keyed``: :func:`keyed_by_file_path`), so plan
+    size is O(1) in partition count."""
     from pyspark.sql.types import StringType, StructField
 
     logical = snapshot.schema
@@ -190,7 +227,7 @@ def _inject_partition_values(
         phys_names.append(phys_full.fields[li].name)
     # Single surviving tuple (the common case after partition pruning):
     # plain typed literals, no join at all.
-    tuples = {tuple(f.partition_values.get(p) for p in part_cols) for f in files}
+    tuples = _partition_tuples(snapshot, keyed.values())
     if len(tuples) == 1:
         (vals,) = tuples
         for p, phys_name, raw in zip(part_cols, phys_names, vals):
@@ -199,11 +236,8 @@ def _inject_partition_values(
             df = df.withColumn(phys_name, F.lit(raw).cast(dtype))
         return df
     rows = [
-        (
-            os.path.join(snapshot.table_path, f.path),
-            *[f.partition_values.get(p) for p in part_cols],
-        )
-        for f in files
+        (key, *[f.partition_values.get(p) for p in part_cols])
+        for key, f in keyed.items()
     ]
     meta_schema = StructType(
         [StructField("__pv_path", StringType())]
@@ -213,7 +247,7 @@ def _inject_partition_values(
 
     meta = local_rows_df(spark, rows, meta_schema)
     df = df.join(
-        F.broadcast(meta), _file_path_key() == F.col("__pv_path"), "inner"
+        F.broadcast(meta), F.col("__file_path") == F.col("__pv_path"), "inner"
     ).drop("__pv_path")
     for p, phys_name in zip(part_cols, phys_names):
         li = logical.fieldNames().index(p)
@@ -291,16 +325,22 @@ def estimate_log_actions(table_path: str, spark=None) -> int:
         strip_scheme,
     )
 
+    from py4j.protocol import Py4JJavaError
+
+    # An unreadable or torn _last_checkpoint is only a hint (the
+    # protocol lets readers ignore it): OSError / Hadoop I/O from the
+    # read, ValueError from its JSON/UTF-8 decoding.
     try:
         cp = read_last_checkpoint(table_path, spark)
-    except Exception:
+    except (OSError, ValueError, Py4JJavaError):
         cp = None
     cp_version = cp.get("version", -1) if cp else -1
     est = cp.get("size", 0) if cp else 0
     try:
-        fs = fs_for(table_path, spark)
-        listing = fs.list(_log_dir(strip_scheme(table_path)))
-    except Exception:
+        listing = fs_for(table_path, spark).list(
+            _log_dir(strip_scheme(table_path))
+        )
+    except OSError:
         return est
     tail_bytes = 0
     for st in listing:
@@ -395,26 +435,25 @@ def scan_spark_planned(
 
 
 def _inject_row_ids(
-    spark, snapshot: Snapshot, files, df: DataFrame,
+    spark, keyed: dict, df: DataFrame,
     mat_col: str | None = None, ver_col: str | None = None,
+    id_col: str | None = "_row_id",
+    ver_out: str | None = "_row_commit_version",
 ) -> DataFrame:
-    """Row tracking read side: ``_row_id = coalesce(materialized,
-    baseRowId + row_index)`` and ``_row_commit_version =
-    coalesce(materialized, defaultRowCommitVersion)`` (Delta
-    rowTracking feature — the materialized columns are how both
-    survive file rewrites such as OPTIMIZE). Files without either
-    yield nulls. Broadcast map, same key discipline as partition
-    injection."""
+    """Row tracking read side: ``id_col = coalesce(materialized,
+    baseRowId + row_index)`` and ``ver_out = coalesce(materialized,
+    defaultRowCommitVersion)`` (Delta rowTracking feature — the
+    materialized columns are how both survive file rewrites such as
+    OPTIMIZE); a ``None`` output name is not computed. Files without
+    either yield nulls. The materialized columns are dropped unless
+    written back in place. Broadcast map keyed like partition
+    injection (``keyed``: :func:`keyed_by_file_path`)."""
     from pyspark.sql.types import LongType, StringType, StructField
     from pyspark.sql.types import StructType as _ST
 
     rows = [
-        (
-            os.path.join(snapshot.table_path, f.path),
-            f.base_row_id,
-            f.default_row_commit_version,
-        )
-        for f in files
+        (key, f.base_row_id, f.default_row_commit_version)
+        for key, f in keyed.items()
     ]
     from deltalake_datafusion_spark.delta.smalldf import local_rows_df
 
@@ -426,23 +465,21 @@ def _inject_row_ids(
              StructField("__rid_dcv", LongType())]),
     )
     df = df.join(
-        F.broadcast(meta), _file_path_key() == F.col("__rid_path"), "left"
+        F.broadcast(meta), F.col("__file_path") == F.col("__rid_path"), "left"
     ).drop("__rid_path")
-    fresh = F.col("__rid_base") + F.col("__row_index")
-    rid = (
-        F.coalesce(F.col(f"`{mat_col}`"), fresh) if mat_col else fresh
-    )
-    rcv = (
-        F.coalesce(F.col(f"`{ver_col}`"), F.col("__rid_dcv"))
-        if ver_col else F.col("__rid_dcv")
-    )
-    df = (
-        df.withColumn("_row_id", rid)
-        .withColumn("_row_commit_version", rcv)
-        .drop("__rid_base", "__rid_dcv")
-    )
+    if id_col:
+        fresh = F.col("__rid_base") + F.col("__row_index")
+        df = df.withColumn(
+            id_col, F.coalesce(F.col(f"`{mat_col}`"), fresh) if mat_col else fresh
+        )
+    if ver_out:
+        dcv = F.col("__rid_dcv")
+        df = df.withColumn(
+            ver_out, F.coalesce(F.col(f"`{ver_col}`"), dcv) if ver_col else dcv
+        )
+    df = df.drop("__rid_base", "__rid_dcv")
     for c in (mat_col, ver_col):
-        if c:
+        if c and c not in (id_col, ver_out):
             df = df.drop(c)
     return df
 
@@ -527,17 +564,18 @@ def scan(
             spark, snapshot, subset, read_schema,
             row_index=with_dv or with_row_ids, file_path=need_fp,
         )
-        if part_cols:
-            df = _inject_partition_values(spark, snapshot, subset, df, phys_full)
-        if with_row_ids:
-            df = _inject_row_ids(
-                spark, snapshot, subset, df, mat_col, ver_col
-            )
+        keyed = keyed_by_file_path(df, snapshot, subset, with_row_ids)
         if with_dv:
-            df = _apply_dv_filter(spark, snapshot, subset, df)
-        else:
-            df = df.drop("__file_path", "__row_index")
-        branches.append(df)
+            from deltalake_datafusion_spark.delta.deletion_vectors import (
+                dv_row_filter,
+            )
+
+            df = dv_row_filter(spark, snapshot, keyed, df)
+        if part_cols:
+            df = _inject_partition_values(spark, snapshot, keyed, df, phys_full)
+        if with_row_ids:
+            df = _inject_row_ids(spark, keyed, df, mat_col, ver_col)
+        branches.append(df.drop("__file_path", "__row_index"))
 
     out = branches[0]
     for b in branches[1:]:
@@ -549,12 +587,6 @@ def scan(
         ),
     )
     return _finish(out, predicate, columns, limit)
-
-
-def _apply_dv_filter(spark, snapshot, group, df: DataFrame) -> DataFrame:
-    from deltalake_datafusion_spark.delta.deletion_vectors import dv_row_filter
-
-    return dv_row_filter(spark, snapshot, group, df)
 
 
 def _finish(df, predicate, columns, limit):

@@ -22,7 +22,6 @@ field metadata, exercising the dual logical/physical schema machinery
 
 from __future__ import annotations
 
-import datetime as dt
 import json
 import os
 import time
@@ -67,23 +66,6 @@ class TxnPartialOverlapError(ConcurrentWriteError):
 
 def _commit_path(table_path: str, version: int) -> str:
     return os.path.join(table_path, "_delta_log", f"{version:020d}.json")
-
-
-def serialize_partition_value(v) -> str | None:
-    """Delta partition-value serialization (spec: PROTOCOL.md
-    'Partition Value Serialization')."""
-    if v is None:
-        return None
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    if isinstance(v, dt.datetime):
-        s = v.strftime("%Y-%m-%d %H:%M:%S")
-        if v.microsecond:
-            s += f".{v.microsecond:06d}"
-        return s
-    if isinstance(v, dt.date):
-        return v.isoformat()
-    return str(v)
 
 
 # ------------------------------------------------------------------ #

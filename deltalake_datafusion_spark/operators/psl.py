@@ -101,18 +101,6 @@ def parse_psl(
     return rules, kmax
 
 
-def psl_rules_df(
-    spark, path: str = PSL_PATH, include_private: bool = True
-) -> DataFrame:
-    """The parsed rule table as a (broadcastable) DataFrame."""
-    rules, _ = parse_psl(path, include_private)
-    return spark.createDataFrame(
-        list(rules),
-        "key string, klab int, has_norm boolean, "
-        "has_wild boolean, has_exc boolean",
-    )
-
-
 def with_registered_domain(
     df: DataFrame,
     url_col: str | None = None,
@@ -142,12 +130,12 @@ def with_registered_domain(
 
     rules, kmax = parse_psl(path, include_private)
     spark = df.sparkSession
-    # ONE RDD slice (delta/smalldf.py): the plain createDataFrame
-    # parallelizes the rule list across defaultParallelism pickled
-    # slices, and each of the K per-label-count broadcast builds below
-    # then pays a 32-near-empty-Python-task job to re-read it
-    # (measured: five 32-task 2-3 s jobs per PSL-keyed query at
-    # local[32]).
+    # An Arrow LocalRelation (delta/smalldf.py): the plain
+    # createDataFrame parallelizes the rule list across
+    # defaultParallelism pickled slices, and each of the K
+    # per-label-count broadcast builds below then pays a
+    # 32-near-empty-Python-task job to re-read it (measured: five
+    # 32-task 2-3 s jobs per PSL-keyed query at local[32]).
     from deltalake_datafusion_spark.delta.smalldf import local_rows_df
 
     rules_df = local_rows_df(

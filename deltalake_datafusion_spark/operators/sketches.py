@@ -277,91 +277,6 @@ def cms_lookup(
 
 
 # ------------------------------------------------------------------ #
-# HDR-style log-scale histogram sketch                                #
-# ------------------------------------------------------------------ #
-
-HDR_SUBBITS = 2  # 4 sub-buckets per octave -> <= 12.5% relative error
-
-
-def hdr_bucket(c: str):
-    """Log-scale (HDR-histogram-style) bucket id for the non-negative
-    integer column named ``c``: values < 8 map to themselves (exact);
-    larger values map to (bitlen, top-2-mantissa-bits), i.e. 4
-    sub-buckets per power of two — the HdrHistogram/DDSketch idea of
-    bounded RELATIVE error, as a pure integer expression (bit length
-    via length(bin(x)), no floating log2 whose last ulp could differ
-    between engines). Returns (bucket, low) Columns where ``low`` is
-    the bucket's inclusive lower boundary in input units."""
-    blen = f"length(bin({c}))"
-    sub = f"(({c} >> ({blen} - 3)) & 3)"
-    bucket = F.expr(
-        f"CASE WHEN {c} < 8 THEN {c} ELSE {blen} * 4 + {sub} END"
-    ).cast("long")
-    low = F.expr(
-        f"CASE WHEN {c} < 8 THEN {c}"
-        f" ELSE (4 + {sub}) << ({blen} - 3) END"
-    ).cast("long")
-    return bucket, low
-
-
-def hdr_sketch(df: DataFrame, c: str) -> DataFrame:
-    """One-pass mergeable sketch: ``(bucket, low, n)``. Unlike the
-    equi-width ``histogram_quantiles`` (which needs a min/max
-    pre-pass), the log-scale bucket function is data-independent, so
-    a single partial-aggregated groupBy builds the sketch and two
-    sketches merge by adding counts — the streaming/mergeable
-    property that makes HDR the standard latency-percentile shape.
-    Shuffle is bounded at ~4·64 rows per task regardless of corpus
-    size."""
-    bucket, low = hdr_bucket(c)
-    return (
-        df.filter(F.col(c).isNotNull() & (F.col(c) >= 0))
-        .select(bucket.alias("bucket"), low.alias("low"))
-        .groupBy("bucket", "low")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-def hdr_quantiles(
-    sketch: DataFrame, percents: list[int]
-) -> DataFrame:
-    """Quantile estimates from an HDR sketch: for each percent p the
-    LOWER BOUNDARY of the first bucket whose cumulative count reaches
-    ``ceil(p·N/100)`` (integer ceiling division — exact cross-engine).
-    Returns ``(p, bucket, est_low, n_le)``. The cumulative window
-    runs over the aggregated sketch (≤ a few hundred rows), never
-    the data."""
-    from pyspark.sql import Window
-
-    w = Window.orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    cum = sketch.withColumn("cum", F.sum("n").over(w))
-    total = sketch.agg(F.sum("n").alias("total"))
-    ps = total.select(
-        F.explode(
-            F.array(*[F.lit(p) for p in percents])
-        ).alias("p"),
-        "total",
-    ).withColumn("thr", F.expr("-((-p * total) div 100)"))
-    hit = (
-        ps.join(cum, F.col("cum") >= F.col("thr"))
-        .groupBy("p")
-        .agg(F.min("bucket").alias("bucket"))
-    )
-    return (
-        hit.join(cum, "bucket")
-        .select(
-            F.col("p").cast("long").alias("p"),
-            "bucket",
-            F.col("low").alias("est_low"),
-            F.col("cum").cast("long").alias("n_le"),
-        )
-        .orderBy("p")
-    )
-
-
-# ------------------------------------------------------------------ #
 # KMV (k-minimum-values) distinct sketch                              #
 # ------------------------------------------------------------------ #
 

@@ -2152,46 +2152,48 @@ def streaming_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         scoped_state_partitions,
     )
 
-    with scoped_state_partitions(spark):
-        q = (
-            counts.writeStream.format("memory")
-            .queryName("q_streaming_late_drop")
-            .outputMode("append")
-            .trigger(processingTime="25 milliseconds")
-            .start()
-        )
     import time as _time
 
     # Drain detection from the driver-side progress feed (sink
-    # numOutputRows per batch, append mode ⇒ cumulative sum) — the
-    # old spark.table().count() poll ran ~3 Spark jobs per probe
-    # while the stream was still working through its micro-batches.
-    # recentProgress is a RING BUFFER (default 100 entries); with the
-    # 25 ms trigger early batches are evicted before the drain
-    # completes, so keep a running total across polls keyed on
-    # batchId instead of re-summing the buffer (ADVICE r12).
-    deadline = _time.time() + 240
-    probe = 0
-    emitted = 0
-    last_batch = -1
-    while _time.time() < deadline:
-        for p in q.recentProgress or []:
-            bid = int(p.get("batchId", -1))
-            if bid > last_batch:
-                emitted += max(
-                    0,
-                    int((p.get("sink") or {}).get("numOutputRows") or 0),
-                )
-                last_batch = bid
-        if emitted >= 6:
-            break
-        probe += 1
-        if probe % 40 == 0:  # safety net if the sink reports -1
-            if spark.table("q_streaming_late_drop").count() >= 6:
+    # numOutputRows per batch, append mode ⇒ cumulative sum) — a
+    # spark.table().count() poll runs ~3 Spark jobs per probe while
+    # the stream is still working through its micro-batches.
+    # recentProgress is a ring buffer whose size the query reads from
+    # this session's conf on every batch; at the default 100 entries a
+    # 25 ms trigger can evict batches between polls, so while the
+    # query runs it retains one entry per trigger the drain deadline
+    # allows, and the buffer is summed whole.
+    drain_s, trigger_ms = 240, 25
+    retention = "spark.sql.streaming.numRecentProgressUpdates"
+    old_retention = spark.conf.get(retention)
+    spark.conf.set(retention, str(drain_s * 1000 // trigger_ms))
+    try:
+        with scoped_state_partitions(spark):
+            q = (
+                counts.writeStream.format("memory")
+                .queryName("q_streaming_late_drop")
+                .outputMode("append")
+                .trigger(processingTime=f"{trigger_ms} milliseconds")
+                .start()
+            )
+        deadline = _time.time() + drain_s
+        probe = 0
+        while _time.time() < deadline:
+            emitted = sum(
+                max(0, int((p.get("sink") or {}).get("numOutputRows") or 0))
+                for p in q.recentProgress or []
+            )
+            if emitted >= 6:
                 break
-        _time.sleep(0.05)
-    q.stop()
-    q.awaitTermination(60)
+            probe += 1
+            if probe % 40 == 0:  # safety net if the sink reports -1
+                if spark.table("q_streaming_late_drop").count() >= 6:
+                    break
+            _time.sleep(0.05)
+        q.stop()
+        q.awaitTermination(60)
+    finally:
+        spark.conf.set(retention, old_retention)
     return spark.table("q_streaming_late_drop").orderBy("day")
 
 

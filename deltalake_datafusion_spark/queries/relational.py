@@ -802,7 +802,7 @@ def q_values_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("4-NOT SPECIFIED", 2),
             ("5-LOW", 1),
         ],
-        ["o_orderpriority", "wt"],
+        "o_orderpriority string, wt long",
     )
     return (
         t["orders"]

@@ -596,15 +596,22 @@ def test_replay_100k_actions_is_linear(spark, tmp_path):
     assert spark_paths == {f.path for f in snap.files}
 
 
+# Hive-escaped partition directories: space, '#', '%', '+', '=',
+# unicode, null.
+SPECIAL_PARTITION_VALUES = [
+    "plain", "with space", "a#b", "p%ct", "a+b", "k=v", "naïve-ü", None,
+]
+
+
 def test_partition_injection_join_handles_special_values(spark, tmp_path):
-    """The broadcast file->values join keys on a URL-decoded
-    _metadata.file_path; hive-escaped partition directories (space,
-    '#', '%', '+', '=', unicode) and null partitions must all round-
-    trip exactly through the multi-tuple join path."""
+    """The broadcast file->values join keys on Spark's raw
+    _metadata.file_path; hive-escaped partition directories and null
+    partitions must all round-trip exactly through the multi-tuple
+    join path."""
     from deltalake_datafusion_spark.delta.scan import read_delta
     from deltalake_datafusion_spark.delta.writer import write_delta
 
-    vals = ["plain", "with space", "a#b", "p%ct", "a+b", "k=v", "naïve-ü", None]
+    vals = SPECIAL_PARTITION_VALUES
     rows = [(i, v) for i, v in enumerate(vals) for _ in range(3)]
     df = spark.createDataFrame(rows, "id long, p string")
     path = str(tmp_path / "t")
@@ -623,3 +630,91 @@ def test_partition_injection_join_handles_special_values(spark, tmp_path):
     assert out.filter("p = 'with space'").count() == 3
     assert out.filter("p IS NULL").count() == 3
     assert out.filter("p = 'naïve-ü'").count() == 3
+
+
+@pytest.mark.parametrize("dv_filter", ["anti_join", "udf"])
+def test_file_path_keys_under_special_directory(
+    spark, tmp_path, monkeypatch, dv_filter
+):
+    """Every per-file broadcast map — partition values, row ids,
+    deletion vectors — keys on Spark's raw ``_metadata.file_path``.
+    A row-tracking table under a directory named with a space, '%',
+    '+', '#' and 'é', partitioned by hive-escaped values, must read,
+    DELETE, UPDATE, MERGE and OPTIMIZE to the rows computed here, and
+    keep every surviving row's id. ``udf`` lowers the anti-join bound
+    to 0 so the range-triage + roaring-blob fallback is keyed too."""
+    from deltalake_datafusion_spark.delta import deletion_vectors
+    from deltalake_datafusion_spark.delta.ops import (
+        merge_delta,
+        optimize_delta,
+        update_delta,
+    )
+
+    if dv_filter == "udf":
+        monkeypatch.setattr(deletion_vectors, "DV_ANTI_JOIN_MAX_ROWS", 0)
+    vals = SPECIAL_PARTITION_VALUES
+    path = str(tmp_path / "dir a%25b+c#d é" / "t")
+    expected = {i: (vals[i % len(vals)], 10 * i) for i in range(48)}
+    write_delta(
+        spark,
+        spark.createDataFrame(
+            [(i, p, v) for i, (p, v) in expected.items()],
+            "id long, p string, v long",
+        ).repartition(2),
+        path,
+        partition_by=["p"],
+        configuration={"delta.enableRowTracking": "true"},
+    )
+
+    def check(prior_ids):
+        rows = read_delta(spark, path, with_row_ids=True).collect()
+        assert sorted((r["id"], r["p"], r["v"]) for r in rows) == sorted(
+            (i, p, v) for i, (p, v) in expected.items()
+        )
+        ids = {r["id"]: r["_row_id"] for r in rows}
+        assert len(set(ids.values())) == len(ids)
+        assert all(ids[i] == rid for i, rid in prior_ids.items() if i in ids)
+        return ids
+
+    ids = check({})
+    delete_delta(spark, path, "id % 5 = 1")
+    expected = {i: pv for i, pv in expected.items() if i % 5 != 1}
+    assert any(f.dv for f in load_snapshot(path, spark=spark).files)
+    ids = check(ids)
+
+    update_delta(spark, path, {"v": "v + 1"}, "id % 3 = 0")
+    expected = {
+        i: (p, v + 1 if i % 3 == 0 else v) for i, (p, v) in expected.items()
+    }
+    ids = check(ids)
+
+    source = [(i, vals[i % len(vals)], -i) for i in range(40, 56)]
+    merge_delta(
+        spark, path,
+        spark.createDataFrame(source, "id long, p string, v long"),
+        on="t.id = s.id",
+        when_matched_update={"v": "s.v"},
+        when_not_matched_insert=True,
+    )
+    expected.update({i: (p, v) for i, p, v in source})
+    ids = check(ids)
+
+    optimize_delta(spark, path, small_file_threshold=1 << 30)
+    assert not any(f.dv for f in load_snapshot(path, spark=spark).files)
+    check(ids)
+
+
+def test_file_path_keys_raise_for_unlisted_file(spark, tmp_path):
+    """A file the scan did not list has no ``_metadata.file_path`` key:
+    building the per-file maps raises instead of letting its rows join
+    against no map row (a DV file's deleted rows would pass through)."""
+    from deltalake_datafusion_spark.delta.scan import keyed_by_file_path
+
+    path = str(tmp_path / "t")
+    write_delta(spark, spark.range(10).repartition(2), path)
+    snap = load_snapshot(path, spark=spark)
+    assert len(snap.files) == 2
+    one = spark.read.parquet(os.path.join(path, snap.files[0].path))
+    assert len(keyed_by_file_path(one, snap, snap.files[:1], True)) == 1
+    with pytest.raises(ValueError, match="not among the files Spark listed"):
+        keyed_by_file_path(one, snap, snap.files, True)

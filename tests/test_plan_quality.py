@@ -385,31 +385,52 @@ def test_dv_access_plan_triage():
     assert mn == 100 and mx == -1 and len(interior) == 0
 
 
-def test_dv_contiguous_delete_scan_has_no_python(spark, tmp_path):
-    """A prefix DELETE's scan must be pure JVM codegen: the deleted
-    span is dropped by the broadcast range filter, no ArrowEvalPython
-    in the plan. An interior delete keeps the exact bitmap UDF."""
+def _dv_table(spark, path):
+    """1000 rows in one file, then a 90 % contiguous-prefix DELETE
+    and one interior hole: a DV with a prefix run and an interior
+    deletion."""
     from deltalake_datafusion_spark.delta.ops import delete_delta
-    from deltalake_datafusion_spark.delta.scan import read_delta
     from deltalake_datafusion_spark.delta.writer import write_delta
 
-    path = str(tmp_path / "t")
     write_delta(
         spark,
         spark.range(1000).select("id", (F.col("id") * 2).alias("v")),
         path,
     )
-    delete_delta(spark, path, "id < 900")  # 90%-deleted contiguous prefix
+    delete_delta(spark, path, "id < 900")
+    delete_delta(spark, path, "id = 950")
+    return [i for i in range(900, 1000) if i != 950]
+
+
+def test_dv_contiguous_delete_scan_has_no_python(spark, tmp_path):
+    """Below ``DV_ANTI_JOIN_MAX_ROWS`` deleted rows a DV scan is pure
+    JVM codegen — contiguous prefix and interior hole alike go through
+    one broadcast left-anti join on (file_path, row_index): no
+    ArrowEvalPython in the plan, and no range join beside it."""
+    from deltalake_datafusion_spark.delta.scan import read_delta
+
+    path = str(tmp_path / "t")
+    expected = _dv_table(spark, path)
     df = read_delta(spark, path)
     plan = _plan(df)
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    assert sorted(r["id"] for r in df.collect()) == list(range(900, 1000))
+    assert "LeftAnti" in plan and plan.count("BroadcastHashJoin") == 1
+    assert sorted(r["id"] for r in df.collect()) == expected
 
-    delete_delta(spark, path, "id = 950")  # interior hole → exact test
-    df2 = read_delta(spark, path)
-    assert "ArrowEvalPython" in _plan(df2)
-    got = sorted(r["id"] for r in df2.collect())
-    assert got == [i for i in range(900, 1000) if i != 950]
+
+def test_dv_above_bound_uses_range_triage_and_udf(spark, tmp_path, monkeypatch):
+    """Above the bound (lowered to 0 here) the same table reads the
+    same rows through the range filter + roaring-blob UDF fallback."""
+    from deltalake_datafusion_spark.delta import deletion_vectors
+    from deltalake_datafusion_spark.delta.scan import read_delta
+
+    path = str(tmp_path / "t")
+    expected = _dv_table(spark, path)
+    monkeypatch.setattr(deletion_vectors, "DV_ANTI_JOIN_MAX_ROWS", 0)
+    df = read_delta(spark, path)
+    plan = _plan(df)
+    assert "ArrowEvalPython" in plan and "LeftAnti" not in plan
+    assert sorted(r["id"] for r in df.collect()) == expected
 
 
 def test_dv_broadcast_is_compressed_blobs(spark, tmp_path):

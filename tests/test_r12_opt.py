@@ -11,8 +11,8 @@ Pins the behavior-preserving contracts of the optimization round:
   streaming start and restores the session value.
 - ``operators/partitioning.spread`` widens a narrow scan and is a
   no-op on an already-wide plan.
-- ``delta/smalldf.local_rows_df`` ships tiny metadata lists as ONE
-  slice with identical contents.
+- ``delta/smalldf.local_rows_df`` ships tiny metadata lists as an
+  Arrow ``LocalRelation`` (no Python RDD) with identical contents.
 """
 
 from __future__ import annotations
@@ -93,12 +93,13 @@ def test_spread_widens_narrow_and_keeps_wide(spark):
     assert spread(already) is already  # strict no-op
 
 
-def test_local_rows_df_single_slice(spark):
+def test_local_rows_df_is_local_relation(spark):
     from deltalake_datafusion_spark.delta.smalldf import local_rows_df
 
     rows = [("a", 1), ("b", None), ("c", 3)]
     df = local_rows_df(spark, rows, "name string, v long")
-    assert df.rdd.getNumPartitions() == 1
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.startswith("LocalRelation"), plan
     got = sorted((r["name"], r["v"]) for r in df.collect())
     assert got == sorted(rows)
     empty = local_rows_df(spark, [], "name string, v long")
