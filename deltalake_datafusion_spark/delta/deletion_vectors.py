@@ -343,13 +343,13 @@ def _dv_access_plan(deleted, num_records):
 DV_ANTI_JOIN_MAX_ROWS = 100_000
 
 
-def dv_row_filter(spark, snapshot, keyed, df):
+def dv_row_filter(spark, snapshot, keys, df):
     """Filter deleted rows out of a DataFrame read with
     ``__row_index`` / ``__file_path`` metadata columns attached (kept
-    in the result).
-    ``keyed`` maps each file's ``_metadata.file_path`` string to its
-    AddFile (:func:`~deltalake_datafusion_spark.delta.scan.keyed_by_file_path`);
-    files without a DV pass through intact.
+    in the result). ``keys`` is the read's
+    :class:`~deltalake_datafusion_spark.delta.scan.FileKeys`; files
+    without a DV pass through intact, and when no file has one the
+    frame is returned as is.
 
     - At most :data:`DV_ANTI_JOIN_MAX_ROWS` deleted rows in total: one
       broadcast ``left_anti`` join against the decoded (file_path,
@@ -376,36 +376,36 @@ def dv_row_filter(spark, snapshot, keyed, df):
     from deltalake_datafusion_spark.delta.fs import fs_for
     from deltalake_datafusion_spark.delta.stats import parse_stats
 
+    if all(f.dv is None for f in keys.files):
+        return df
     fs = fs_for(snapshot.table_path, spark)
     deleted = {
         key: read_dv(snapshot.table_path, f.dv, fs)
-        for key, f in keyed.items() if f.dv is not None
+        for key, f in keys.keyed.items() if f.dv is not None
     }
     ri = F.col("__row_index")
     if sum(len(d) for d in deleted.values()) <= DV_ANTI_JOIN_MAX_ROWS:
-        if deleted:
-            keys = list(deleted)
-            counts = [len(deleted[k]) for k in keys]
-            gone = spark.createDataFrame(pa.table({
-                "__dv_path": pa.array(keys, pa.string()).take(
-                    np.repeat(np.arange(len(keys)), counts)
-                ),
-                "__dv_row": np.concatenate(
-                    [deleted[k] for k in keys]
-                ).astype(np.int64),
-            }))
-            df = df.join(
-                F.broadcast(gone),
-                (F.col("__file_path") == gone["__dv_path"])
-                & (ri == gone["__dv_row"]),
-                "left_anti",
-            )
-        return df
+        paths = list(deleted)
+        counts = [len(deleted[k]) for k in paths]
+        gone = spark.createDataFrame(pa.table({
+            "__dv_path": pa.array(paths, pa.string()).take(
+                np.repeat(np.arange(len(paths)), counts)
+            ),
+            "__dv_row": np.concatenate(
+                [deleted[k] for k in paths]
+            ).astype(np.int64),
+        }))
+        return df.join(
+            F.broadcast(gone),
+            (F.col("__file_path") == gone["__dv_path"])
+            & (ri == gone["__dv_row"]),
+            "left_anti",
+        )
 
     meta_rows = []
     interior_blobs: dict[str, bytes] = {}
     for key, rows in deleted.items():
-        stats = parse_stats(keyed[key].stats)
+        stats = parse_stats(keys.keyed[key].stats)
         nrec = stats.get("numRecords") if stats else None
         min_live, max_live, interior = _dv_access_plan(rows, nrec)
         meta_rows.append((key, min_live, max_live))

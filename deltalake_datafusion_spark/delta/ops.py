@@ -2494,8 +2494,8 @@ def _optimize_attempt(
                 dv_row_filter,
             )
             from deltalake_datafusion_spark.delta.scan import (
+                FileKeys,
                 _inject_row_ids,
-                keyed_by_file_path,
             )
 
             df = df.select(
@@ -2503,13 +2503,13 @@ def _optimize_attempt(
                 F.col("_metadata.row_index").alias("__row_index"),
                 F.col("_metadata.file_path").alias("__file_path"),
             )
-            keyed = keyed_by_file_path(df, snap, group, bool(rt_cols))
+            keys = FileKeys(df, snap.table_path, group)
             # Materialize deletion vectors during the rewrite — never
             # resurrect deleted rows; the compacted files carry no DV.
-            df = dv_row_filter(spark, snap, keyed, df)
+            df = dv_row_filter(spark, snap, keys, df)
             if rt_cols:
                 df = _inject_row_ids(
-                    spark, keyed, df, rt_mat, rt_ver,
+                    spark, keys, df, rt_mat, rt_ver,
                     id_col=rt_mat, ver_out=rt_ver,
                 )
             df = df.drop("__row_index", "__file_path")
@@ -2793,9 +2793,9 @@ def _scan_with_rowmeta(
         dv_row_filter,
     )
     from deltalake_datafusion_spark.delta.scan import (
+        FileKeys,
         _inject_partition_values,
         _inject_row_ids,
-        keyed_by_file_path,
     )
 
     paths = [os.path.join(snap.table_path, f.path) for f in candidates]
@@ -2808,16 +2808,16 @@ def _scan_with_rowmeta(
             F.col("_metadata.file_path").alias("__file_path"),
         )
     )
-    keyed = keyed_by_file_path(out, snap, candidates, bool(mat_cols))
+    keys = FileKeys(out, snap.table_path, candidates)
     if part_cols:
-        out = _inject_partition_values(spark, snap, keyed, out, phys_full)
+        out = _inject_partition_values(spark, snap, keys, out, phys_full)
     out = apply_schema(out, logical, extra_cols=meta_cols)
     # Apply deletion vectors — DML must never see (or resurrect) rows
     # already deleted in place; files without a DV pass through intact.
-    out = dv_row_filter(spark, snap, keyed, out)
+    out = dv_row_filter(spark, snap, keys, out)
     if mat_cols:
         out = _inject_row_ids(
-            spark, keyed, out, row_id_col, row_ver_col,
+            spark, keys, out, row_id_col, row_ver_col,
             id_col="__old_row_id" if row_id_col else None,
             ver_out="__old_row_commit" if row_ver_col else None,
         )

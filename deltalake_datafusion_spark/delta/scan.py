@@ -35,7 +35,9 @@ Scale design:
 
 from __future__ import annotations
 
+import functools
 import os
+import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -159,64 +161,97 @@ def _read_files(
     return df
 
 
-def keyed_by_file_path(
-    df: DataFrame, snapshot: Snapshot, files, with_row_ids: bool
-) -> dict:
-    """``{_metadata.file_path string: AddFile}`` for the files ``df``
-    reads, so every per-file broadcast map (partition values, row ids,
-    deletion vectors) joins on the raw column — no per-row decoding.
-    When no map joins on it (no DV, no row ids, at most one partition
-    tuple) the files are returned keyed by their log path instead.
+class FileKeys:
+    """The files one ``spark.read`` lists, and — computed once, on
+    first use — their ``{_metadata.file_path string: AddFile}`` map,
+    the key every per-file broadcast map (partition values, row ids,
+    deletion vectors) joins on, so no row decodes its path. Each map
+    builder decides from ``files`` whether it joins at all.
 
-    Each key is computed once per file with Spark's own path handling:
-    the read path qualified by its file system (as the reader's file
-    listing does), then FileFormat's ``FILE_PATH`` conversion
-    ``new Path(p.toString).toUri.toString``. ``df.inputFiles()`` lists
-    the same qualified paths as URIs; a file missing from it raises,
-    because its rows would otherwise join against no map row (passing
+    The keys are Spark's own: the reader's listing (``inputFiles()``,
+    each path qualified by its file system) read back as Hadoop path
+    strings, then FileFormat's ``FILE_PATH`` conversion
+    ``new Path(p).toUri.toString`` (``SparkPath.fromPathString``)
+    evaluated for every file in ONE driver-side LocalRelation
+    projection (no Spark job). The py4j round trips per scan do not
+    grow with the file count. A file the reader did not list raises,
+    because its rows would join against no map row (passing
     deletion-vector rows through, or dropping the file from the inner
     partition-value join)."""
-    if not (
-        with_row_ids
-        or any(f.dv is not None for f in files)
-        or len(_partition_tuples(snapshot, files)) > 1
-    ):
-        return {f.path: f for f in files}
-    spark = df.sparkSession
-    path_cls = spark._jvm.org.apache.hadoop.fs.Path
-    table_path = snapshot.table_path
-    fs = path_cls(table_path).getFileSystem(spark._jsc.hadoopConfiguration())
-    listed = set(df.inputFiles())
-    keyed = {}
-    for f in files:
-        qualified = fs.makeQualified(path_cls(os.path.join(table_path, f.path)))
-        if qualified.toUri().toString() not in listed:
-            raise ValueError(
-                f"{f.path}: qualified as {qualified.toString()}, which is "
-                "not among the files Spark listed for the scan"
+
+    def __init__(self, df: DataFrame, table_path: str, files):
+        self.df, self.table_path, self.files = df, table_path, list(files)
+
+    @functools.cached_property
+    def keyed(self) -> dict:
+        import urllib.parse as up
+
+        spark = self.df.sparkSession
+        # One round trip: iterating the returned Java array would make
+        # one per file.
+        listed = spark._jvm.org.apache.hadoop.util.StringUtils.join(
+            "\n", self.df._jdf.inputFiles()
+        )
+        hadoop_path = {}
+        for u in listed.split("\n") if listed else ():
+            parts = up.urlsplit(u)
+            path = up.unquote(parts.path)
+            authority = f"//{parts.netloc}" if parts.netloc else ""
+            hadoop_path[os.path.normpath(path)] = (
+                f"{parts.scheme}:{authority}{path}"
             )
-        keyed[path_cls(qualified.toString()).toUri().toString()] = f
-    return keyed
+        ordered = []
+        for f in self.files:
+            raw = os.path.join(self.table_path, f.path)
+            m = _SCHEME_AUTHORITY.match(raw)
+            disk = os.path.normpath(raw[m.end():] if m else os.path.abspath(raw))
+            if disk not in hadoop_path:
+                raise ValueError(
+                    f"{f.path}: {disk} is not among the files Spark listed "
+                    "for the scan"
+                )
+            ordered.append(hadoop_path[disk])
+        return dict(zip(_spark_file_paths(spark, ordered), self.files))
 
 
-def _partition_tuples(snapshot: Snapshot, files) -> set:
-    return {
-        tuple(f.partition_values.get(p) for p in snapshot.partition_columns)
-        for f in files
-    }
+_SCHEME_AUTHORITY = re.compile(r"[A-Za-z][A-Za-z0-9+.-]*:(//[^/]*)?")
+
+# Hadoop path string → _metadata.file_path. The conversion is a pure
+# function, so repeated scans of the same files skip its query; the
+# memo is dropped whole once it would outgrow _FILE_PATHS_MAX entries.
+_FILE_PATHS: dict[str, str] = {}
+_FILE_PATHS_MAX = 1 << 16
+
+
+def _spark_file_paths(spark, hadoop_paths: list[str]) -> list[str]:
+    todo = [p for p in dict.fromkeys(hadoop_paths) if p not in _FILE_PATHS]
+    if todo and len(_FILE_PATHS) + len(todo) > _FILE_PATHS_MAX:
+        _FILE_PATHS.clear()
+        todo = list(dict.fromkeys(hadoop_paths))
+    if todo:
+        import pyarrow as pa
+
+        rows = spark.createDataFrame(pa.table({"p": todo})).select(
+            F.expr(
+                "reflect('org.apache.spark.paths.SparkPath', "
+                "'fromPathString', p)"
+            )
+        ).collect()
+        _FILE_PATHS.update(zip(todo, (r[0] for r in rows)))
+    return [_FILE_PATHS[p] for p in hadoop_paths]
 
 
 def _inject_partition_values(
     spark,
     snapshot: Snapshot,
-    keyed: dict,
+    keys: FileKeys,
     df: DataFrame,
     phys_full: StructType,
 ) -> DataFrame:
     """Attach partition values (S3) via a broadcast (file → values)
     join instead of per-partition-tuple literal branches: one row per
-    surviving file (``keyed``: :func:`keyed_by_file_path`), so plan
-    size is O(1) in partition count."""
+    surviving file, keyed by :class:`FileKeys`, so plan size is O(1)
+    in partition count."""
     from pyspark.sql.types import StringType, StructField
 
     logical = snapshot.schema
@@ -227,7 +262,9 @@ def _inject_partition_values(
         phys_names.append(phys_full.fields[li].name)
     # Single surviving tuple (the common case after partition pruning):
     # plain typed literals, no join at all.
-    tuples = _partition_tuples(snapshot, keyed.values())
+    tuples = {
+        tuple(f.partition_values.get(p) for p in part_cols) for f in keys.files
+    }
     if len(tuples) == 1:
         (vals,) = tuples
         for p, phys_name, raw in zip(part_cols, phys_names, vals):
@@ -237,7 +274,7 @@ def _inject_partition_values(
         return df
     rows = [
         (key, *[f.partition_values.get(p) for p in part_cols])
-        for key, f in keyed.items()
+        for key, f in keys.keyed.items()
     ]
     meta_schema = StructType(
         [StructField("__pv_path", StringType())]
@@ -435,7 +472,7 @@ def scan_spark_planned(
 
 
 def _inject_row_ids(
-    spark, keyed: dict, df: DataFrame,
+    spark, keys: FileKeys, df: DataFrame,
     mat_col: str | None = None, ver_col: str | None = None,
     id_col: str | None = "_row_id",
     ver_out: str | None = "_row_commit_version",
@@ -447,13 +484,13 @@ def _inject_row_ids(
     OPTIMIZE); a ``None`` output name is not computed. Files without
     either yield nulls. The materialized columns are dropped unless
     written back in place. Broadcast map keyed like partition
-    injection (``keyed``: :func:`keyed_by_file_path`)."""
+    injection (:class:`FileKeys`)."""
     from pyspark.sql.types import LongType, StringType, StructField
     from pyspark.sql.types import StructType as _ST
 
     rows = [
         (key, f.base_row_id, f.default_row_commit_version)
-        for key, f in keyed.items()
+        for key, f in keys.keyed.items()
     ]
     from deltalake_datafusion_spark.delta.smalldf import local_rows_df
 
@@ -564,17 +601,17 @@ def scan(
             spark, snapshot, subset, read_schema,
             row_index=with_dv or with_row_ids, file_path=need_fp,
         )
-        keyed = keyed_by_file_path(df, snapshot, subset, with_row_ids)
+        keys = FileKeys(df, snapshot.table_path, subset)
         if with_dv:
             from deltalake_datafusion_spark.delta.deletion_vectors import (
                 dv_row_filter,
             )
 
-            df = dv_row_filter(spark, snapshot, keyed, df)
+            df = dv_row_filter(spark, snapshot, keys, df)
         if part_cols:
-            df = _inject_partition_values(spark, snapshot, keyed, df, phys_full)
+            df = _inject_partition_values(spark, snapshot, keys, df, phys_full)
         if with_row_ids:
-            df = _inject_row_ids(spark, keyed, df, mat_col, ver_col)
+            df = _inject_row_ids(spark, keys, df, mat_col, ver_col)
         branches.append(df.drop("__file_path", "__row_index"))
 
     out = branches[0]

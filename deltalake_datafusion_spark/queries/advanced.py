@@ -2154,34 +2154,50 @@ def streaming_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import time as _time
 
-    # Drain detection from the driver-side progress feed (sink
-    # numOutputRows per batch, append mode ⇒ cumulative sum) — a
-    # spark.table().count() poll runs ~3 Spark jobs per probe while
-    # the stream is still working through its micro-batches.
-    # recentProgress is a ring buffer whose size the query reads from
-    # this session's conf on every batch; at the default 100 entries a
-    # 25 ms trigger can evict batches between polls, so while the
-    # query runs it retains one entry per trigger the drain deadline
-    # allows, and the buffer is summed whole.
-    drain_s, trigger_ms = 240, 25
-    retention = "spark.sql.streaming.numRecentProgressUpdates"
-    old_retention = spark.conf.get(retention)
-    spark.conf.set(retention, str(drain_s * 1000 // trigger_ms))
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class _SinkRows(StreamingQueryListener):
+        """Sink numOutputRows per (query id, batchId) from the listener
+        bus: every batch is counted once, however many complete between
+        polls (the recentProgress ring buffer keeps only the last 100)."""
+
+        def __init__(self):
+            self.rows = {}
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            p = event.progress
+            self.rows[(str(p.id), p.batchId)] = max(0, p.sink.numOutputRows)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    # Drain detection from the driver-side progress events (append
+    # mode ⇒ sink rows add up) — a spark.table().count() poll runs ~3
+    # Spark jobs per probe while the stream is still working through
+    # its micro-batches.
+    sink_rows = _SinkRows()
+    spark.streams.addListener(sink_rows)
     try:
         with scoped_state_partitions(spark):
             q = (
                 counts.writeStream.format("memory")
                 .queryName("q_streaming_late_drop")
                 .outputMode("append")
-                .trigger(processingTime=f"{trigger_ms} milliseconds")
+                .trigger(processingTime="25 milliseconds")
                 .start()
             )
-        deadline = _time.time() + drain_s
+        deadline = _time.time() + 240
         probe = 0
         while _time.time() < deadline:
             emitted = sum(
-                max(0, int((p.get("sink") or {}).get("numOutputRows") or 0))
-                for p in q.recentProgress or []
+                n for (qid, _), n in list(sink_rows.rows.items())
+                if qid == q.id
             )
             if emitted >= 6:
                 break
@@ -2193,7 +2209,7 @@ def streaming_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.stop()
         q.awaitTermination(60)
     finally:
-        spark.conf.set(retention, old_retention)
+        spark.streams.removeListener(sink_rows)
     return spark.table("q_streaming_late_drop").orderBy("day")
 
 

@@ -708,13 +708,60 @@ def test_file_path_keys_raise_for_unlisted_file(spark, tmp_path):
     """A file the scan did not list has no ``_metadata.file_path`` key:
     building the per-file maps raises instead of letting its rows join
     against no map row (a DV file's deleted rows would pass through)."""
-    from deltalake_datafusion_spark.delta.scan import keyed_by_file_path
+    from deltalake_datafusion_spark.delta.scan import FileKeys
 
     path = str(tmp_path / "t")
     write_delta(spark, spark.range(10).repartition(2), path)
     snap = load_snapshot(path, spark=spark)
     assert len(snap.files) == 2
     one = spark.read.parquet(os.path.join(path, snap.files[0].path))
-    assert len(keyed_by_file_path(one, snap, snap.files[:1], True)) == 1
+    assert len(FileKeys(one, path, snap.files[:1]).keyed) == 1
     with pytest.raises(ValueError, match="not among the files Spark listed"):
-        keyed_by_file_path(one, snap, snap.files, True)
+        FileKeys(one, path, snap.files).keyed
+
+
+def test_file_path_keys_py4j_calls_do_not_grow_with_files(
+    spark, tmp_path, monkeypatch
+):
+    """Keying a read's files makes the same number of py4j round trips
+    for 2000 files as for 10 (a per-file JVM call would cost ~1 ms a
+    file on the driver before planning starts), and each key equals
+    the ``_metadata.file_path`` Spark reports."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from deltalake_datafusion_spark.delta import scan as scan_mod
+    from deltalake_datafusion_spark.delta.snapshot import AddFile
+
+    def table(name, n):
+        root = tmp_path / name
+        root.mkdir()
+        for i in range(n):
+            pq.write_table(pa.table({"id": [i]}), root / f"part {i}#.parquet")
+        files = [
+            AddFile(path=f"part {i}#.parquet", size=0, modification_time=0)
+            for i in range(n)
+        ]
+        return spark.read.parquet(str(root)), str(root), files
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = []
+
+    def counted(command, *args, **kwargs):
+        sent.append(command)
+        return send(command, *args, **kwargs)
+
+    def round_trips(df, root, files):
+        monkeypatch.setattr(scan_mod, "_FILE_PATHS", {})
+        sent.clear()
+        monkeypatch.setattr(client, "send_command", counted)
+        keyed = scan_mod.FileKeys(df, root, files).keyed
+        monkeypatch.setattr(client, "send_command", send)
+        assert sorted(keyed) == sorted(
+            r[0] for r in df.select("_metadata.file_path").collect()
+        )
+        return len(sent)
+
+    small, large = table("ten", 10), table("two thousand", 2000)
+    assert round_trips(*large) <= round_trips(*small)

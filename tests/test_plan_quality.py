@@ -385,10 +385,10 @@ def test_dv_access_plan_triage():
     assert mn == 100 and mx == -1 and len(interior) == 0
 
 
-def _dv_table(spark, path):
+def _dv_table(spark, path, hole: bool = True):
     """1000 rows in one file, then a 90 % contiguous-prefix DELETE
-    and one interior hole: a DV with a prefix run and an interior
-    deletion."""
+    and (``hole``) one interior hole: a DV with a prefix run and an
+    interior deletion. Returns the surviving ids."""
     from deltalake_datafusion_spark.delta.ops import delete_delta
     from deltalake_datafusion_spark.delta.writer import write_delta
 
@@ -398,8 +398,9 @@ def _dv_table(spark, path):
         path,
     )
     delete_delta(spark, path, "id < 900")
-    delete_delta(spark, path, "id = 950")
-    return [i for i in range(900, 1000) if i != 950]
+    if hole:
+        delete_delta(spark, path, "id = 950")
+    return [i for i in range(900, 1000) if not (hole and i == 950)]
 
 
 def test_dv_contiguous_delete_scan_has_no_python(spark, tmp_path):
@@ -418,18 +419,24 @@ def test_dv_contiguous_delete_scan_has_no_python(spark, tmp_path):
     assert sorted(r["id"] for r in df.collect()) == expected
 
 
-def test_dv_above_bound_uses_range_triage_and_udf(spark, tmp_path, monkeypatch):
-    """Above the bound (lowered to 0 here) the same table reads the
-    same rows through the range filter + roaring-blob UDF fallback."""
+@pytest.mark.parametrize("hole", [False, True], ids=["prefix_only", "hole"])
+def test_dv_above_bound_uses_range_triage_and_udf(
+    spark, tmp_path, monkeypatch, hole
+):
+    """Above the bound (lowered to 0 here) the same tables read the
+    same rows through the range-triage fallback: a prefix-only DV is
+    dropped by the codegen range filter alone (no Python in the plan),
+    an interior hole adds the roaring-blob UDF."""
     from deltalake_datafusion_spark.delta import deletion_vectors
     from deltalake_datafusion_spark.delta.scan import read_delta
 
     path = str(tmp_path / "t")
-    expected = _dv_table(spark, path)
+    expected = _dv_table(spark, path, hole)
     monkeypatch.setattr(deletion_vectors, "DV_ANTI_JOIN_MAX_ROWS", 0)
     df = read_delta(spark, path)
     plan = _plan(df)
-    assert "ArrowEvalPython" in plan and "LeftAnti" not in plan
+    assert "LeftAnti" not in plan and "BatchEvalPython" not in plan
+    assert ("ArrowEvalPython" in plan) == hole
     assert sorted(r["id"] for r in df.collect()) == expected
 
 
