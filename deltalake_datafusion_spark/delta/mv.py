@@ -1,5 +1,6 @@
 """Incrementally-maintained aggregate materialized views driven by
-the Change Data Feed.
+the Change Data Feed, and the ONE signed-delta core every view shape
+maintains itself through.
 
 The lakehouse pattern the reference's CDF surface exists to serve
 (reference CDF read path: `crates/datafusion` table-changes scan;
@@ -14,6 +15,25 @@ count/sum-style (abelian-group) aggregates this is exact:
 - ``delete`` / ``update_preimage`` rows contribute ``-1`` / ``-value``;
 - a group whose maintained count reaches 0 is DELETED from the view
   (it no longer exists in the base aggregate).
+
+MIN/MAX (``minmax_cols``) are not abelian — a delete can invalidate
+an extremum. The deltas then also carry the min/max of the inserted
+and of the retracted values: groups whose retractions stay strictly
+inside their stored extrema merge monotonically via
+``least``/``greatest``; only groups that lost an extremum (or were
+born and retracted inside the window) get an authoritative recompute.
+
+The core (:func:`apply_signed_rows`) takes any frame of signed rows
+(``__sign`` = ±1) — a single table's change feed, or the three-term
+join algebra of :mod:`delta.mv_join` — and applies it in ONE guarded
+MERGE, or ONE txn-only commit when the deltas cancel
+(:func:`_commit_watermarks`). The authoritative min/max recompute is
+the one view-shape-specific step and comes in as a callback: the
+single-table view re-reads the base AS OF the target version, the
+join view re-reads fact⋈dim AS OF the pinned versions. Batch and
+streaming entry points of both shapes feed the same core; the
+streaming ones share one foreachBatch driver
+(:func:`_drive_change_stream`).
 
 CRASH SAFETY (ADVICE r9): the applied-version watermark commits
 ATOMICALLY with the merged data — a ``txn`` (SetTransaction) action
@@ -50,6 +70,10 @@ from pyspark.sql import functions as F
 MV_BASE_VERSION_KEY = "lakehouse.mv.baseVersion"
 MV_TXN_APP = "lakehouse.mv"
 MV_COUNT_COL = "mv_count"
+# past this many keys, an inlined IN predicate (stats-prunable) gives
+# way to a broadcast semi-join — for the min/max recompute's group
+# keys and the join view's changed dim keys alike
+MAX_INLINE_KEYS = 10_000
 
 
 def _sum_col(c: str) -> str:
@@ -67,10 +91,40 @@ def _cnt_col(c: str) -> str:
     return f"mv_cnt_{c}"
 
 
+def _min_col(c: str) -> str:
+    return f"mv_min_{c}"
+
+
+def _max_col(c: str) -> str:
+    return f"mv_max_{c}"
+
+
+def _view_aggs(sum_cols: list[str], minmax_cols: list[str]) -> list:
+    """The full-build aggregates of every view shape: ``COUNT(*)``,
+    each ``SUM(c)`` with its non-null count, and each MIN/MAX."""
+    return (
+        [F.count(F.lit(1)).cast("long").alias(MV_COUNT_COL)]
+        + [F.sum(c).alias(_sum_col(c)) for c in sum_cols]
+        + [F.count(c).cast("long").alias(_cnt_col(c)) for c in sum_cols]
+        + [F.min(c).alias(_min_col(c)) for c in minmax_cols]
+        + [F.max(c).alias(_max_col(c)) for c in minmax_cols]
+    )
+
+
 def _now_ms() -> int:
     import time
 
     return int(time.time() * 1000)
+
+
+def _txn(app: str, version: int) -> dict:
+    return {
+        "txn": {
+            "appId": app,
+            "version": int(version),
+            "lastUpdated": _now_ms(),
+        }
+    }
 
 
 def mv_watermark(mv_snap) -> int | None:
@@ -87,14 +141,36 @@ def mv_watermark(mv_snap) -> int | None:
     return max(v for v in (txn, prop) if v is not None)
 
 
-def _txn_action(version: int) -> dict:
-    return {
-        "txn": {
-            "appId": MV_TXN_APP,
-            "version": int(version),
-            "lastUpdated": _now_ms(),
-        }
+def _maintained_view(spark, mv_path: str, minmax_cols, watermark_of):
+    """Load a view for refresh: ``(snapshot, watermark)``. Raises when
+    ``watermark_of`` finds no watermark (not a maintained view), or
+    when ``minmax_cols`` does not name exactly the view's
+    ``mv_min_*``/``mv_max_*`` columns — a refresh that skipped them
+    would leave the extrema silently STALE, the one shape of
+    wrongness the maintenance layer must never produce."""
+    from deltalake_datafusion_spark.delta.snapshot import load_snapshot
+
+    snap = load_snapshot(mv_path, spark=spark)
+    wm = watermark_of(snap)
+    if wm is None:
+        raise ValueError(
+            f"{mv_path} carries no maintenance watermark — not a "
+            "maintained view (build_aggregate_mv / build_join_mv first)"
+        )
+    have = {
+        f.name
+        for f in snap.schema.fields
+        if f.name.startswith(("mv_min_", "mv_max_"))
     }
+    want = {g(c) for c in minmax_cols or [] for g in (_min_col, _max_col)}
+    if have != want:
+        raise ValueError(
+            f"{mv_path} maintains MIN/MAX columns {sorted(have)} but the "
+            f"refresh passed minmax_cols={list(minmax_cols or [])} — pass "
+            "the view's own MIN/MAX columns (extrema would go silently "
+            "stale or fail to merge)"
+        )
+    return snap, wm
 
 
 def _retry_concurrent_refresh(attempt, max_attempts: int = 3):
@@ -122,13 +198,15 @@ def build_aggregate_mv(
     mv_path: str,
     group_cols: list[str],
     sum_cols: list[str],
+    minmax_cols: list[str] | None = None,
     extra_conf: dict | None = None,
 ) -> dict:
     """Full build of the aggregate view at the base table's current
-    version: per group, ``COUNT(*)``, each ``SUM(c)``, and each
+    version: per group, ``COUNT(*)``, each ``SUM(c)``, each
     per-column non-null count ``mv_cnt_<c>`` (what keeps SUM
     NULL-exact through incremental merges and lets the rewrite derive
-    ANSI AVG / COUNT(col)). The watermark (property + txn) commits
+    ANSI AVG / COUNT(col)), and ``mv_min_<c>``/``mv_max_<c>`` for
+    each of ``minmax_cols``. The watermark (property + txn) commits
     atomically with the built data."""
     from deltalake_datafusion_spark.delta.scan import read_delta
     from deltalake_datafusion_spark.delta.snapshot import load_snapshot
@@ -136,12 +214,9 @@ def build_aggregate_mv(
 
     base_ver = load_snapshot(base_path, spark=spark).version
     df = read_delta(spark, base_path)
-    aggs = (
-        [F.count(F.lit(1)).cast("long").alias(MV_COUNT_COL)]
-        + [F.sum(c).alias(_sum_col(c)) for c in sum_cols]
-        + [F.count(c).cast("long").alias(_cnt_col(c)) for c in sum_cols]
+    mv = df.groupBy(*group_cols).agg(
+        *_view_aggs(sum_cols, list(minmax_cols or []))
     )
-    mv = df.groupBy(*group_cols).agg(*aggs)
     write_delta(
         spark,
         mv,
@@ -160,27 +235,25 @@ def refresh_aggregate_mv(
     mv_path: str,
     group_cols: list[str],
     sum_cols: list[str],
+    minmax_cols: list[str] | None = None,
 ) -> dict:
     """Incremental refresh: apply the base's CDF since the view's
-    recorded watermark as signed per-group deltas via ONE MERGE
+    recorded watermark through :func:`apply_signed_rows` — ONE MERGE
     commit that also carries the advanced watermark (txn action).
-    No-op (and no commit) when the base has no new versions. Racing
-    refreshes of the same view serialize safely: the loser's guarded
-    merge detects the overlap and this retries from the advanced
-    watermark (:func:`_retry_concurrent_refresh`)."""
+    ``minmax_cols`` must name the view's MIN/MAX columns (the build's
+    ``minmax_cols``). No-op (and no commit) when the base has no new
+    versions. Racing refreshes of the same view serialize safely: the
+    loser's guarded merge detects the overlap and this retries from
+    the advanced watermark (:func:`_retry_concurrent_refresh`)."""
     from deltalake_datafusion_spark.delta.cdf import table_changes
     from deltalake_datafusion_spark.delta.snapshot import load_snapshot
 
+    minmax_cols = list(minmax_cols or [])
+
     def attempt():
-        mv_snap = load_snapshot(mv_path, spark=spark)
-        applied = mv_watermark(mv_snap)
-        if applied is None:
-            raise ValueError(
-                f"{mv_path} has no {MV_BASE_VERSION_KEY} property or "
-                f"{MV_TXN_APP} txn — not a maintained aggregate view "
-                "(build_aggregate_mv first)"
-            )
-        _reject_minmax_view(mv_snap, mv_path)
+        _, applied = _maintained_view(
+            spark, mv_path, minmax_cols, mv_watermark
+        )
         base_ver = load_snapshot(base_path, spark=spark).version
         if base_ver <= applied:
             return {
@@ -188,11 +261,10 @@ def refresh_aggregate_mv(
                 "mode": "noop",
                 "groups_touched": 0,
             }
-
-        ch = table_changes(spark, base_path, applied + 1, base_ver)
-        n_groups = apply_change_deltas(
-            spark, mv_path, ch, group_cols, sum_cols,
-            advance_to=base_ver, applied_watermark=applied,
+        n_groups = _apply_base_changes(
+            spark, base_path, mv_path,
+            table_changes(spark, base_path, applied + 1, base_ver),
+            group_cols, sum_cols, minmax_cols, applied, base_ver,
         )
         return {
             "base_version": base_ver,
@@ -201,195 +273,6 @@ def refresh_aggregate_mv(
         }
 
     return _retry_concurrent_refresh(attempt)
-
-
-def _reject_minmax_view(mv_snap, mv_path: str) -> None:
-    """A count/sum-only refresh applied to a MIN/MAX-bearing view
-    would merge the abelian columns and silently leave the extrema
-    STALE — the one shape of wrongness the maintenance layer must
-    never produce. Route to the delete-aware entry points instead."""
-    mm = [
-        f.name
-        for f in mv_snap.schema.fields
-        if f.name.startswith("mv_min_") or f.name.startswith("mv_max_")
-    ]
-    if mm:
-        raise ValueError(
-            f"{mv_path} maintains MIN/MAX columns ({mm[:4]}…) — use "
-            "refresh_minmax_mv / streaming_refresh_minmax_mv, not the "
-            "count/sum-only refresh (extrema would go silently stale)"
-        )
-
-
-def apply_change_deltas(
-    spark,
-    mv_path: str,
-    changes: DataFrame,
-    group_cols: list[str],
-    sum_cols: list[str],
-    advance_to: int | None = None,
-    applied_watermark: int | None = None,
-) -> int:
-    """Reduce a change-feed DataFrame (logical columns +
-    ``_change_type``) to signed per-group deltas and MERGE them into
-    the view; returns the number of touched groups. Shared by the
-    batch refresh and the streaming foreachBatch sink — the reduction
-    happens map-side before the merge's shuffle.
-
-    ``advance_to`` (a base-table version) is committed as the
-    ``lakehouse.mv`` txn watermark IN THE SAME COMMIT as the merge.
-    When the deltas all cancel (zero touched groups) the watermark
-    still advances — as a txn-only commit — so the CDF range is never
-    re-read forever.
-
-    ``applied_watermark`` (the watermark the change range was read
-    FROM) arms the concurrent-refresh guard (ADVICE r10): the merge
-    no-ops when another refresh already covered ``advance_to`` and
-    raises :class:`~delta.ops.ConcurrentRefreshError` when one
-    advanced the watermark into the middle of this range — the
-    refresh entry points retry from the new watermark."""
-    from deltalake_datafusion_spark.delta.ops import merge_delta
-
-    sign = F.when(
-        F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)
-    ).otherwise(F.lit(-1))
-    deltas = (
-        changes.withColumn("__sign", sign)
-        .groupBy(*group_cols)
-        .agg(
-            F.sum("__sign").cast("long").alias("d_count"),
-            *[
-                F.sum(F.col(c) * F.col("__sign")).alias(f"d_{c}")
-                for c in sum_cols
-            ],
-            *[
-                F.sum(
-                    F.when(F.col(c).isNotNull(), F.col("__sign"))
-                    .otherwise(F.lit(0))
-                )
-                .cast("long")
-                .alias(f"dc_{c}")
-                for c in sum_cols
-            ],
-        )
-    )
-    # a NULL→value update moves dc without moving d_count or d_<c>
-    # (e.g. NULL→0): the non-null count still changes
-    changed = F.col("d_count") != 0
-    for c in sum_cols:
-        changed = changed | (F.col(f"d_{c}") != 0)
-        changed = changed | (F.col(f"dc_{c}") != 0)
-    deltas = deltas.filter(changed)
-    on = " AND ".join(f"t.`{c}` <=> s.`{c}`" for c in group_cols)
-    update = {
-        MV_COUNT_COL: f"t.{MV_COUNT_COL} + s.d_count",
-        **_sum_update_exprs(sum_cols),
-    }
-    insert_vals = {
-        **{c: f"s.`{c}`" for c in group_cols},
-        MV_COUNT_COL: "s.d_count",
-        **{_sum_col(c): f"s.d_{c}" for c in sum_cols},
-        **{_cnt_col(c): f"s.dc_{c}" for c in sum_cols},
-    }
-    # one CDF read, reused; lazy: the count materializes it in the
-    # same job instead of a separate eager materialization job
-    deltas = deltas.localCheckpoint(eager=False)
-    n_groups = deltas.count()
-    guards = (
-        [{"appId": MV_TXN_APP, "applied": applied_watermark,
-          "target": advance_to}]
-        if advance_to is not None
-        else None
-    )
-    if n_groups == 0:
-        if advance_to is not None:
-            _advance_watermark_only(
-                spark, mv_path, advance_to,
-                expected_applied=applied_watermark,
-            )
-        return 0
-    res = merge_delta(
-        spark,
-        mv_path,
-        deltas,
-        on=on,
-        when_matched=[
-            {
-                "condition": f"t.{MV_COUNT_COL} + s.d_count <= 0",
-                "delete": True,
-            },
-            {"update": update},
-        ],
-        when_not_matched=[
-            {"condition": "s.d_count > 0", "values": insert_vals}
-        ],
-        extra_actions=(
-            [_txn_action(advance_to)] if advance_to is not None else None
-        ),
-        txn_guards=guards,
-    )
-    if res.get("skipped") == "txn-covered":
-        return 0
-    return n_groups
-
-
-def _advance_watermark_only(
-    spark, mv_path: str, base_ver: int,
-    expected_applied: int | None = None,
-) -> None:
-    """Commit that carries ONLY the watermark txn action (the deltas
-    of the applied CDF range cancelled to nothing). A concurrent
-    refresh that advanced the watermark INTO the range (past
-    ``expected_applied`` but short of ``base_ver``) raises — jumping
-    over it would silently skip the sub-range it did NOT apply (whose
-    net deltas need not be zero even though the full range's were)."""
-    from deltalake_datafusion_spark.delta.ops import (
-        ConcurrentRefreshError,
-    )
-    from deltalake_datafusion_spark.delta.snapshot import load_snapshot
-    from deltalake_datafusion_spark.delta.writer import (
-        check_writable,
-        commit_with_retries,
-    )
-
-    from deltalake_datafusion_spark.delta.writer import (
-        ConcurrentModificationError,
-    )
-
-    # The guard must hold AT COMMIT TIME, not just when first checked
-    # (ADVICE r11): commit_with_retries treats any concurrent commit
-    # carrying the MV_TXN_APP txn as a conflict, and this loop
-    # re-validates against the advanced ledger instead of rebasing
-    # over it (which would regress the watermark and double-apply the
-    # range on the next refresh).
-    last: Exception | None = None
-    for _ in range(5):
-        snap = load_snapshot(mv_path, spark=spark)
-        check_writable(snap)
-        recorded = snap.app_transactions.get(MV_TXN_APP, -1)
-        if recorded >= base_ver:
-            return  # a concurrent refresh already advanced past us
-        if expected_applied is not None and recorded > expected_applied:
-            raise ConcurrentRefreshError(
-                f"txn {MV_TXN_APP!r} advanced to {recorded} past the "
-                f"refresh's base watermark {expected_applied} (target "
-                f"{base_ver}) — a concurrent refresh overlapped this "
-                "range; recompute from the new watermark"
-            )
-        try:
-            commit_with_retries(
-                spark,
-                mv_path,
-                snap,
-                [_txn_action(base_ver)],
-                "SET TRANSACTION",
-                set(),
-                conflict_txn_appids={MV_TXN_APP},
-            )
-            return
-        except ConcurrentModificationError as e:
-            last = e  # ledger moved mid-commit — re-validate
-    raise last
 
 
 def streaming_refresh_aggregate_mv(
@@ -401,67 +284,111 @@ def streaming_refresh_aggregate_mv(
     checkpoint_dir: str,
     starting_version: int | None = None,
     timeout_s: int = 300,
+    minmax_cols: list[str] | None = None,
 ) -> None:
     """CONTINUOUS view maintenance: consume the base's change feed as
     a stream (``streaming/cdf_source.py``) and apply each micro-batch
-    through :func:`apply_change_deltas` in a foreachBatch sink with
-    availableNow semantics.
+    through the same core as :func:`refresh_aggregate_mv` — MIN/MAX
+    recomputes read the base AS OF the batch's high commit — in the
+    exactly-once sink of :func:`_drive_change_stream`: replayed
+    batches and fresh checkpoint directories merge nothing twice, and
+    a later batch refresh sees the advanced watermark."""
+    minmax_cols = list(minmax_cols or [])
+    _, wm = _maintained_view(spark, mv_path, minmax_cols, mv_watermark)
+
+    def apply(_snap, fresh, applied, hi):
+        _apply_base_changes(
+            spark, base_path, mv_path, fresh, group_cols, sum_cols,
+            minmax_cols, applied, hi,
+        )
+
+    _drive_change_stream(
+        spark, base_path, mv_path, checkpoint_dir,
+        wm + 1 if starting_version is None else starting_version,
+        timeout_s, mv_watermark, apply,
+    )
+
+
+def _apply_base_changes(
+    spark, base_path, mv_path, changes: DataFrame, group_cols,
+    sum_cols, minmax_cols, applied: int, target: int,
+) -> int:
+    """Apply a single table's change-feed frame covering
+    ``(applied, target]`` to its view; returns touched groups."""
+    cols = list(dict.fromkeys([*group_cols, *sum_cols, *minmax_cols]))
+
+    def recompute(keys, keys_df):
+        # authoritative min/max from the base AS OF ``target``, pruned
+        # to the affected groups: an IN predicate pushed into the
+        # Delta scan (stats-based file skipping) when the keys inline,
+        # else a broadcast semi-join (never a truncated key set)
+        from deltalake_datafusion_spark.delta.scan import read_delta
+
+        pred = (
+            _key_predicate([k[0] for k in keys], group_cols[0])
+            if len(group_cols) == 1
+            else None
+        )
+        base = read_delta(spark, base_path, version=target, predicate=pred)
+        if pred is not None:
+            base = base.filter(F.expr(pred))
+        else:
+            base = _nullsafe_semi_join(base, keys_df, list(group_cols))
+        return base.groupBy(*group_cols).agg(
+            *[F.min(c).alias(f"re_min_{c}") for c in minmax_cols],
+            *[F.max(c).alias(f"re_max_{c}") for c in minmax_cols],
+        )
+
+    return apply_signed_rows(
+        spark, mv_path, signed_rows(changes, cols), group_cols, sum_cols,
+        {MV_TXN_APP: (applied, target)}, minmax_cols, recompute,
+    )
+
+
+def _drive_change_stream(
+    spark, source_path: str, mv_path: str, checkpoint_dir: str,
+    starting_version: int, timeout_s: int, applied_of, apply,
+) -> None:
+    """The one streaming sink of every view shape: consume
+    ``source_path``'s change feed (availableNow) and hand each
+    micro-batch's not-yet-applied rows to
+    ``apply(mv_snapshot, fresh_rows, applied, hi)``, where ``hi`` is
+    the batch's high ``_commit_version`` — the watermark the apply
+    commits IN THE SAME COMMIT as its merge.
 
     Exactly-once across restarts AND checkpoint lineages: each batch
     first drops rows at-or-below the view's committed watermark
-    (``_commit_version <= watermark``), then merges the rest with the
-    new max ``_commit_version`` as the watermark txn IN THE SAME
-    COMMIT. A replayed batch (crash after merge, before checkpoint)
-    filters to empty; a fresh checkpoint dir (batch ids restart at 0)
-    is harmless because the guard never looks at batch ids; and a
-    later batch ``refresh_aggregate_mv`` sees the advanced watermark
-    and reads only genuinely-new commits."""
+    (``applied_of(snapshot)``, read from the view's log — not from
+    this process), so a replayed batch (crash after merge, before
+    checkpoint) filters to empty and a fresh checkpoint dir (batch
+    ids restart at 0) is harmless. A concurrent batch refresh racing
+    the stream re-filters the batch against the advanced watermark
+    and retries."""
     from deltalake_datafusion_spark.delta.snapshot import load_snapshot
     from deltalake_datafusion_spark.streaming.cdf_source import (
         read_change_stream,
     )
 
-    mv_snap = load_snapshot(mv_path, spark=spark)
-    if mv_watermark(mv_snap) is None:
-        raise ValueError(
-            f"{mv_path} has no {MV_BASE_VERSION_KEY} property or "
-            f"{MV_TXN_APP} txn — not a maintained aggregate view "
-            "(build_aggregate_mv first)"
-        )
-    _reject_minmax_view(mv_snap, mv_path)
-    if starting_version is None:
-        starting_version = mv_watermark(mv_snap) + 1
-
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # one tiny driver-side log read per micro-batch: the committed
-        # watermark (the guard must come from the view, not from this
-        # process — that is what makes replays and fresh checkpoints
-        # safe)
         def attempt():
-            applied = mv_watermark(load_snapshot(mv_path, spark=spark))
+            snap = load_snapshot(mv_path, spark=spark)
+            applied = applied_of(snap)
+            # lazy checkpoint: the watermark aggregate right below
+            # materializes it in the SAME job
             fresh = batch_df.filter(
                 F.col("_commit_version") > F.lit(applied)
-            )
-            # lazy checkpoint: the watermark aggregate right below
-            # materializes it in the SAME job (eager cost a separate
-            # job per micro-batch)
-            fresh = fresh.localCheckpoint(eager=False)
+            ).localCheckpoint(eager=False)
             hi = fresh.agg(
                 F.max("_commit_version").alias("v")
             ).collect()[0]["v"]
             if hi is None:
                 return  # fully-replayed batch — merged before a crash
-            apply_change_deltas(
-                spark, mv_path, fresh, group_cols, sum_cols,
-                advance_to=int(hi), applied_watermark=applied,
-            )
+            apply(snap, fresh, applied, int(hi))
 
-        # a concurrent batch refresh racing this stream re-filters
-        # the batch against the advanced watermark and retries
         _retry_concurrent_refresh(attempt)
 
     q = (
-        read_change_stream(spark, base_path, starting_version)
+        read_change_stream(spark, source_path, starting_version)
         .writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
@@ -470,76 +397,228 @@ def streaming_refresh_aggregate_mv(
     q.awaitTermination(timeout_s)
 
 
-def streaming_refresh_minmax_mv(
+# ------------------------------------------------------------------ #
+# The signed-delta core                                               #
+# ------------------------------------------------------------------ #
+
+
+def signed_rows(changes: DataFrame, cols: list[str]) -> DataFrame:
+    """Project a change-feed frame to ``cols`` + ``__sign`` (+1 for
+    insert/update_postimage, −1 for delete/update_preimage)."""
+    sign = F.when(
+        F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)
+    ).otherwise(F.lit(-1))
+    return changes.select(*cols, sign.alias("__sign"))
+
+
+def _delta_aggs(sum_cols: list[str], minmax_cols: list[str]) -> list:
+    """Per-group reduction of signed rows: ``d_count``, ``d_<c>`` and
+    the non-null count delta ``dc_<c>`` per sum column; with MIN/MAX,
+    the extrema of the inserted (``ins_*``) and retracted
+    (``del_*``) values and whether the group saw a retraction."""
+    sign = F.col("__sign")
+    is_ins = sign == 1
+    aggs = [F.sum("__sign").cast("long").alias("d_count")]
+    for c in sum_cols:
+        aggs.append(F.sum(F.col(c) * sign).alias(f"d_{c}"))
+        aggs.append(
+            F.sum(F.when(F.col(c).isNotNull(), sign).otherwise(F.lit(0)))
+            .cast("long")
+            .alias(f"dc_{c}")
+        )
+    for c in minmax_cols:
+        aggs += [
+            F.min(F.when(is_ins, F.col(c))).alias(f"ins_min_{c}"),
+            F.max(F.when(is_ins, F.col(c))).alias(f"ins_max_{c}"),
+            F.min(F.when(~is_ins, F.col(c))).alias(f"del_min_{c}"),
+            F.max(F.when(~is_ins, F.col(c))).alias(f"del_max_{c}"),
+        ]
+    if minmax_cols:
+        aggs.append(F.max((~is_ins).cast("int")).alias("__saw_delete"))
+    return aggs
+
+
+def apply_signed_rows(
     spark,
-    base_path: str,
     mv_path: str,
+    rows: DataFrame,
     group_cols: list[str],
     sum_cols: list[str],
-    minmax_cols: list[str],
-    checkpoint_dir: str,
-    starting_version: int | None = None,
-    timeout_s: int = 300,
-    max_inline_groups: int = 10_000,
-) -> None:
-    """CONTINUOUS maintenance of a MIN/MAX-bearing view: the
-    streaming twin of :func:`streaming_refresh_aggregate_mv`, with
-    each micro-batch applied through the delete-aware core
-    (:func:`_apply_minmax_change_rows`) — monotone least/greatest for
-    interior churn, targeted base recompute AS OF the batch's high
-    commit for extremum-losing groups, exactly-once via the same
-    committed-watermark filter + same-commit txn advance."""
-    from deltalake_datafusion_spark.delta.snapshot import load_snapshot
-    from deltalake_datafusion_spark.streaming.cdf_source import (
-        read_change_stream,
-    )
+    watermarks: dict[str, tuple[int, int]],
+    minmax_cols: list[str] | None = None,
+    recompute=None,
+) -> int:
+    """Reduce signed rows (group cols + measure cols + ``__sign`` =
+    ±1) to per-group deltas and apply them to the view in ONE guarded
+    MERGE commit; returns the number of touched groups. The reduction
+    happens map-side before the merge's shuffle.
 
-    mv_snap = load_snapshot(mv_path, spark=spark)
-    if mv_watermark(mv_snap) is None:
-        raise ValueError(
-            f"{mv_path} has no {MV_BASE_VERSION_KEY} property or "
-            f"{MV_TXN_APP} txn — not a maintained aggregate view "
-            "(build_minmax_mv first)"
+    ``watermarks`` maps each txn appId to ``(applied, target)``: the
+    rows cover the change range ``(applied, target]``. Every
+    ``target`` is committed as a txn action IN THE SAME COMMIT as the
+    merge; when the deltas all cancel (zero touched groups) they
+    still advance — as a txn-only commit — so the range is never
+    re-read forever. The ``applied`` ends arm the concurrent-refresh
+    guard (ADVICE r10): the merge no-ops when another refresh already
+    covered every target and raises
+    :class:`~delta.ops.ConcurrentRefreshError` when one advanced a
+    watermark into the middle of the range — the refresh entry points
+    retry from the new watermark.
+
+    ``minmax_cols`` maintain ``mv_min_*``/``mv_max_*``: interior
+    retractions and inserts merge monotonically; the groups that lost
+    an extremum (or are absent from the view yet saw a retraction)
+    take their authoritative values from
+    ``recompute(keys, keys_df)`` — ``keys`` the first
+    ``MAX_INLINE_KEYS + 1`` affected group-key tuples, ``keys_df``
+    all of them — which returns group cols + ``re_min_<c>`` /
+    ``re_max_<c>``. It is never called when no group needs it."""
+    from deltalake_datafusion_spark.delta.ops import merge_delta
+
+    minmax_cols = list(minmax_cols or [])
+    # a NULL→value update moves dc without moving d_count or d_<c>
+    # (e.g. NULL→0): the non-null count still changes
+    changed = F.col("d_count") != 0
+    for c in sum_cols:
+        changed = changed | (F.col(f"d_{c}") != 0)
+        changed = changed | (F.col(f"dc_{c}") != 0)
+    if minmax_cols:
+        changed = changed | (F.col("__saw_delete") == 1)
+    # lazy: the count right below materializes the checkpoint in the
+    # SAME job (eager cost a separate materialization job per refresh)
+    deltas = (
+        rows.groupBy(*group_cols)
+        .agg(*_delta_aggs(sum_cols, minmax_cols))
+        .filter(changed)
+        .localCheckpoint(eager=False)
+    )
+    n_groups = deltas.count()
+    if n_groups == 0:
+        _commit_watermarks(spark, mv_path, watermarks)
+        return 0
+
+    src = deltas
+    if minmax_cols:
+        src = _flag_needs_authority(
+            spark, mv_path, deltas, group_cols, minmax_cols
         )
-    if starting_version is None:
-        starting_version = mv_watermark(mv_snap) + 1
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        def attempt():
-            applied = mv_watermark(load_snapshot(mv_path, spark=spark))
-            fresh = batch_df.filter(
-                F.col("_commit_version") > F.lit(applied)
+        need = src.filter("__need_auth = 1").select(*group_cols)
+        keys = [
+            tuple(r) for r in need.limit(MAX_INLINE_KEYS + 1).collect()
+        ]
+        if keys:
+            src = _nullsafe_left_join(
+                src, recompute(keys, need), list(group_cols)
             )
-            # lazy checkpoint: the watermark aggregate right below
-            # materializes it in the SAME job (eager cost a separate
-            # job per micro-batch)
-            fresh = fresh.localCheckpoint(eager=False)
-            hi = fresh.agg(
-                F.max("_commit_version").alias("v")
-            ).collect()[0]["v"]
-            if hi is None:
-                return  # fully-replayed batch — merged before a crash
-            _apply_minmax_change_rows(
-                spark, base_path, mv_path, fresh, group_cols,
-                sum_cols, minmax_cols, max_inline_groups,
-                advance_to=int(hi), applied_watermark=applied,
-            )
+        else:
+            for c in minmax_cols:
+                src = src.withColumn(f"re_min_{c}", F.lit(None))
+                src = src.withColumn(f"re_max_{c}", F.lit(None))
 
-        _retry_concurrent_refresh(attempt)
-
-    q = (
-        read_change_stream(spark, base_path, starting_version)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    update = {
+        MV_COUNT_COL: f"t.{MV_COUNT_COL} + s.d_count",
+        **_sum_update_exprs(sum_cols),
+    }
+    insert_vals = {
+        **{c: f"s.`{c}`" for c in group_cols},
+        MV_COUNT_COL: "s.d_count",
+        **{_sum_col(c): f"s.d_{c}" for c in sum_cols},
+        **{_cnt_col(c): f"s.dc_{c}" for c in sum_cols},
+    }
+    for c in minmax_cols:
+        # interior retractions (``__need_auth = 0``) cannot move an
+        # extremum: they merge monotonically like inserts. A BRAND-NEW
+        # group can still have seen in-window retractions (rows
+        # created and removed inside the range): its authoritative
+        # min/max come from the recompute, not the inserted values.
+        for kind, ext, col in (
+            ("min", "least", _min_col(c)), ("max", "greatest", _max_col(c))
+        ):
+            auth = f"CASE WHEN s.__need_auth = 1 THEN s.re_{kind}_{c} ELSE "
+            update[col] = f"{auth}{ext}(t.{col}, s.ins_{kind}_{c}) END"
+            insert_vals[col] = f"{auth}s.ins_{kind}_{c} END"
+    res = merge_delta(
+        spark,
+        mv_path,
+        src,
+        on=" AND ".join(f"t.`{c}` <=> s.`{c}`" for c in group_cols),
+        when_matched=[
+            {
+                "condition": f"t.{MV_COUNT_COL} + s.d_count <= 0",
+                "delete": True,
+            },
+            {"update": update},
+        ],
+        when_not_matched=[
+            {"condition": "s.d_count > 0", "values": insert_vals}
+        ],
+        extra_actions=[
+            _txn(app, target) for app, (_, target) in watermarks.items()
+        ],
+        txn_guards=[
+            {"appId": app, "applied": applied, "target": target}
+            for app, (applied, target) in watermarks.items()
+        ],
     )
-    q.awaitTermination(timeout_s)
+    if res.get("skipped") == "txn-covered":
+        return 0
+    return n_groups
 
 
-# ------------------------------------------------------------------ #
-# MIN/MAX-bearing aggregate MVs (delete-aware group recompute)        #
-# ------------------------------------------------------------------ #
+def _commit_watermarks(
+    spark, mv_path: str, watermarks: dict[str, tuple[int, int]]
+) -> None:
+    """Commit that carries ONLY watermark txn actions (the deltas of
+    the applied range cancelled to nothing). A concurrent refresh
+    that advanced a watermark INTO its range (past ``applied`` but
+    short of ``target``) raises — jumping over it would silently skip
+    the sub-range it did NOT apply (whose net deltas need not be zero
+    even though the full range's were). Watermarks a concurrent
+    refresh already advanced to or past their target are left
+    alone."""
+    from deltalake_datafusion_spark.delta.ops import (
+        ConcurrentRefreshError,
+    )
+    from deltalake_datafusion_spark.delta.snapshot import load_snapshot
+    from deltalake_datafusion_spark.delta.writer import (
+        ConcurrentModificationError,
+        check_writable,
+        commit_with_retries,
+    )
+
+    # The guard must hold AT COMMIT TIME, not just when first checked
+    # (ADVICE r11): commit_with_retries treats any concurrent commit
+    # carrying one of these appIds' txns as a conflict, and this loop
+    # re-validates against the advanced ledger instead of rebasing
+    # over it (which would regress the watermark and double-apply the
+    # range on the next refresh).
+    last: Exception | None = None
+    for _ in range(5):
+        snap = load_snapshot(mv_path, spark=spark)
+        check_writable(snap)
+        fresh = []
+        for app, (applied, target) in watermarks.items():
+            rec = snap.app_transactions.get(app, -1)
+            if applied < rec < target:
+                raise ConcurrentRefreshError(
+                    f"txn {app!r} advanced to {rec} inside the range "
+                    f"({applied}, {target}] — a concurrent refresh "
+                    "overlapped this range; recompute from the new "
+                    "watermark"
+                )
+            if rec < target:
+                fresh.append(_txn(app, target))
+        if not fresh:
+            return  # a concurrent refresh already advanced past us
+        try:
+            commit_with_retries(
+                spark, mv_path, snap, fresh, "SET TRANSACTION", set(),
+                conflict_txn_appids=set(watermarks),
+            )
+            return
+        except ConcurrentModificationError as e:
+            last = e  # ledger moved mid-commit — re-validate
+    raise last
 
 
 def _sum_update_exprs(sum_cols: list[str]) -> dict[str, str]:
@@ -558,6 +637,34 @@ def _sum_update_exprs(sum_cols: list[str]) -> dict[str, str]:
         )
         out[cnt] = f"t.{cnt} + s.dc_{c}"
     return out
+
+
+def _key_predicate(keys: list, key_col: str) -> str | None:
+    """Inline an IN predicate over ``keys`` for a Delta scan's
+    stats-based file skipping — int/str keys only, at most
+    ``MAX_INLINE_KEYS`` of them; None otherwise (the caller falls
+    back to a broadcast semi-join)."""
+    if not keys or len(keys) > MAX_INLINE_KEYS:
+        return None
+    if all(isinstance(k, int) and not isinstance(k, bool) for k in keys):
+        lits = ", ".join(str(k) for k in sorted(keys))
+    elif all(isinstance(k, str) for k in keys):
+        esc = [k.replace("'", "''") for k in sorted(keys)]
+        lits = ", ".join(f"'{k}'" for k in esc)
+    else:
+        return None
+    return f"{key_col} IN ({lits})"
+
+
+def _distinct_keys(df: DataFrame, col: str) -> list:
+    """Up to ``MAX_INLINE_KEYS + 1`` distinct values of ``col`` — one
+    job, enough for :func:`_key_predicate` to decide whether they
+    inline."""
+    return [
+        r[0]
+        for r in df.select(col).distinct().limit(MAX_INLINE_KEYS + 1)
+        .collect()
+    ]
 
 
 def _nullsafe_left_join(
@@ -612,293 +719,6 @@ def _nullsafe_semi_join(
     return left.join(F.broadcast(renamed), cond, "left_semi")
 
 
-def _min_col(c: str) -> str:
-    return f"mv_min_{c}"
-
-
-def _max_col(c: str) -> str:
-    return f"mv_max_{c}"
-
-
-def build_minmax_mv(
-    spark,
-    base_path: str,
-    mv_path: str,
-    group_cols: list[str],
-    sum_cols: list[str],
-    minmax_cols: list[str],
-    extra_conf: dict | None = None,
-) -> dict:
-    """Full build of an aggregate view carrying count + sums AND
-    per-group MIN/MAX columns. MIN/MAX are not abelian — a delete can
-    invalidate them — so the incremental refresh
-    (:func:`refresh_minmax_mv`) pairs the usual signed count/sum
-    deltas with a TARGETED RECOMPUTE of exactly the groups that saw a
-    delete/update_preimage (reading the base pruned to those group
-    keys); insert-only groups merge monotonically via
-    least()/greatest() and never touch the base. The watermark is the
-    same atomic ``lakehouse.mv`` txn as :func:`build_aggregate_mv`."""
-    from deltalake_datafusion_spark.delta.scan import read_delta
-    from deltalake_datafusion_spark.delta.snapshot import load_snapshot
-    from deltalake_datafusion_spark.delta.writer import write_delta
-
-    base_ver = load_snapshot(base_path, spark=spark).version
-    df = read_delta(spark, base_path)
-    aggs = (
-        [F.count(F.lit(1)).cast("long").alias(MV_COUNT_COL)]
-        + [F.sum(c).alias(_sum_col(c)) for c in sum_cols]
-        + [F.count(c).cast("long").alias(_cnt_col(c)) for c in sum_cols]
-        + [F.min(c).alias(_min_col(c)) for c in minmax_cols]
-        + [F.max(c).alias(_max_col(c)) for c in minmax_cols]
-    )
-    mv = df.groupBy(*group_cols).agg(*aggs)
-    write_delta(
-        spark,
-        mv,
-        mv_path,
-        configuration={
-            MV_BASE_VERSION_KEY: str(base_ver), **(extra_conf or {})
-        },
-        txn=(MV_TXN_APP, base_ver),
-    )
-    return {"base_version": base_ver, "mode": "full"}
-
-
-def refresh_minmax_mv(
-    spark,
-    base_path: str,
-    mv_path: str,
-    group_cols: list[str],
-    sum_cols: list[str],
-    minmax_cols: list[str],
-    max_inline_groups: int = 10_000,
-) -> dict:
-    """See :func:`_refresh_minmax_once`; racing refreshes serialize
-    via the merge's txn guard + retry-from-new-watermark."""
-    return _retry_concurrent_refresh(
-        lambda: _refresh_minmax_once(
-            spark, base_path, mv_path, group_cols, sum_cols,
-            minmax_cols, max_inline_groups,
-        )
-    )
-
-
-def _refresh_minmax_once(
-    spark,
-    base_path: str,
-    mv_path: str,
-    group_cols: list[str],
-    sum_cols: list[str],
-    minmax_cols: list[str],
-    max_inline_groups: int = 10_000,
-) -> dict:
-    """Incremental refresh of a MIN/MAX-bearing view: ONE MERGE commit
-    (watermark txn riding along) built from
-
-    - signed per-group count/sum deltas (as the abelian path);
-    - per-group min/max of the INSERTED values (monotone merge via
-      least/greatest for groups that saw no deletes);
-    - authoritative recomputed min/max for the groups that saw a
-      delete/update_preimage — read from the base AS OF the target
-      version, pruned to exactly those group keys (inlined IN
-      predicate ≤ ``max_inline_groups`` keys for stats-based file
-      skipping, else a broadcast semi-join).
-
-    The base is NEVER opened when the CDF contains no deletes or
-    when every retraction stays interior to its group's stored
-    extrema — the unit guards pin both."""
-    from deltalake_datafusion_spark.delta.cdf import table_changes
-    from deltalake_datafusion_spark.delta.snapshot import load_snapshot
-
-    mv_snap = load_snapshot(mv_path, spark=spark)
-    applied = mv_watermark(mv_snap)
-    if applied is None:
-        raise ValueError(
-            f"{mv_path} has no {MV_BASE_VERSION_KEY} property or "
-            f"{MV_TXN_APP} txn — not a maintained aggregate view "
-            "(build_minmax_mv first)"
-        )
-    base_ver = load_snapshot(base_path, spark=spark).version
-    if base_ver <= applied:
-        return {"base_version": applied, "mode": "noop", "groups_touched": 0}
-
-    ch = table_changes(spark, base_path, applied + 1, base_ver)
-    n_groups = _apply_minmax_change_rows(
-        spark, base_path, mv_path, ch, group_cols, sum_cols,
-        minmax_cols, max_inline_groups,
-        advance_to=base_ver, applied_watermark=applied,
-    )
-    return {
-        "base_version": base_ver,
-        "mode": "incremental",
-        "groups_touched": n_groups,
-    }
-
-
-def _apply_minmax_change_rows(
-    spark,
-    base_path: str,
-    mv_path: str,
-    ch: DataFrame,
-    group_cols: list[str],
-    sum_cols: list[str],
-    minmax_cols: list[str],
-    max_inline_groups: int,
-    advance_to: int,
-    applied_watermark: int | None,
-) -> int:
-    """Apply a change-feed frame to a MIN/MAX-bearing view in ONE
-    guarded MERGE commit (the :func:`_refresh_minmax_once` core,
-    shared with the streaming sink): signed count/sum/cnt deltas,
-    monotone least/greatest for groups whose retractions stayed
-    interior, and an authoritative recompute — from the base AS OF
-    ``advance_to`` — for exactly the groups that lost an extremum.
-    Returns the number of touched groups."""
-    from deltalake_datafusion_spark.delta.ops import merge_delta
-
-    base_ver = advance_to
-    applied = applied_watermark
-    sign = F.when(
-        F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)
-    ).otherwise(F.lit(-1))
-    is_ins = F.col("__sign") == 1
-    deltas = (
-        ch.withColumn("__sign", sign)
-        .groupBy(*group_cols)
-        .agg(
-            F.sum("__sign").cast("long").alias("d_count"),
-            *[
-                F.sum(F.col(c) * F.col("__sign")).alias(f"d_{c}")
-                for c in sum_cols
-            ],
-            *[
-                F.sum(
-                    F.when(F.col(c).isNotNull(), F.col("__sign"))
-                    .otherwise(F.lit(0))
-                )
-                .cast("long")
-                .alias(f"dc_{c}")
-                for c in sum_cols
-            ],
-            *[
-                F.min(F.when(is_ins, F.col(c))).alias(f"ins_min_{c}")
-                for c in minmax_cols
-            ],
-            *[
-                F.max(F.when(is_ins, F.col(c))).alias(f"ins_max_{c}")
-                for c in minmax_cols
-            ],
-            *[
-                F.min(F.when(~is_ins, F.col(c))).alias(f"del_min_{c}")
-                for c in minmax_cols
-            ],
-            *[
-                F.max(F.when(~is_ins, F.col(c))).alias(f"del_max_{c}")
-                for c in minmax_cols
-            ],
-            F.max((~is_ins).cast("int")).alias("__saw_delete"),
-        )
-        # lazy: the count right below materializes the
-        # checkpoint in the same job
-        .localCheckpoint(eager=False)
-    )
-    n_groups = deltas.count()
-    if n_groups == 0:
-        _advance_watermark_only(
-            spark, mv_path, base_ver, expected_applied=applied
-        )
-        return 0
-
-    deltas = _flag_needs_authority(
-        spark, mv_path, deltas, group_cols, minmax_cols
-    )
-    affected = [
-        tuple(r[c] for c in group_cols)
-        for r in deltas.filter("__need_auth = 1")
-        .select(*group_cols)
-        .limit(max_inline_groups + 1)
-        .collect()
-    ]
-    if affected:
-        inline = affected if len(affected) <= max_inline_groups else None
-        recomputed = _recompute_groups(
-            spark, base_path, base_ver, group_cols, minmax_cols,
-            inline,
-            keys_df=deltas.filter("__need_auth = 1").select(*group_cols),
-        )
-        src = _nullsafe_left_join(deltas, recomputed, list(group_cols))
-    else:
-        src = deltas
-        for c in minmax_cols:
-            src = src.withColumn(f"re_min_{c}", F.lit(None))
-            src = src.withColumn(f"re_max_{c}", F.lit(None))
-
-    on = " AND ".join(f"t.`{c}` <=> s.`{c}`" for c in group_cols)
-    update = {
-        MV_COUNT_COL: f"t.{MV_COUNT_COL} + s.d_count",
-        **_sum_update_exprs(sum_cols),
-    }
-    # interior retractions (``__need_auth = 0`` with deletes seen)
-    # cannot move an extremum: they merge monotonically exactly like
-    # insert-only groups — only extremum-losing groups read the
-    # authoritative recompute (VERDICT r11 #3)
-    for c in minmax_cols:
-        update[_min_col(c)] = (
-            f"CASE WHEN s.__need_auth = 1 THEN s.re_min_{c} "
-            f"ELSE least(t.{_min_col(c)}, s.ins_min_{c}) END"
-        )
-        update[_max_col(c)] = (
-            f"CASE WHEN s.__need_auth = 1 THEN s.re_max_{c} "
-            f"ELSE greatest(t.{_max_col(c)}, s.ins_max_{c}) END"
-        )
-    # a BRAND-NEW group can still have seen in-window deletes (rows
-    # created and removed inside this CDF range): its authoritative
-    # min/max come from the recompute, not the inserted-values stats
-    insert_vals = {
-        **{c: f"s.`{c}`" for c in group_cols},
-        MV_COUNT_COL: "s.d_count",
-        **{_sum_col(c): f"s.d_{c}" for c in sum_cols},
-        **{_cnt_col(c): f"s.dc_{c}" for c in sum_cols},
-        **{
-            _min_col(c): (
-                f"CASE WHEN s.__need_auth = 1 THEN s.re_min_{c} "
-                f"ELSE s.ins_min_{c} END"
-            )
-            for c in minmax_cols
-        },
-        **{
-            _max_col(c): (
-                f"CASE WHEN s.__need_auth = 1 THEN s.re_max_{c} "
-                f"ELSE s.ins_max_{c} END"
-            )
-            for c in minmax_cols
-        },
-    }
-    res = merge_delta(
-        spark,
-        mv_path,
-        src,
-        on=on,
-        when_matched=[
-            {
-                "condition": f"t.{MV_COUNT_COL} + s.d_count <= 0",
-                "delete": True,
-            },
-            {"update": update},
-        ],
-        when_not_matched=[
-            {"condition": "s.d_count > 0", "values": insert_vals}
-        ],
-        extra_actions=[_txn_action(base_ver)],
-        txn_guards=[
-            {"appId": MV_TXN_APP, "applied": applied, "target": base_ver}
-        ],
-    )
-    if res.get("skipped") == "txn-covered":
-        return 0
-    return n_groups
-
-
 def _flag_needs_authority(
     spark, mv_path: str, deltas: DataFrame, group_cols, minmax_cols,
 ) -> DataFrame:
@@ -907,7 +727,7 @@ def _flag_needs_authority(
     INSIDE a group's stored (min, max) cannot move either extremum,
     so only groups where a retracted value ties-or-beats a stored
     extremum — or groups absent from the view (created and retracted
-    inside the CDF window) — need the authoritative base recompute.
+    inside the CDF window) — need the authoritative recompute.
     Everything else merges monotonically via least/greatest, so the
     all-groups-retracted worst case shrinks from full-join cost to
     the groups that actually lost an extremum.
@@ -954,43 +774,3 @@ def _flag_needs_authority(
         "__need_auth",
         F.when(need, F.lit(1)).otherwise(F.lit(0)),
     ).drop(*drop)
-
-
-def _recompute_groups(
-    spark, base_path, base_ver, group_cols, minmax_cols, inline,
-    keys_df,
-):
-    """Authoritative per-group min/max from the base AS OF
-    ``base_ver``, pruned to the affected groups: ``inline`` (a
-    bounded list of single-column key tuples) becomes an IN predicate
-    pushed into the Delta scan for stats-based file skipping;
-    otherwise ``keys_df`` drives a broadcast semi-join (never a
-    truncated key set)."""
-    from deltalake_datafusion_spark.delta.scan import read_delta
-
-    pred = None
-    if (
-        inline is not None
-        and len(group_cols) == 1
-        and all(
-            isinstance(t[0], (int, str)) and not isinstance(t[0], bool)
-            for t in inline
-        )
-        and all(t[0] is not None for t in inline)
-    ):
-        vals = sorted(t[0] for t in inline)
-        if isinstance(vals[0], str):
-            esc = [v.replace("'", "''") for v in vals]
-            lits = ", ".join(f"'{v}'" for v in esc)
-        else:
-            lits = ", ".join(str(v) for v in vals)
-        pred = f"{group_cols[0]} IN ({lits})"
-    base = read_delta(spark, base_path, version=base_ver, predicate=pred)
-    if pred is not None:
-        base = base.filter(F.expr(pred))
-    else:
-        base = _nullsafe_semi_join(base, keys_df, list(group_cols))
-    return base.groupBy(*group_cols).agg(
-        *[F.min(c).alias(f"re_min_{c}") for c in minmax_cols],
-        *[F.max(c).alias(f"re_max_{c}") for c in minmax_cols],
-    )

@@ -113,8 +113,9 @@ class ConcurrentRefreshError(RuntimeError):
     INTO THE MIDDLE of the CDF range a frozen delta covers: applying
     the frozen delta would double-count the overlap, and skipping it
     would lose the complement. The caller must recompute its delta
-    from the new watermark (the MV refresh entry points do exactly
-    that — see :func:`delta.mv.refresh_aggregate_mv`'s retry loop)."""
+    from the new watermark (every MV refresh entry point, batch and
+    streaming, does exactly that through
+    :func:`delta.mv._retry_concurrent_refresh`)."""
 
 
 class _TxnRangeCovered(Exception):

@@ -656,8 +656,9 @@ def streaming_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     change feed consumed as a STREAM (version-offset micro-batches
     through the delta_cdf source) with a foreachBatch sink that
     reduces each batch to signed deltas and MERGEs them into the
-    view; availableNow drains all pending commits, the recorded
-    lastBatchId makes replayed batches no-ops. Same exactness
+    view; availableNow drains all pending commits, and the view's
+    committed ``_commit_version`` watermark makes replayed batches
+    no-ops. Same exactness
     contract as the batch refresh: the view must equal the full
     recompute of the final base state, which is what the oracle
     computes from the source rows."""

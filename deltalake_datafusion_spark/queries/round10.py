@@ -807,8 +807,9 @@ def streaming_mv_join_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CONTINUOUS star-MV maintenance, production split
     (``delta/mv_join.py::streaming_refresh_join_mv``): the
     high-velocity FACT side streams through its change feed — each
-    micro-batch joins the signed fact deltas to the broadcast current
-    dim and MERGEs, the fact watermark txn riding the same commit —
+    micro-batch joins the signed fact deltas to the dim AS OF the
+    view's dim watermark and MERGEs through the shared signed-delta
+    core, the fact watermark txn riding the same commit —
     while a later dim SCD change reconciles through the two-sided
     batch refresh (which reads the stream-advanced fact watermark).
     The final view must equal the full recompute of the final joined
@@ -1557,10 +1558,11 @@ FROM rgb GROUP BY doc_id ORDER BY media_id
 
 def delta_mv_minmax_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MIN/MAX-bearing incrementally-maintained MV
-    (``delta/mv.py::refresh_minmax_mv``): min/max are NOT abelian —
-    deletes can invalidate them — so the refresh pairs signed
-    count/sum deltas with a TARGETED recompute of exactly the groups
-    that saw deletes (base read pruned to those group keys), while
+    (``delta/mv.py::refresh_aggregate_mv`` with ``minmax_cols``):
+    min/max are NOT abelian — deletes can invalidate them — so the
+    refresh pairs signed count/sum deltas with a TARGETED recompute
+    of exactly the groups that lost an extremum (base read pruned to
+    those group keys), while
     insert-only groups merge monotonically and never touch the base.
     The lifecycle deletes each priority group's extreme rows (both
     current minima and maxima land in the delete predicate) and
@@ -1568,8 +1570,8 @@ def delta_mv_minmax_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final base state — which is what the oracle computes, so a
     stale-extreme bug (the classic MIN/MAX-MV failure) hash-fails."""
     from deltalake_datafusion_spark.delta.mv import (
-        build_minmax_mv,
-        refresh_minmax_mv,
+        build_aggregate_mv,
+        refresh_aggregate_mv,
     )
     from deltalake_datafusion_spark.delta.ops import delete_delta
     from deltalake_datafusion_spark.delta.scan import read_delta
@@ -1588,7 +1590,7 @@ def delta_mv_minmax_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cents"),
     )
     write_delta(spark, rows, base, configuration=cdf)
-    build_minmax_mv(spark, base, mv, ["g"], ["cents"], ["cents"])
+    build_aggregate_mv(spark, base, mv, ["g"], ["cents"], ["cents"])
     # append new extremes into existing groups + a brand-new group
     extra = o.filter(F.col("o_orderkey") % 97 == 0).select(
         (F.col("o_orderkey") + 300000000).alias("id"),
@@ -1600,7 +1602,7 @@ def delta_mv_minmax_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # delete a band that includes many of the planted extremes AND
     # original rows -> min/max recompute must fire per group
     delete_delta(spark, base, "id % 3 = 1")
-    refresh_minmax_mv(spark, base, mv, ["g"], ["cents"], ["cents"])
+    refresh_aggregate_mv(spark, base, mv, ["g"], ["cents"], ["cents"])
     return (
         read_delta(spark, mv)
         .select(

@@ -228,8 +228,8 @@ def delta_mv_minmax_interior(
     the final aggregate from raw rows, so an interior skip that
     should have recomputed (or a NULL-group drop) hash-mismatches."""
     from deltalake_datafusion_spark.delta.mv import (
-        build_minmax_mv,
-        refresh_minmax_mv,
+        build_aggregate_mv,
+        refresh_aggregate_mv,
     )
     from deltalake_datafusion_spark.delta.ops import delete_delta
     from deltalake_datafusion_spark.delta.scan import read_delta
@@ -251,7 +251,7 @@ def delta_mv_minmax_interior(
         ).alias("cents"),
     )
     write_delta(spark, rows, base, configuration=cdf)
-    build_minmax_mv(spark, base, mv, ["g"], ["cents"], ["cents"])
+    build_aggregate_mv(spark, base, mv, ["g"], ["cents"], ["cents"])
     # interior band (acctbal spans ~[-999.99, 9999.99] per segment)
     delete_delta(
         spark, base, "cents >= 100000 AND cents < 300000 AND id % 3 = 0"
@@ -267,7 +267,7 @@ def delta_mv_minmax_interior(
          - 150000000).cast("long").alias("cents"),
     )
     write_delta(spark, extra, base, mode="append", configuration=cdf)
-    refresh_minmax_mv(spark, base, mv, ["g"], ["cents"], ["cents"])
+    refresh_aggregate_mv(spark, base, mv, ["g"], ["cents"], ["cents"])
     return (
         read_delta(spark, mv)
         .select(
@@ -398,8 +398,9 @@ def streaming_mv_minmax_refresh(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """CONTINUOUS maintenance of a MIN/MAX-bearing view
-    (``delta/mv.py::streaming_refresh_minmax_mv``): the base's change
-    feed streams through foreachBatch with the delete-aware core —
+    (``delta/mv.py::streaming_refresh_aggregate_mv`` with
+    ``minmax_cols``): the base's change feed streams through
+    foreachBatch with the delete-aware core —
     extremum-removing deletes trigger the targeted AS-OF recompute,
     interior churn merges monotonically, the watermark txn rides
     each merge commit. The oracle recomputes the final aggregate
@@ -407,8 +408,8 @@ def streaming_mv_minmax_refresh(
     import tempfile
 
     from deltalake_datafusion_spark.delta.mv import (
-        build_minmax_mv,
-        streaming_refresh_minmax_mv,
+        build_aggregate_mv,
+        streaming_refresh_aggregate_mv,
     )
     from deltalake_datafusion_spark.delta.ops import delete_delta
     from deltalake_datafusion_spark.delta.scan import read_delta
@@ -427,7 +428,7 @@ def streaming_mv_minmax_refresh(
         .alias("cents"),
     )
     write_delta(spark, rows, base, configuration=cdf)
-    build_minmax_mv(spark, base, mv, ["g"], ["cents"], ["cents"])
+    build_aggregate_mv(spark, base, mv, ["g"], ["cents"], ["cents"])
     # extremum removals (deep-negative minima) + interior churn
     delete_delta(spark, base, "cents < -90000")
     delete_delta(spark, base, "cents >= 50000 AND cents < 60000")
@@ -439,8 +440,8 @@ def streaming_mv_minmax_refresh(
     )
     write_delta(spark, extra, base, mode="append", configuration=cdf)
     with tempfile.TemporaryDirectory(prefix="smvmm_ck_") as ck:
-        streaming_refresh_minmax_mv(
-            spark, base, mv, ["g"], ["cents"], ["cents"], ck
+        streaming_refresh_aggregate_mv(
+            spark, base, mv, ["g"], ["cents"], ck, minmax_cols=["cents"]
         )
     return (
         read_delta(spark, mv)

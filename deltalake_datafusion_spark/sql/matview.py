@@ -151,10 +151,7 @@ def parse_create_matview(statement: str):
 
 
 def execute_create(spark, target: str, defn: dict, registry) -> dict:
-    from deltalake_datafusion_spark.delta.mv import (
-        build_aggregate_mv,
-        build_minmax_mv,
-    )
+    from deltalake_datafusion_spark.delta.mv import build_aggregate_mv
     from deltalake_datafusion_spark.delta.mv_join import build_join_mv
     from deltalake_datafusion_spark.sql.dispatcher import _unquote_target
 
@@ -173,16 +170,11 @@ def execute_create(spark, target: str, defn: dict, registry) -> dict:
             minmax_cols=defn["minmax_cols"],
             extra_conf=conf,
         )
-    elif defn["minmax_cols"]:
-        res = build_minmax_mv(
-            spark, _unquote_target(defn["base"], registry), mv_path,
-            defn["group_cols"], defn["sum_cols"], defn["minmax_cols"],
-            extra_conf=conf,
-        )
     else:
         res = build_aggregate_mv(
             spark, _unquote_target(defn["base"], registry), mv_path,
-            defn["group_cols"], defn["sum_cols"], extra_conf=conf,
+            defn["group_cols"], defn["sum_cols"], defn["minmax_cols"],
+            extra_conf=conf,
         )
     # register for transparent rewrite with RESOLVED paths
     from deltalake_datafusion_spark.sql.mv_rewrite import register_matview
@@ -198,10 +190,7 @@ def execute_create(spark, target: str, defn: dict, registry) -> dict:
 
 
 def execute_refresh(spark, target: str, registry) -> dict:
-    from deltalake_datafusion_spark.delta.mv import (
-        refresh_aggregate_mv,
-        refresh_minmax_mv,
-    )
+    from deltalake_datafusion_spark.delta.mv import refresh_aggregate_mv
     from deltalake_datafusion_spark.delta.mv_join import refresh_join_mv
     from deltalake_datafusion_spark.delta.snapshot import load_snapshot
     from deltalake_datafusion_spark.sql.dispatcher import _unquote_target
@@ -228,15 +217,10 @@ def execute_refresh(spark, target: str, registry) -> dict:
             sum_cols=defn["sum_cols"],
             minmax_cols=defn["minmax_cols"],
         )
-    elif defn["minmax_cols"]:
-        res = refresh_minmax_mv(
-            spark, _unquote_target(defn["base"], registry), mv_path,
-            defn["group_cols"], defn["sum_cols"], defn["minmax_cols"],
-        )
     else:
         res = refresh_aggregate_mv(
             spark, _unquote_target(defn["base"], registry), mv_path,
-            defn["group_cols"], defn["sum_cols"],
+            defn["group_cols"], defn["sum_cols"], defn["minmax_cols"],
         )
     return {"operation": "REFRESH MATERIALIZED VIEW", **res}
 

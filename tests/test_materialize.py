@@ -139,3 +139,69 @@ def test_lazily_returned_pairs_release_their_blocks(spark):
     assert domain_mirror_pairs(urls, "url").collect()
     assert _cache_empty(spark)
     assert _released(spark, before)
+
+
+def test_mv_refreshes_release_their_blocks(spark, tmp_path):
+    """Every view-maintenance shape — count/sum, min/max, join, join
+    with min/max, and a streaming refresh — leaves no persisted RDD
+    behind once its frames are collected."""
+    from deltalake_datafusion_spark.delta.mv import (
+        build_aggregate_mv,
+        refresh_aggregate_mv,
+        streaming_refresh_aggregate_mv,
+    )
+    from deltalake_datafusion_spark.delta.mv_join import (
+        build_join_mv,
+        refresh_join_mv,
+    )
+
+    spark.catalog.clearCache()
+    base, fact, dim = (str(tmp_path / x) for x in ("b", "f", "d"))
+    write_delta(
+        spark,
+        spark.range(16).select(
+            "id", (F.col("id") % 4).alias("g"), (F.col("id") * 10).alias("v")
+        ),
+        base, configuration=CDF,
+    )
+    write_delta(
+        spark,
+        spark.range(16).select(
+            "id", (F.col("id") % 5).alias("fk"),
+            (F.col("id") * 5 + 1).alias("amt"),
+        ),
+        fact, configuration=CDF,
+    )
+    write_delta(
+        spark,
+        spark.range(4).select(
+            F.col("id").alias("dk"),
+            F.concat(F.lit("s"), (F.col("id") % 2).cast("string"))
+            .alias("seg"),
+        ),
+        dim, configuration=CDF,
+    )
+    views = {k: str(tmp_path / k) for k in ("s", "mm", "st", "j", "jmm")}
+    jkw = dict(fact_key="fk", dim_key="dk", group_cols=["seg"],
+               sum_cols=["amt"])
+    build_aggregate_mv(spark, base, views["s"], ["g"], ["v"])
+    build_aggregate_mv(spark, base, views["mm"], ["g"], ["v"], ["v"])
+    build_aggregate_mv(spark, base, views["st"], ["g"], ["v"])
+    build_join_mv(spark, fact, dim, views["j"], **jkw)
+    build_join_mv(spark, fact, dim, views["jmm"], minmax_cols=["amt"], **jkw)
+    # retractions of extrema on both shapes, and a dim move
+    delete_delta(spark, base, "id IN (1, 2)")
+    delete_delta(spark, fact, "id IN (0, 13)")
+    update_delta(spark, dim, {"seg": "'sx'"}, "dk = 1")
+
+    before = _persistent_rdd_ids(spark)
+    refresh_aggregate_mv(spark, base, views["s"], ["g"], ["v"])
+    refresh_aggregate_mv(spark, base, views["mm"], ["g"], ["v"], ["v"])
+    refresh_join_mv(spark, fact, dim, views["j"], **jkw)
+    refresh_join_mv(spark, fact, dim, views["jmm"], minmax_cols=["amt"],
+                    **jkw)
+    streaming_refresh_aggregate_mv(
+        spark, base, views["st"], ["g"], ["v"], str(tmp_path / "ck")
+    )
+    assert _cache_empty(spark)
+    assert _released(spark, before)

@@ -357,14 +357,10 @@ def _mm_expected(spark, base_path):
 
 
 def test_minmax_mv_insert_only_monotone_merge(spark, tmp_path):
-    from deltalake_datafusion_spark.delta.mv import (
-        build_minmax_mv,
-        refresh_minmax_mv,
-    )
 
     b, m = str(tmp_path / "b"), str(tmp_path / "m")
     _base(spark, b)
-    build_minmax_mv(spark, b, m, ["g"], ["v"], ["v"])
+    build_aggregate_mv(spark, b, m, ["g"], ["v"], ["v"])
     assert _mm_state(spark, m) == _mm_expected(spark, b)
     write_delta(
         spark,
@@ -375,23 +371,19 @@ def test_minmax_mv_insert_only_monotone_merge(spark, tmp_path):
         mode="append",
         configuration=CDF,
     )
-    res = refresh_minmax_mv(spark, b, m, ["g"], ["v"], ["v"])
+    res = refresh_aggregate_mv(spark, b, m, ["g"], ["v"], ["v"])
     assert res["mode"] == "incremental"
     assert _mm_state(spark, m) == _mm_expected(spark, b)
 
 
 def test_minmax_mv_delete_of_minimum_recomputes_group(spark, tmp_path):
-    from deltalake_datafusion_spark.delta.mv import (
-        build_minmax_mv,
-        refresh_minmax_mv,
-    )
 
     b, m = str(tmp_path / "b"), str(tmp_path / "m")
     _base(spark, b)  # v = id * 10; min of group g is id=g
-    build_minmax_mv(spark, b, m, ["g"], ["v"], ["v"])
+    build_aggregate_mv(spark, b, m, ["g"], ["v"], ["v"])
     # delete group 1's minimum (id=1, v=10) and group 2's MAXIMUM
     delete_delta(spark, b, "id IN (1, 38)")
-    refresh_minmax_mv(spark, b, m, ["g"], ["v"], ["v"])
+    refresh_aggregate_mv(spark, b, m, ["g"], ["v"], ["v"])
     st = _mm_state(spark, m)
     assert st == _mm_expected(spark, b)
     assert st[1][2] == 50  # new min of group 1 is id=5 -> 50
@@ -399,14 +391,10 @@ def test_minmax_mv_delete_of_minimum_recomputes_group(spark, tmp_path):
 
 
 def test_minmax_mv_group_move_and_multi_round(spark, tmp_path):
-    from deltalake_datafusion_spark.delta.mv import (
-        build_minmax_mv,
-        refresh_minmax_mv,
-    )
 
     b, m = str(tmp_path / "b"), str(tmp_path / "m")
     _base(spark, b, n=60)
-    build_minmax_mv(spark, b, m, ["g"], ["v"], ["v"])
+    build_aggregate_mv(spark, b, m, ["g"], ["v"], ["v"])
     for step in range(3):
         write_delta(
             spark,
@@ -424,7 +412,7 @@ def test_minmax_mv_group_move_and_multi_round(spark, tmp_path):
             predicate=f"id % 9 = {step}",
         )
         delete_delta(spark, b, f"id % 7 = {step}")
-        refresh_minmax_mv(spark, b, m, ["g"], ["v"], ["v"])
+        refresh_aggregate_mv(spark, b, m, ["g"], ["v"], ["v"])
         assert _mm_state(spark, m) == _mm_expected(spark, b), f"step {step}"
 
 
@@ -432,14 +420,10 @@ def test_minmax_mv_new_group_with_inwindow_delete(spark, tmp_path):
     """A group born AND partially deleted inside one refresh window:
     its min/max must come from the recompute, not the inserted-value
     stats (which would include the already-deleted row)."""
-    from deltalake_datafusion_spark.delta.mv import (
-        build_minmax_mv,
-        refresh_minmax_mv,
-    )
 
     b, m = str(tmp_path / "b"), str(tmp_path / "m")
     _base(spark, b)
-    build_minmax_mv(spark, b, m, ["g"], ["v"], ["v"])
+    build_aggregate_mv(spark, b, m, ["g"], ["v"], ["v"])
     write_delta(
         spark,
         spark.createDataFrame(
@@ -451,7 +435,7 @@ def test_minmax_mv_new_group_with_inwindow_delete(spark, tmp_path):
         configuration=CDF,
     )
     delete_delta(spark, b, "id = 900")  # removes the would-be minimum
-    refresh_minmax_mv(spark, b, m, ["g"], ["v"], ["v"])
+    refresh_aggregate_mv(spark, b, m, ["g"], ["v"], ["v"])
     st = _mm_state(spark, m)
     assert st[77] == (2, 65, 5, 60)
     assert st == _mm_expected(spark, b)
@@ -462,14 +446,10 @@ def test_minmax_mv_insert_only_never_opens_base(spark, tmp_path, monkeypatch):
     monotonically — the base table is never re-read."""
     import deltalake_datafusion_spark.delta.scan as scan_mod
 
-    from deltalake_datafusion_spark.delta.mv import (
-        build_minmax_mv,
-        refresh_minmax_mv,
-    )
 
     b, m = str(tmp_path / "b"), str(tmp_path / "m")
     _base(spark, b)
-    build_minmax_mv(spark, b, m, ["g"], ["v"], ["v"])
+    build_aggregate_mv(spark, b, m, ["g"], ["v"], ["v"])
     write_delta(
         spark,
         spark.createDataFrame([(700, 3, 1)], "id long, g long, v long"),
@@ -485,7 +465,7 @@ def test_minmax_mv_insert_only_never_opens_base(spark, tmp_path, monkeypatch):
         return real(spark_, path, *a, **kw)
 
     monkeypatch.setattr(scan_mod, "read_delta", spy)
-    refresh_minmax_mv(spark, b, m, ["g"], ["v"], ["v"])
+    refresh_aggregate_mv(spark, b, m, ["g"], ["v"], ["v"])
     assert not any(p == b for p in opened), opened
     assert _mm_state(spark, m) == _mm_expected(spark, b)
 
@@ -497,14 +477,10 @@ def test_minmax_mv_delete_refresh_pushes_group_predicate(
     pruned to the affected group keys via a pushed IN predicate."""
     import deltalake_datafusion_spark.delta.scan as scan_mod
 
-    from deltalake_datafusion_spark.delta.mv import (
-        build_minmax_mv,
-        refresh_minmax_mv,
-    )
 
     b, m = str(tmp_path / "b"), str(tmp_path / "m")
     _base(spark, b)
-    build_minmax_mv(spark, b, m, ["g"], ["v"], ["v"])
+    build_aggregate_mv(spark, b, m, ["g"], ["v"], ["v"])
     delete_delta(spark, b, "id = 2")  # group 2 only
     real = scan_mod.read_delta
     preds = []
@@ -515,7 +491,7 @@ def test_minmax_mv_delete_refresh_pushes_group_predicate(
         return real(spark_, path, *a, **kw)
 
     monkeypatch.setattr(scan_mod, "read_delta", spy)
-    refresh_minmax_mv(spark, b, m, ["g"], ["v"], ["v"])
+    refresh_aggregate_mv(spark, b, m, ["g"], ["v"], ["v"])
     assert preds and all(p and "g IN (2)" in p for p in preds), preds
     assert _mm_state(spark, m) == _mm_expected(spark, b)
 
@@ -525,14 +501,26 @@ def test_minmax_mv_delete_refresh_pushes_group_predicate(
 # ------------------------------------------------------------------ #
 
 
+def _apply(spark, m, changes, applied, target):
+    """Apply a frozen change frame covering ``(applied, target]``
+    through the signed-delta core, as a stale maintainer would."""
+    from deltalake_datafusion_spark.delta.mv import (
+        MV_TXN_APP,
+        apply_signed_rows,
+        signed_rows,
+    )
+
+    return apply_signed_rows(
+        spark, m, signed_rows(changes, ["g", "v"]), ["g"], ["v"],
+        {MV_TXN_APP: (applied, target)},
+    )
+
+
 def test_concurrent_refresh_fully_covered_skips(spark, tmp_path):
     """A stale maintainer re-applying a CDF range a concurrent
     refresh already fully covered must no-op, not double-count."""
     from deltalake_datafusion_spark.delta.cdf import table_changes
-    from deltalake_datafusion_spark.delta.mv import (
-        apply_change_deltas,
-        mv_watermark,
-    )
+    from deltalake_datafusion_spark.delta.mv import mv_watermark
     from deltalake_datafusion_spark.delta.snapshot import load_snapshot
 
     b, m = str(tmp_path / "b"), str(tmp_path / "m")
@@ -552,10 +540,7 @@ def test_concurrent_refresh_fully_covered_skips(spark, tmp_path):
     refresh_aggregate_mv(spark, b, m, ["g"], ["v"])
     state = _mv_state(spark, m)
     assert state == _expected(spark, b)
-    n = apply_change_deltas(
-        spark, m, ch, ["g"], ["v"],
-        advance_to=base_ver, applied_watermark=applied,
-    )
+    n = _apply(spark, m, ch, applied, base_ver)
     assert n == 0
     assert _mv_state(spark, m) == state  # nothing double-applied
 
@@ -567,10 +552,7 @@ def test_concurrent_partial_overlap_raises_then_entrypoint_heals(
     delta's range makes the frozen delta unusable: the guarded merge
     raises, and the public refresh recomputes from the new watermark."""
     from deltalake_datafusion_spark.delta.cdf import table_changes
-    from deltalake_datafusion_spark.delta.mv import (
-        apply_change_deltas,
-        mv_watermark,
-    )
+    from deltalake_datafusion_spark.delta.mv import mv_watermark
     from deltalake_datafusion_spark.delta.ops import (
         ConcurrentRefreshError,
     )
@@ -591,15 +573,9 @@ def test_concurrent_partial_overlap_raises_then_entrypoint_heals(
         eager=True
     )
     # concurrent refresh applies only the sub-range (applied, v1]
-    apply_change_deltas(
-        spark, m, table_changes(spark, b, applied + 1, v1),
-        ["g"], ["v"], advance_to=v1, applied_watermark=applied,
-    )
+    _apply(spark, m, table_changes(spark, b, applied + 1, v1), applied, v1)
     with pytest.raises(ConcurrentRefreshError):
-        apply_change_deltas(
-            spark, m, ch_full, ["g"], ["v"],
-            advance_to=v2, applied_watermark=applied,
-        )
+        _apply(spark, m, ch_full, applied, v2)
     # the entry point retries from the advanced watermark
     res = refresh_aggregate_mv(spark, b, m, ["g"], ["v"])
     assert res["mode"] == "incremental"
@@ -613,10 +589,7 @@ def test_cancelling_range_partial_overlap_cannot_jump_watermark(
     watermark over a concurrent refresh that applied only a NON-zero
     sub-range (the unapplied complement's net is then non-zero)."""
     from deltalake_datafusion_spark.delta.cdf import table_changes
-    from deltalake_datafusion_spark.delta.mv import (
-        apply_change_deltas,
-        mv_watermark,
-    )
+    from deltalake_datafusion_spark.delta.mv import mv_watermark
     from deltalake_datafusion_spark.delta.ops import (
         ConcurrentRefreshError,
     )
@@ -636,34 +609,26 @@ def test_cancelling_range_partial_overlap_cannot_jump_watermark(
         eager=True
     )
     # concurrent refresh applied the insert half only
-    apply_change_deltas(
-        spark, m, table_changes(spark, b, applied + 1, v1),
-        ["g"], ["v"], advance_to=v1, applied_watermark=applied,
-    )
+    _apply(spark, m, table_changes(spark, b, applied + 1, v1), applied, v1)
     with pytest.raises(ConcurrentRefreshError):
-        apply_change_deltas(
-            spark, m, ch_full, ["g"], ["v"],
-            advance_to=v2, applied_watermark=applied,
-        )
+        _apply(spark, m, ch_full, applied, v2)
     refresh_aggregate_mv(spark, b, m, ["g"], ["v"])
     assert _mv_state(spark, m) == _expected(spark, b)
 
 
-def test_minmax_semi_join_fallback_past_inline_ceiling(spark, tmp_path):
-    """Force the > max_inline_groups broadcast-semi-join recompute
+def test_minmax_semi_join_fallback_past_inline_ceiling(
+    spark, tmp_path, monkeypatch
+):
+    """Force the > MAX_INLINE_KEYS broadcast-semi-join recompute
     path (the at-scale branch): still exactly the full recompute."""
-    from deltalake_datafusion_spark.delta.mv import (
-        build_minmax_mv,
-        refresh_minmax_mv,
-    )
+    import deltalake_datafusion_spark.delta.mv as mv_mod
 
+    monkeypatch.setattr(mv_mod, "MAX_INLINE_KEYS", 1)
     b, m = str(tmp_path / "b"), str(tmp_path / "m")
     _base(spark, b)
-    build_minmax_mv(spark, b, m, ["g"], ["v"], ["v"])
+    build_aggregate_mv(spark, b, m, ["g"], ["v"], ["v"])
     delete_delta(spark, b, "id % 10 < 4")  # deletes touch every group
-    res = refresh_minmax_mv(
-        spark, b, m, ["g"], ["v"], ["v"], max_inline_groups=1
-    )
+    res = refresh_aggregate_mv(spark, b, m, ["g"], ["v"], ["v"])
     assert res["mode"] == "incremental"
     assert _mm_state(spark, m) == _mm_expected(spark, b)
 
@@ -673,20 +638,16 @@ def test_minmax_null_group_key_retraction(spark, tmp_path):
     its RECOMPUTED min/max (the delta↔recompute join and the
     recompute's group pruning are null-safe, like the MERGE's own
     ``<=>`` ON) — not NULL extrema while the group still has rows."""
-    from deltalake_datafusion_spark.delta.mv import (
-        build_minmax_mv,
-        refresh_minmax_mv,
-    )
 
     b, m = str(tmp_path / "b"), str(tmp_path / "m")
     rows = [(1, None, 10), (2, None, 50), (3, None, 90),
             (4, 7, 20), (5, 7, 80)]
     df = spark.createDataFrame(rows, "id long, g long, v long")
     write_delta(spark, df, b, configuration=CDF)
-    build_minmax_mv(spark, b, m, ["g"], ["v"], ["v"])
+    build_aggregate_mv(spark, b, m, ["g"], ["v"], ["v"])
     # retract the NULL group's MAX and the keyed group's MIN
     delete_delta(spark, b, "id = 3 OR id = 4")
-    refresh_minmax_mv(spark, b, m, ["g"], ["v"], ["v"])
+    refresh_aggregate_mv(spark, b, m, ["g"], ["v"], ["v"])
     got = {
         r.g: (r.mv_count, r.mv_sum_v, r.mv_min_v, r.mv_max_v)
         for r in read_delta(spark, m).collect()
@@ -705,8 +666,9 @@ def test_watermark_only_commit_revalidates_after_concurrent_txn(
     the loop re-validates and returns without regressing."""
     import deltalake_datafusion_spark.delta.writer as writer_mod
     from deltalake_datafusion_spark.delta.mv import (
-        _advance_watermark_only,
-        _txn_action,
+        MV_TXN_APP,
+        _commit_watermarks,
+        _txn,
         mv_watermark,
     )
     from deltalake_datafusion_spark.delta.snapshot import load_snapshot
@@ -726,7 +688,7 @@ def test_watermark_only_commit_revalidates_after_concurrent_txn(
             # concurrent refresh wins the version with a HIGHER
             # watermark than this caller's target
             real_commit(
-                table_path, version, [_txn_action(applied + 5)],
+                table_path, version, [_txn(MV_TXN_APP, applied + 5)],
                 "SET TRANSACTION", sp,
                 configuration=kw.get("configuration"),
             )
@@ -735,9 +697,7 @@ def test_watermark_only_commit_revalidates_after_concurrent_txn(
         )
 
     monkeypatch.setattr(writer_mod, "commit", racing_commit)
-    _advance_watermark_only(
-        spark, m, applied + 2, expected_applied=applied
-    )
+    _commit_watermarks(spark, m, {MV_TXN_APP: (applied, applied + 2)})
     assert state["raced"]
     # the loser re-validated and did NOT regress the watermark
     assert mv_watermark(load_snapshot(m, spark=spark)) == applied + 5
@@ -834,14 +794,10 @@ def test_minmax_interior_delete_never_opens_base(
     refresh must not open the base table at all."""
     import deltalake_datafusion_spark.delta.scan as scan_mod
 
-    from deltalake_datafusion_spark.delta.mv import (
-        build_minmax_mv,
-        refresh_minmax_mv,
-    )
 
     b, m = str(tmp_path / "b"), str(tmp_path / "m")
     _base(spark, b)
-    build_minmax_mv(spark, b, m, ["g"], ["v"], ["v"])
+    build_aggregate_mv(spark, b, m, ["g"], ["v"], ["v"])
     # group 1 holds ids 1,5,...,37 (v = 10..370): id=5 (v=50) and
     # id=9 (v=90) are strictly interior
     delete_delta(spark, b, "id = 5 OR id = 9")
@@ -853,7 +809,7 @@ def test_minmax_interior_delete_never_opens_base(
         return real(spark_, path, *a, **kw)
 
     monkeypatch.setattr(scan_mod, "read_delta", spy)
-    refresh_minmax_mv(spark, b, m, ["g"], ["v"], ["v"])
+    refresh_aggregate_mv(spark, b, m, ["g"], ["v"], ["v"])
     base_opens = [p for p in opened if p == b]
     assert not base_opens, base_opens
     assert _mm_state(spark, m) == _mm_expected(spark, b)
@@ -867,14 +823,10 @@ def test_minmax_mixed_interior_and_extremum_deletes(
     interior group merges monotonically. Result equals recompute."""
     import deltalake_datafusion_spark.delta.scan as scan_mod
 
-    from deltalake_datafusion_spark.delta.mv import (
-        build_minmax_mv,
-        refresh_minmax_mv,
-    )
 
     b, m = str(tmp_path / "b"), str(tmp_path / "m")
     _base(spark, b)
-    build_minmax_mv(spark, b, m, ["g"], ["v"], ["v"])
+    build_aggregate_mv(spark, b, m, ["g"], ["v"], ["v"])
     # id=5 → group 1 interior (v=50); id=2 → group 2 MIN (v=20);
     # also insert a new group-1 row below its min (monotone merge)
     delete_delta(spark, b, "id = 5 OR id = 2")
@@ -892,7 +844,7 @@ def test_minmax_mixed_interior_and_extremum_deletes(
         return real(spark_, path, *a, **kw)
 
     monkeypatch.setattr(scan_mod, "read_delta", spy)
-    refresh_minmax_mv(spark, b, m, ["g"], ["v"], ["v"])
+    refresh_aggregate_mv(spark, b, m, ["g"], ["v"], ["v"])
     assert preds and all(p and "g IN (2)" in p for p in preds), preds
     assert _mm_state(spark, m) == _mm_expected(spark, b)
 
@@ -901,19 +853,19 @@ def test_streaming_minmax_refresh_matches_full_recompute(
     spark, tmp_path
 ):
     """CONTINUOUS maintenance of a MIN/MAX-bearing view
-    (streaming_refresh_minmax_mv): extremum-removing deletes,
+    (streaming_refresh_aggregate_mv with minmax_cols):
+    extremum-removing deletes,
     interior deletes, and inserts across micro-batches leave the
     view exactly equal to the full recompute; a second run over the
     same checkpoint applies nothing."""
     from deltalake_datafusion_spark.delta.mv import (
-        build_minmax_mv,
-        streaming_refresh_minmax_mv,
+        streaming_refresh_aggregate_mv,
     )
 
     b, m = str(tmp_path / "b"), str(tmp_path / "m")
     ck = str(tmp_path / "ck")
     _base(spark, b)
-    build_minmax_mv(spark, b, m, ["g"], ["v"], ["v"])
+    build_aggregate_mv(spark, b, m, ["g"], ["v"], ["v"])
     # extremum delete (id=2 is group 2's min), interior delete
     # (id=5 is inside group 1's range), inserts incl. a new group
     delete_delta(spark, b, "id = 2 OR id = 5")
@@ -924,27 +876,34 @@ def test_streaming_minmax_refresh_matches_full_recompute(
         ),
         b, mode="append", configuration=CDF,
     )
-    streaming_refresh_minmax_mv(spark, b, m, ["g"], ["v"], ["v"], ck)
+    streaming_refresh_aggregate_mv(
+        spark, b, m, ["g"], ["v"], ck, minmax_cols=["v"]
+    )
     assert _mm_state(spark, m) == _mm_expected(spark, b)
-    streaming_refresh_minmax_mv(spark, b, m, ["g"], ["v"], ["v"], ck)
+    streaming_refresh_aggregate_mv(
+        spark, b, m, ["g"], ["v"], ck, minmax_cols=["v"]
+    )
     assert _mm_state(spark, m) == _mm_expected(spark, b)
     # more changes, same checkpoint: only the new commits apply
     delete_delta(spark, b, "g = 3")
-    streaming_refresh_minmax_mv(spark, b, m, ["g"], ["v"], ["v"], ck)
+    streaming_refresh_aggregate_mv(
+        spark, b, m, ["g"], ["v"], ck, minmax_cols=["v"]
+    )
     assert _mm_state(spark, m) == _mm_expected(spark, b)
 
 
 def test_sum_only_refresh_rejects_minmax_view(spark, tmp_path):
-    """The count/sum-only entry points refuse a MIN/MAX-bearing view
-    (extrema would go silently stale)."""
+    """A refresh whose ``minmax_cols`` omit the view's MIN/MAX columns
+    is refused (extrema would go silently stale), batch and
+    streaming alike — and so is one naming MIN/MAX columns a
+    count/sum view does not maintain."""
     from deltalake_datafusion_spark.delta.mv import (
-        build_minmax_mv,
         streaming_refresh_aggregate_mv,
     )
 
     b, m = str(tmp_path / "b"), str(tmp_path / "m")
     _base(spark, b)
-    build_minmax_mv(spark, b, m, ["g"], ["v"], ["v"])
+    build_aggregate_mv(spark, b, m, ["g"], ["v"], ["v"])
     delete_delta(spark, b, "id = 0")
     with pytest.raises(ValueError, match="MIN/MAX"):
         refresh_aggregate_mv(spark, b, m, ["g"], ["v"])
@@ -952,3 +911,30 @@ def test_sum_only_refresh_rejects_minmax_view(spark, tmp_path):
         streaming_refresh_aggregate_mv(
             spark, b, m, ["g"], ["v"], str(tmp_path / "ck2")
         )
+    c = str(tmp_path / "c")
+    build_aggregate_mv(spark, b, c, ["g"], ["v"])
+    with pytest.raises(ValueError, match="MIN/MAX"):
+        refresh_aggregate_mv(spark, b, c, ["g"], ["v"], ["v"])
+
+
+def test_minmax_small_interior_and_extremum_deletes(spark, tmp_path):
+    """Tier-1 twin of the min/max refresh paths on a 12-row base:
+    an interior delete (monotone merge), an extremum delete
+    (targeted recompute), a whole-group delete and an insert in one
+    refresh, equal to the full recompute."""
+    b, m = str(tmp_path / "b"), str(tmp_path / "m")
+    _base(spark, b, n=12)  # g = id % 4, v = id * 10
+    build_aggregate_mv(spark, b, m, ["g"], ["v"], ["v"])
+    # g1 = {10, 50, 90}: 50 is interior; g2 = {20, 60, 100}: 20 is
+    # its minimum; g3 disappears
+    delete_delta(spark, b, "id IN (5, 2) OR g = 3")
+    write_delta(
+        spark,
+        spark.createDataFrame([(99, 0, 7)], "id long, g long, v long"),
+        b, mode="append", configuration=CDF,
+    )
+    res = refresh_aggregate_mv(spark, b, m, ["g"], ["v"], ["v"])
+    assert res["mode"] == "incremental"
+    st = _mm_state(spark, m)
+    assert st == _mm_expected(spark, b)
+    assert st[1] == (2, 100, 10, 90) and st[2] == (2, 160, 60, 100)

@@ -13,6 +13,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from deltalake_datafusion_spark.delta.cdf import table_changes
 from deltalake_datafusion_spark.delta.mv_join import (
     MV_DIM_TXN_APP,
     MV_FACT_TXN_APP,
@@ -414,8 +415,8 @@ def test_term_reads_pinned_to_target_versions(spark, tmp_path):
     write_delta(spark, race, fp, mode="append", configuration=CDF)
 
     rows = _join_mv_delta_rows(
-        spark, fp, dp, **KW,
-        f_range=None, d_range=(d0 + 1, d1), f_ver=f0, d_ver=d1,
+        spark, fp, dp, **KW, f_changes=None,
+        d_changes=table_changes(spark, dp, d0 + 1, d1), f_ver=f0, d_ver=d1,
     )
     sums = {
         r.seg: r.s
@@ -436,8 +437,8 @@ def test_term_reads_pinned_to_target_versions(spark, tmp_path):
     update_delta(spark, dp, set_exprs={"seg": "'s8'"}, predicate="dk = 2")
 
     rows = _join_mv_delta_rows(
-        spark, fp, dp, **KW,
-        f_range=(f2, f2), d_range=None, f_ver=f2, d_ver=d1,
+        spark, fp, dp, **KW, f_changes=table_changes(spark, fp, f2, f2),
+        d_changes=None, f_ver=f2, d_ver=d1,
     )
     got = {(r["seg"], r["amt"], r["__sign"]) for r in rows.collect()}
     # dim AS OF d1 still maps dk=2 → 's2', not the raced 's8'
@@ -447,10 +448,9 @@ def test_term_reads_pinned_to_target_versions(spark, tmp_path):
 def test_join_refresh_concurrent_fully_covered_skips(spark, tmp_path):
     """A stale maintainer merging a frozen signed-row delta after a
     concurrent refresh covered both ranges must no-op."""
+    from deltalake_datafusion_spark.delta.mv import apply_signed_rows
     from deltalake_datafusion_spark.delta.mv_join import (
         _join_mv_delta_rows,
-        _merge_signed_rows,
-        _txn,
     )
 
     fp, dp, mp = (
@@ -465,19 +465,16 @@ def test_join_refresh_concurrent_fully_covered_skips(spark, tmp_path):
     # stale maintainer computes + freezes its rows…
     rows = _join_mv_delta_rows(
         spark, fp, dp, **KW,
-        f_range=(f0 + 1, f1), d_range=None, f_ver=f1, d_ver=d0,
+        f_changes=table_changes(spark, fp, f0 + 1, f1),
+        d_changes=None, f_ver=f1, d_ver=d0,
     ).localCheckpoint(eager=True)
     # …concurrent refresh wins
     refresh_join_mv(spark, fp, dp, mp, **KW)
     state = _mv_state(spark, mp)
     assert state == _expected(spark, fp, dp)
-    n = _merge_signed_rows(
+    n = apply_signed_rows(
         spark, mp, rows, KW["group_cols"], KW["sum_cols"],
-        txns=[_txn(MV_FACT_TXN_APP, f1), _txn(MV_DIM_TXN_APP, d0)],
-        guards=[
-            {"appId": MV_FACT_TXN_APP, "applied": f0, "target": f1},
-            {"appId": MV_DIM_TXN_APP, "applied": d0, "target": d0},
-        ],
+        {MV_FACT_TXN_APP: (f0, f1), MV_DIM_TXN_APP: (d0, d0)},
     )
     assert n == 0
     assert _mv_state(spark, mp) == state  # nothing double-applied
@@ -487,10 +484,9 @@ def test_join_refresh_concurrent_partial_overlap_raises(spark, tmp_path):
     """A concurrent refresh that advanced the fact watermark INTO a
     stale delta's range forces a recompute (raise), never a silent
     double-apply."""
+    from deltalake_datafusion_spark.delta.mv import apply_signed_rows
     from deltalake_datafusion_spark.delta.mv_join import (
         _join_mv_delta_rows,
-        _merge_signed_rows,
-        _txn,
     )
     from deltalake_datafusion_spark.delta.ops import (
         ConcurrentRefreshError,
@@ -511,25 +507,23 @@ def test_join_refresh_concurrent_partial_overlap_raises(spark, tmp_path):
     # stale maintainer freezes the FULL fact range (f0, f2]
     rows = _join_mv_delta_rows(
         spark, fp, dp, **KW,
-        f_range=(f0 + 1, f2), d_range=None, f_ver=f2, d_ver=d0,
+        f_changes=table_changes(spark, fp, f0 + 1, f2),
+        d_changes=None, f_ver=f2, d_ver=d0,
     ).localCheckpoint(eager=True)
     # concurrent refresh applies only (f0, f1]
     sub = _join_mv_delta_rows(
         spark, fp, dp, **KW,
-        f_range=(f0 + 1, f1), d_range=None, f_ver=f1, d_ver=d0,
+        f_changes=table_changes(spark, fp, f0 + 1, f1),
+        d_changes=None, f_ver=f1, d_ver=d0,
     )
-    _merge_signed_rows(
+    apply_signed_rows(
         spark, mp, sub, KW["group_cols"], KW["sum_cols"],
-        txns=[_txn(MV_FACT_TXN_APP, f1), _txn(MV_DIM_TXN_APP, d0)],
+        {MV_FACT_TXN_APP: (f0, f1), MV_DIM_TXN_APP: (d0, d0)},
     )
     with pytest.raises(ConcurrentRefreshError):
-        _merge_signed_rows(
+        apply_signed_rows(
             spark, mp, rows, KW["group_cols"], KW["sum_cols"],
-            txns=[_txn(MV_FACT_TXN_APP, f2), _txn(MV_DIM_TXN_APP, d0)],
-            guards=[
-                {"appId": MV_FACT_TXN_APP, "applied": f0, "target": f2},
-                {"appId": MV_DIM_TXN_APP, "applied": d0, "target": d0},
-            ],
+            {MV_FACT_TXN_APP: (f0, f2), MV_DIM_TXN_APP: (d0, d0)},
         )
     # the public entry point reconciles from the advanced watermark
     refresh_join_mv(spark, fp, dp, mp, **KW)
@@ -573,10 +567,22 @@ def _mm_expected(spark, fp, dp):
 
 
 def test_join_minmax_full_build(spark, tmp_path):
+    from deltalake_datafusion_spark.delta.mv_join import (
+        streaming_refresh_join_mv,
+    )
+
     fp, dp, m = (str(tmp_path / x) for x in ("f", "d", "m"))
     _bases(spark, fp, dp)
     build_join_mv(spark, fp, dp, m, **MMKW)
     assert _mm_state(spark, m) == _mm_expected(spark, fp, dp)
+    # a refresh that omits the view's MIN/MAX columns would leave the
+    # extrema stale: batch and streaming refuse it up front
+    with pytest.raises(ValueError, match="MIN/MAX"):
+        refresh_join_mv(spark, fp, dp, m, **KW)
+    with pytest.raises(ValueError, match="MIN/MAX"):
+        streaming_refresh_join_mv(
+            spark, fp, dp, m, checkpoint_dir=str(tmp_path / "ck"), **KW
+        )
 
 
 def test_join_minmax_fact_delete_of_extremum_recomputes(spark, tmp_path):
@@ -714,15 +720,8 @@ def test_join_minmax_sql_lifecycle(spark, tmp_path):
 
 
 def test_dim_side_respects_broadcast_threshold(spark):
-    from deltalake_datafusion_spark.delta.mv_join import (
-        _dim_side,
-        _parse_size,
-    )
+    from deltalake_datafusion_spark.delta.mv_join import _dim_side
 
-    assert _parse_size("10MB") == 10 * 1024 * 1024
-    assert _parse_size("10485760b") == 10485760
-    assert _parse_size("-1") == -1
-    assert _parse_size("2kb") == 2048
     df = spark.range(3)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
@@ -783,9 +782,9 @@ def test_semi_join_paths_past_inline_key_ceiling(spark, tmp_path,
     SEMI-JOIN branch without tripping Spark's self-join ambiguity
     check (the lineage-shared key sets are localCheckpointed), and
     stay exactly equivalent to the full recompute."""
-    import deltalake_datafusion_spark.delta.mv_join as mvj
+    import deltalake_datafusion_spark.delta.mv as mv_mod
 
-    monkeypatch.setattr(mvj, "MAX_INLINE_KEYS", 2)
+    monkeypatch.setattr(mv_mod, "MAX_INLINE_KEYS", 2)
     fp, dp, m = (str(tmp_path / x) for x in ("f", "d", "m"))
     _bases(spark, fp, dp)
     build_join_mv(spark, fp, dp, m, **MMKW)
@@ -894,8 +893,8 @@ def test_join_txns_only_commit_revalidates_after_concurrent_txn(
     ledger instead of being rebased over it (which would regress the
     fact watermark and double-apply the range on the next refresh)."""
     import deltalake_datafusion_spark.delta.writer as writer_mod
-    from deltalake_datafusion_spark.delta.mv_join import (
-        _advance_txns_only,
+    from deltalake_datafusion_spark.delta.mv import (
+        _commit_watermarks,
         _txn,
     )
 
@@ -926,13 +925,84 @@ def test_join_txns_only_commit_revalidates_after_concurrent_txn(
         )
 
     monkeypatch.setattr(writer_mod, "commit", racing_commit)
-    _advance_txns_only(
+    _commit_watermarks(
         spark, mv,
-        [_txn(MV_FACT_TXN_APP, f_applied + 2),
-         _txn(MV_DIM_TXN_APP, d_applied)],
-        guards=[{"appId": MV_FACT_TXN_APP, "applied": f_applied,
-                 "target": f_applied + 2}],
+        {MV_FACT_TXN_APP: (f_applied, f_applied + 2),
+         MV_DIM_TXN_APP: (d_applied, d_applied)},
     )
     assert state["raced"]
     wm = join_mv_watermarks(load_snapshot(mv, spark=spark))
     assert wm[0] == f_applied + 5  # not regressed by the loser
+
+
+def test_join_minmax_small_extremum_delete_and_dim_update(spark, tmp_path):
+    """Tier-1 twin of the join-MV min/max refresh on ≤16-row bases: a
+    fact delete that removes a group's maximum plus a dim update that
+    moves standing fact rows between groups, in one refresh."""
+    fp, dp, m = (str(tmp_path / x) for x in ("f", "d", "m"))
+    _bases(spark, fp, dp, n=16, n_dim=4)  # s0 ⊃ fk 0,3: amt 1,51,16,66
+    build_join_mv(spark, fp, dp, m, **MMKW)
+    delete_delta(spark, fp, "id = 13")  # amt 66: s0's maximum
+    update_delta(spark, dp, set_exprs={"seg": "'sx'"}, predicate="dk = 1")
+    res = refresh_join_mv(spark, fp, dp, m, **MMKW)
+    assert res["mode"] == "incremental"
+    st = _mm_state(spark, m)
+    assert st == _mm_expected(spark, fp, dp)
+    assert st["s0"] == (3, 68, 1, 51) and "s1" not in st
+
+
+def test_streaming_join_minmax_matches_full_recompute(spark, tmp_path):
+    """The streaming join refresh maintains MIN/MAX through the same
+    core as the batch one: an appended new maximum and a deleted
+    minimum leave count, sum, min and max equal to the full
+    recompute."""
+    from deltalake_datafusion_spark.delta.mv_join import (
+        streaming_refresh_join_mv,
+    )
+
+    fp, dp, m = (str(tmp_path / x) for x in ("f", "d", "m"))
+    _bases(spark, fp, dp)
+    build_join_mv(spark, fp, dp, m, **MMKW)
+    write_delta(
+        spark,
+        spark.createDataFrame(
+            [(800, 2, 100000)], "id long, fk long, amt long"
+        ),
+        fp, mode="append", configuration=CDF,
+    )
+    delete_delta(spark, fp, "id = 0")  # amt 1: s0's minimum
+    streaming_refresh_join_mv(
+        spark, fp, dp, m, checkpoint_dir=str(tmp_path / "ck"), **MMKW
+    )
+    st = _mm_state(spark, m)
+    assert st == _mm_expected(spark, fp, dp)
+    assert st["s0"][2] == 16 and st["s2"][3] == 100000
+
+
+def test_stream_after_dim_change_then_batch_refresh_no_double_count(
+    spark, tmp_path
+):
+    """The streaming sink joins the dim AS OF the view's dim
+    watermark, not the dim's current version: a dim change that lands
+    before the stream runs is applied once, by the next batch
+    refresh's two-sided algebra — never also by the stream."""
+    from deltalake_datafusion_spark.delta.mv_join import (
+        streaming_refresh_join_mv,
+    )
+
+    fp, dp, m = (str(tmp_path / x) for x in ("f", "d", "m"))
+    _bases(spark, fp, dp)
+    build_join_mv(spark, fp, dp, m, **KW)
+    update_delta(spark, dp, set_exprs={"seg": "'sm'"}, predicate="dk = 2")
+    write_delta(
+        spark,
+        spark.createDataFrame([(900, 2, 100)], "id long, fk long, amt long"),
+        fp, mode="append", configuration=CDF,
+    )
+    streaming_refresh_join_mv(
+        spark, fp, dp, m, checkpoint_dir=str(tmp_path / "ck"), **KW
+    )
+    refresh_join_mv(spark, fp, dp, m, **KW)
+    st = _mv_state(spark, m)
+    assert st == _expected(spark, fp, dp)
+    assert st["s2"] == (6, 906) and st["sm"] == (7, 916)
