@@ -53,12 +53,11 @@ def _physical_names(snap) -> dict[str, str]:
 
 def stage_cdc(spark, snap, cdc_df: DataFrame) -> list[dict]:
     """Write ``cdc_df`` (logical data columns + ``_change_type``) as
-    parquet under ``_change_data/`` and return the cdc actions for the
+    parquet under ``_change_data/`` through the writer's one stager
+    (``writer._stage_and_move``) and return the cdc actions for the
     commit. Data I/O is executor-side; the driver moves file names."""
-    from deltalake_datafusion_spark.delta.fs import fs_for
+    from deltalake_datafusion_spark.delta.writer import _stage_and_move
 
-    table_path = snap.table_path
-    fs = fs_for(table_path, spark)
     if snap.column_mapping_mode != "none":
         l2p = _physical_names(snap)
         cdc_df = cdc_df.select(
@@ -69,32 +68,18 @@ def stage_cdc(spark, snap, cdc_df: DataFrame) -> list[dict]:
             ],
             F.col(CHANGE_TYPE_COL),
         )
-    staging = os.path.join(table_path, CDF_DIR, f"_stage_{uuid.uuid4().hex}")
-    cdc_df.write.mode("overwrite").parquet(staging)
-    actions: list[dict] = []
-    st_fs = fs_for(staging, spark)
-    for st in st_fs.list_recursive(staging):
-        if st.is_dir or not st.path.endswith(".parquet"):
-            continue
-        rel = os.path.join(CDF_DIR, f"cdc-{uuid.uuid4().hex}.snappy.parquet")
-        fs.rename(st.path, os.path.join(table_path, rel))
-        actions.append(
-            {
-                "cdc": {
-                    "path": rel,
-                    "partitionValues": {},
-                    # size from the pre-move listing (rename preserves
-                    # it) — never a local stat of the moved object, so
-                    # this works on HDFS/S3 via HadoopFS too
-                    "size": st.size,
-                    "dataChange": False,
-                }
-            }
-        )
-    for st in sorted(st_fs.list_recursive(staging), key=lambda s: -len(s.path)):
-        fs.delete(st.path)
-    fs.delete(staging)
-    return actions
+    moved = _stage_and_move(
+        spark, cdc_df, snap.table_path, f"{CDF_DIR}/_stage_",
+        part_dir=CDF_DIR,
+        name=lambda _i, _n: f"cdc-{uuid.uuid4().hex}.snappy.parquet",
+    )
+    # size from the pre-move listing (rename preserves it) — never a
+    # local stat of the moved object, so HDFS/S3 work via HadoopFS too
+    return [
+        {"cdc": {"path": rel, "partitionValues": {}, "size": size,
+                 "dataChange": False}}
+        for rel, _pv, size, _mt in moved
+    ]
 
 
 def _with_commit_meta(df: DataFrame, version: int, ts_ms: int) -> DataFrame:

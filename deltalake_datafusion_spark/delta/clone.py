@@ -82,6 +82,7 @@ def clone_delta(
         _metadata_action,
         _url_encode_path,
         commit,
+        state_actions,
     )
 
     src_root = strip_scheme(src_path)
@@ -106,22 +107,7 @@ def clone_delta(
         )
     snap = load_snapshot(src_root, version=version, spark=spark)
 
-    proto = {
-        "protocol": {
-            "minReaderVersion": snap.protocol.min_reader_version,
-            "minWriterVersion": snap.protocol.min_writer_version,
-            **(
-                {"readerFeatures": snap.protocol.reader_features}
-                if snap.protocol.reader_features
-                else {}
-            ),
-            **(
-                {"writerFeatures": snap.protocol.writer_features}
-                if snap.protocol.writer_features
-                else {}
-            ),
-        }
-    }
+    proto = state_actions(snap)[0]
     md = _metadata_action(
         snap.schema,
         snap.partition_columns,

@@ -113,6 +113,27 @@ def high_water_mark_from_stats(
     return best
 
 
+def advance_hwm_from_adds(
+    schema: StructType, adds: list[dict], steps: dict[str, int]
+) -> tuple[StructType, dict[str, int]]:
+    """``schema`` with each minted identity column's high-water mark
+    advanced from the stats of the data files a write produced
+    (``adds``: its add actions; ``steps``: {column: step}), plus
+    {column: new hwm} for the columns that advanced. Stats are keyed
+    by physical column name."""
+    stats = [a["add"].get("stats") for a in adds]
+    advanced: dict[str, int] = {}
+    for c, step in steps.items():
+        phys = (schema[c].metadata or {}).get(
+            "delta.columnMapping.physicalName", c
+        )
+        hwm = high_water_mark_from_stats(stats, phys, step)
+        if hwm is not None:
+            schema = schema_with_hwm(schema, c, hwm)
+            advanced[c] = hwm
+    return schema, advanced
+
+
 def schema_with_hwm(
     schema: StructType, column: str, hwm: int
 ) -> StructType:

@@ -101,15 +101,6 @@ def _dim_side(spark, df: DataFrame, dim_bytes: int | None) -> DataFrame:
     return F.broadcast(df)
 
 
-def _delta_bytes(spark, path: str, version: int | None = None) -> int:
-    """On-disk bytes of a Delta table at a version (Σ add-file
-    sizes) — one driver-side log replay, no data read."""
-    from deltalake_datafusion_spark.delta.snapshot import load_snapshot
-
-    snap = load_snapshot(path, version=version, spark=spark)
-    return sum(f.size for f in snap.files)
-
-
 def join_mv_watermarks(mv_snap) -> tuple[int, int] | None:
     """(applied fact version, applied dim version) from the view's
     SetTransaction ledger; None → not a maintained join view."""
@@ -246,8 +237,11 @@ def refresh_join_mv(
         _, (f_applied, d_applied) = _maintained_view(
             spark, mv_path, minmax_cols, join_mv_watermarks
         )
-        f_ver = load_snapshot(fact_path, spark=spark).version
-        d_ver = load_snapshot(dim_path, spark=spark).version
+        # each base loaded ONCE per attempt: these snapshots pin the
+        # target versions and serve every schema / size read below
+        f_snap = load_snapshot(fact_path, spark=spark)
+        d_snap = load_snapshot(dim_path, spark=spark)
+        f_ver, d_ver = f_snap.version, d_snap.version
         if f_ver <= f_applied and d_ver <= d_applied:
             return {
                 "fact_version": f_applied,
@@ -256,7 +250,7 @@ def refresh_join_mv(
                 "groups_touched": 0,
             }
         n_groups = _apply_join_changes(
-            spark, fact_path, dim_path, mv_path,
+            spark, f_snap, d_snap, mv_path,
             fact_key=fact_key, dim_key=dim_key, group_cols=group_cols,
             sum_cols=sum_cols, minmax_cols=minmax_cols,
             f_changes=(
@@ -267,8 +261,8 @@ def refresh_join_mv(
                 table_changes(spark, dim_path, d_applied + 1, d_ver)
                 if d_ver > d_applied else None
             ),
-            f_wm=(f_applied, f_ver),
-            d_wm=(d_applied, d_ver),
+            f_applied=f_applied,
+            d_applied=d_applied,
         )
         return {
             "fact_version": f_ver,
@@ -309,6 +303,8 @@ def streaming_refresh_join_mv(
     shared lineage-independent guard of
     :func:`delta.mv._drive_change_stream` on the ``lakehouse.mv.fact``
     watermark."""
+    from deltalake_datafusion_spark.delta.snapshot import load_snapshot
+
     minmax_cols = list(minmax_cols or [])
     _, (f_applied, _) = _maintained_view(
         spark, mv_path, minmax_cols, join_mv_watermarks
@@ -317,11 +313,14 @@ def streaming_refresh_join_mv(
     def apply(snap, fresh, applied, hi):
         d_applied = join_mv_watermarks(snap)[1]
         _apply_join_changes(
-            spark, fact_path, dim_path, mv_path,
+            spark,
+            load_snapshot(fact_path, version=hi, spark=spark),
+            load_snapshot(dim_path, version=d_applied, spark=spark),
+            mv_path,
             fact_key=fact_key, dim_key=dim_key, group_cols=group_cols,
             sum_cols=sum_cols, minmax_cols=minmax_cols,
             f_changes=fresh, d_changes=None,
-            f_wm=(applied, hi), d_wm=(d_applied, d_applied),
+            f_applied=applied, d_applied=d_applied,
         )
 
     _drive_change_stream(
@@ -333,8 +332,8 @@ def streaming_refresh_join_mv(
 
 def _apply_join_changes(
     spark,
-    fact_path: str,
-    dim_path: str,
+    f_snap,
+    d_snap,
     mv_path: str,
     *,
     fact_key: str,
@@ -344,26 +343,29 @@ def _apply_join_changes(
     minmax_cols: list[str],
     f_changes: DataFrame | None,
     d_changes: DataFrame | None,
-    f_wm: tuple[int, int],
-    d_wm: tuple[int, int],
+    f_applied: int,
+    d_applied: int,
 ) -> int:
-    """Apply fact/dim change frames covering each watermark's
-    ``(applied, target]`` range to the view through the shared core;
-    returns the number of touched groups."""
-    f_ver, d_ver = f_wm[1], d_wm[1]
+    """Apply fact/dim change frames covering ``(applied, target]`` of
+    each base to the view through the shared core; the targets are the
+    versions of ``f_snap``/``d_snap`` — the attempt's one snapshot per
+    base, passed down to every schema, size and pinned read. Returns
+    the number of touched groups."""
+    kw = dict(fact_key=fact_key, dim_key=dim_key, group_cols=group_cols)
     rows = _join_mv_delta_rows(
-        spark, fact_path, dim_path,
-        fact_key=fact_key, dim_key=dim_key, group_cols=group_cols,
+        spark, f_snap, d_snap, **kw,
         sum_cols=sum_cols, minmax_cols=minmax_cols,
-        f_changes=f_changes, d_changes=d_changes, f_ver=f_ver, d_ver=d_ver,
+        f_changes=f_changes, d_changes=d_changes,
     )
     return apply_signed_rows(
         spark, mv_path, rows, group_cols, sum_cols,
-        {MV_FACT_TXN_APP: f_wm, MV_DIM_TXN_APP: d_wm},
+        {
+            MV_FACT_TXN_APP: (f_applied, f_snap.version),
+            MV_DIM_TXN_APP: (d_applied, d_snap.version),
+        },
         minmax_cols,
         lambda _keys, keys_df: _recompute_join_groups(
-            spark, fact_path, dim_path, f_ver, d_ver,
-            fact_key=fact_key, dim_key=dim_key, group_cols=group_cols,
+            spark, f_snap, d_snap, **kw,
             minmax_cols=minmax_cols, keys_df=keys_df,
         ),
     )
@@ -371,8 +373,8 @@ def _apply_join_changes(
 
 def _join_mv_delta_rows(
     spark,
-    fact_path: str,
-    dim_path: str,
+    f_snap,
+    d_snap,
     *,
     fact_key: str,
     dim_key: str,
@@ -380,8 +382,6 @@ def _join_mv_delta_rows(
     sum_cols: list[str],
     f_changes: DataFrame | None,
     d_changes: DataFrame | None,
-    f_ver: int,
-    d_ver: int,
     minmax_cols: list[str] | None = None,
 ) -> DataFrame:
     """The signed joined-row delta set (group cols + measure cols +
@@ -394,26 +394,22 @@ def _join_mv_delta_rows(
       the CURRENT FACT TABLE IS NEVER OPENED (the unit guard
       ``test_fact_only_refresh_never_scans_fact`` pins this).
 
-    ``f_ver``/``d_ver`` are the TARGET versions the watermarks will
-    advance to; the "current" fact/dim reads of terms 1 and 2 are
-    PINNED to them (ADVICE r10: an unpinned read would include rows
+    ``f_snap``/``d_snap`` are the bases AT the TARGET versions the
+    watermarks will advance to; the "current" fact/dim reads of terms
+    1 and 2 are PINNED to them (ADVICE r10: an unpinned read would include rows
     of a commit landing between the snapshot load and term
     evaluation — beyond the recorded watermark — which the next
     refresh's delta algebra would then re-apply, double-counting).
     """
     from deltalake_datafusion_spark.delta.scan import read_delta
-    from deltalake_datafusion_spark.delta.snapshot import load_snapshot
 
-    fact_fields = [
-        f.name for f in load_snapshot(fact_path, spark=spark).schema.fields
-    ]
-    dim_fields = [
-        f.name for f in load_snapshot(dim_path, spark=spark).schema.fields
-    ]
+    fact_path, f_ver = f_snap.table_path, f_snap.version
+    dim_path, d_ver = d_snap.table_path, d_snap.version
+    fact_fields = set(f_snap.schema.fieldNames())
     fact_g, dim_g = _split_group_cols(
-        group_cols, set(fact_fields), set(dim_fields)
+        group_cols, fact_fields, set(d_snap.schema.fieldNames())
     )
-    _validate_minmax_cols(minmax_cols, set(fact_fields))
+    _validate_minmax_cols(minmax_cols, fact_fields)
     val_cols = list(dict.fromkeys([*sum_cols, *(minmax_cols or [])]))
     f_cols = sorted({fact_key, *fact_g, *val_cols})
     d_cols = sorted({dim_key, *dim_g})
@@ -421,7 +417,7 @@ def _join_mv_delta_rows(
     fact_side_cols = {*fact_g, *val_cols}
     # size hint for every dim-side join in the algebra (CDF tails are
     # bounded by the same scale as the table itself)
-    d_bytes = _delta_bytes(spark, dim_path, d_ver)
+    d_bytes = sum(f.size for f in d_snap.files)
 
     def _term(fact_side: DataFrame, dim_side: DataFrame, sign_expr):
         j = fact_side.join(
@@ -506,10 +502,8 @@ def _join_mv_delta_rows(
 
 def _recompute_join_groups(
     spark,
-    fact_path: str,
-    dim_path: str,
-    f_ver: int,
-    d_ver: int,
+    f_snap,
+    d_snap,
     *,
     fact_key: str,
     dim_key: str,
@@ -526,22 +520,20 @@ def _recompute_join_groups(
     groups), never the table. Fact-side group values add a second
     pushed predicate/semi-join."""
     from deltalake_datafusion_spark.delta.scan import read_delta
-    from deltalake_datafusion_spark.delta.snapshot import load_snapshot
 
-    fact_fields = {
-        f.name for f in load_snapshot(fact_path, spark=spark).schema.fields
-    }
-    dim_fields = {
-        f.name for f in load_snapshot(dim_path, spark=spark).schema.fields
-    }
-    fact_g, dim_g = _split_group_cols(group_cols, fact_fields, dim_fields)
-
-    d_bytes = _delta_bytes(spark, dim_path, d_ver)
-    dim = read_delta(spark, dim_path, version=d_ver)
+    fact_g, dim_g = _split_group_cols(
+        group_cols,
+        set(f_snap.schema.fieldNames()),
+        set(d_snap.schema.fieldNames()),
+    )
+    d_bytes = sum(f.size for f in d_snap.files)
+    dim = read_delta(spark, d_snap.table_path, version=d_snap.version)
     if dim_g:
         dim = _nullsafe_semi_join(dim, keys_df.select(*dim_g), dim_g)
     pred = _key_predicate(_distinct_keys(dim, dim_key), fact_key)
-    fact = read_delta(spark, fact_path, version=f_ver, predicate=pred)
+    fact = read_delta(
+        spark, f_snap.table_path, version=f_snap.version, predicate=pred
+    )
     if pred is not None:
         fact = fact.filter(F.expr(pred))
     else:

@@ -25,8 +25,8 @@ shipping compressed blobs and one driver-written packed DV file.
 
 from __future__ import annotations
 
+import logging
 import os
-import uuid
 from collections import defaultdict
 
 from pyspark.sql import functions as F
@@ -41,7 +41,7 @@ from deltalake_datafusion_spark.delta.stats import parse_stats
 from deltalake_datafusion_spark.delta.writer import (
     ConcurrentWriteError,
     _dv_to_json,
-    _now_ms,
+    _remove_action,
     _url_encode_path,
     check_writable,
     commit,
@@ -56,6 +56,9 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+
+_log = logging.getLogger(__name__)
 
 
 class MergeCardinalityError(Exception):
@@ -210,19 +213,24 @@ def _with_field_id_restore(spark, fn):
 def _cleanup_staged_adds(spark, table_path: str, actions: list[dict]) -> None:
     """Best-effort delete of the data files a failed attempt staged
     into the table (its add/cdc actions never committed, so nothing
-    references them; DV sidecars are tiny and left for VACUUM)."""
-    try:
-        fs = fs_for(table_path, spark)
-        for a in actions:
-            body = a.get("add") or a.get("cdc")
-            if body and not body.get("deletionVector"):
-                import urllib.parse as _up
+    references them; DV sidecars are tiny and left for VACUUM). A file
+    that cannot be deleted is logged and left for VACUUM."""
+    import urllib.parse as _up
 
-                fs.delete(
-                    os.path.join(table_path, _up.unquote(body["path"]))
-                )
-    except Exception:
-        pass
+    from py4j.protocol import Py4JError
+
+    fs = fs_for(table_path, spark)
+    for a in actions:
+        body = a.get("add") or a.get("cdc")
+        if body and not body.get("deletionVector"):
+            path = os.path.join(table_path, _up.unquote(body["path"]))
+            try:
+                if fs.delete(path):
+                    continue
+                why = "delete returned false"
+            except (OSError, Py4JError) as e:
+                why = e
+            _log.warning("staged file %s left for VACUUM: %s", path, why)
 
 
 def _nested_field_type(schema, dotted: str):
@@ -237,18 +245,6 @@ def _nested_field_type(schema, dotted: str):
             return None
         t = t[part].dataType
     return t
-
-
-def _ow_enabled(snap) -> bool:
-    """delta.autoOptimize.optimizeWrite from the table configuration."""
-    from deltalake_datafusion_spark.delta.writer import OPTIMIZE_WRITE_PROP
-
-    return (
-        str(
-            snap.metadata.configuration.get(OPTIMIZE_WRITE_PROP, "false")
-        ).lower()
-        == "true"
-    )
 
 
 def _reject_generated_set(schema, set_exprs: dict, op: str) -> None:
@@ -798,11 +794,7 @@ def _update_attempt(
     spark, table_path: str, set_exprs: dict[str, str],
     predicate: str | None = None,
 ) -> dict:
-    from deltalake_datafusion_spark.delta.constraints import (
-        check_append_only,
-        table_constraints,
-        validate_constraints,
-    )
+    from deltalake_datafusion_spark.delta.constraints import check_append_only
 
     if predicate is None:
         predicate = "true"
@@ -891,48 +883,26 @@ def _update_attempt(
                     ).cast(_gf.dataType),
                 )
         updated = updated.drop("__row_index", "__file_path")
-        # CHECK constraints validate up front; NOT NULL invariants verify
-        # from the staged files' footer nullCount stats (no second pass
-        # over the update plan)
-        validate_constraints(
-            updated, table_constraints(snap.metadata.configuration)
-        )
-        from deltalake_datafusion_spark.delta.constraints import (
-            notnull_columns_to_verify as _nncv,
-            verify_notnull_from_stats as _vnns,
-        )
-
-        _nn_verify = _nncv(snap.schema, updated)
-
-        from deltalake_datafusion_spark.delta.writer import _stage_and_move
-
-        # New files with the updated rows (physical projection if mapped).
-        # Row tracking: each updated copy persists its pre-update stable id
-        # in the materialized column, so _row_id survives the UPDATE.
-        from deltalake_datafusion_spark.delta.writer import _rename_to_physical
+        # New files with the updated rows. Row tracking: each updated
+        # copy persists its pre-update stable id in the materialized
+        # column, so _row_id survives the UPDATE.
+        from deltalake_datafusion_spark.delta.writer import write_data_files
 
         logical = snap.schema
+        extra = [rt_mat] if rt_mat else []
         if rt_mat:
             updated = updated.withColumn(rt_mat, F.col("__old_row_id"))
-        keep = list(logical.fieldNames()) + ([rt_mat] if rt_mat else [])
-        out_df = (
-            _rename_to_physical(
-                updated.select(*keep), logical,
-                extra_cols=[rt_mat] if rt_mat else None,
-                field_ids=snap.column_mapping_mode == "id",
-            )
-            if snap.column_mapping_mode != "none"
-            else updated.select(*keep)
+        adds = write_data_files(
+            spark, updated.select(*logical.fieldNames(), *extra),
+            snap.table_path, logical, snap.partition_columns,
+            snap.metadata.configuration, snap.column_mapping_mode,
+            extra_cols=extra,
         )
-        phys = physical_schema(logical)
-        phys_parts = [
-            phys.fields[logical.fieldNames().index(p)].name
-            for p in snap.partition_columns
-        ]
-        moved = _stage_and_move(
-            spark, out_df, snap.table_path, phys_parts,
-            optimize_write=_ow_enabled(snap),
-        )
+        if not adds:
+            # no row matched: nothing to delete, nothing to commit
+            return {
+                "rows_updated": 0, "files_added": 0, "version": snap.version,
+            }
 
         # DV the old copies of the matched rows — PLANNED against the same
         # snapshot, committed together with the replacement adds in ONE
@@ -960,52 +930,6 @@ def _update_attempt(
             )
             cdc_actions = stage_cdc(spark, snap, pre.unionByName(post))
 
-    adds = []
-    p2l = dict(zip(phys_parts, snap.partition_columns))
-    from deltalake_datafusion_spark.delta.stats import (
-        collect_stats_batch,
-        data_skipping_stats_columns,
-    )
-
-    stats_by_rel = collect_stats_batch(
-        spark,
-        snap.table_path,
-        [(rel, size) for rel, _pv, size, _mt in moved],
-        skip_columns=set(phys_parts) | ({rt_mat} if rt_mat else set()),
-        stats_columns=data_skipping_stats_columns(
-            logical, snap.metadata.configuration
-        ),
-    )
-    if _nn_verify:
-        from deltalake_datafusion_spark.delta.fs import fs_for as _ffv
-
-        try:
-            _vnns(
-                spark, snap.table_path, _nn_verify, moved, stats_by_rel,
-                logical, snap.partition_columns, _ffv(snap.table_path, spark),
-            )
-        except Exception:
-            # _vnns deleted the replacement adds; the staged CDC files
-            # (full pre/post images) would otherwise leak until VACUUM
-            # (ADVICE r12). DV sidecars stay — tiny, vacuum-cleanable,
-            # same policy as _cleanup_staged_adds.
-            _cleanup_staged_adds(spark, snap.table_path, cdc_actions)
-            raise
-    for rel, pv_phys, size, mtime_ms in moved:
-        stats = stats_by_rel[rel]
-        pv = {p2l.get(k, k): v for k, v in pv_phys.items()}
-        adds.append(
-            {
-                "add": {
-                    "path": _url_encode_path(rel),
-                    "partitionValues": pv,
-                    "size": size,
-                    "modificationTime": mtime_ms,
-                    "dataChange": True,
-                    "stats": stats,
-                }
-            }
-        )
     from deltalake_datafusion_spark.delta.writer import (
         ConcurrentModificationError,
         commit_with_retries,
@@ -1916,8 +1840,6 @@ def _merge_attempt(
         if _cdf_on:
             cdc_parts.append(inserts.withColumn(_CT, F.lit("insert")))
 
-    n_inserted = 0
-    moved: list = []
     actions: list[dict] = [md_action] if md_action is not None else []
     if dv_enc is not None:
         # DV strategy: only files that actually lost rows are touched
@@ -1932,122 +1854,40 @@ def _merge_attempt(
         modified_paths = {f.path for f in touched}
         n_modified = len(touched)
     if new_parts:
+        from deltalake_datafusion_spark.delta.writer import write_data_files
+
         out = new_parts[0]
         for p in new_parts[1:]:
             out = out.unionByName(p)
-        from deltalake_datafusion_spark.delta.constraints import (
-            notnull_columns_to_verify as _m_nncv,
-            table_constraints,
-            validate_constraints,
-            verify_notnull_from_stats as _m_vnns,
-        )
-
-        # CHECK constraints validate up front; NOT NULL invariants
-        # verify from the staged files' footer nullCount stats (no
-        # second execution of the merge plan)
-        validate_constraints(
-            out, table_constraints(snap.metadata.configuration)
-        )
-        _m_nn_verify = _m_nncv(logical, out)
-        from deltalake_datafusion_spark.delta.writer import (
-            _rename_to_physical,
-            _stage_and_move,
-        )
-
-        extra_phys = []
+        extra = []
         if rt_mat:
             out = out.withColumnRenamed("__old_row_id", rt_mat)
-            extra_phys.append(rt_mat)
+            extra.append(rt_mat)
         if rt_ver:
             out = out.withColumnRenamed("__old_row_commit", rt_ver)
-            extra_phys.append(rt_ver)
-        out_df = (
-            _rename_to_physical(
-                out, logical, extra_cols=extra_phys or None,
-                field_ids=snap.column_mapping_mode == "id",
-            )
-            if snap.column_mapping_mode != "none"
-            else out
+            extra.append(rt_ver)
+        adds = write_data_files(
+            spark, out, snap.table_path, logical, snap.partition_columns,
+            snap.metadata.configuration, snap.column_mapping_mode,
+            extra_cols=extra,
         )
-        phys = physical_schema(logical)
-        phys_parts = [
-            phys.fields[logical.fieldNames().index(p)].name
-            for p in snap.partition_columns
-        ]
-        moved = _stage_and_move(
-            spark, out_df, snap.table_path, phys_parts,
-            optimize_write=_ow_enabled(snap),
-        )
-        p2l = dict(zip(phys_parts, snap.partition_columns))
-        from deltalake_datafusion_spark.delta.stats import (
-            collect_stats_batch as _csb,
-            data_skipping_stats_columns as _dssc,
-        )
-
-        stats_by_rel = _csb(
-            spark,
-            snap.table_path,
-            [(rel, size) for rel, _pv, size, _mt in moved],
-            skip_columns=set(phys_parts) | set(extra_phys),
-            stats_columns=_dssc(logical, snap.metadata.configuration),
-        )
-        from deltalake_datafusion_spark.delta.fs import fs_for as _ff
-
-        if _m_nn_verify:
-            _m_vnns(
-                spark, snap.table_path, _m_nn_verify, moved, stats_by_rel,
-                logical, snap.partition_columns, _ff(snap.table_path, spark),
-            )
-        _mfs = None
-        for rel, pv_phys, size, mtime_ms in moved:
-            stats = stats_by_rel[rel]
-            st = parse_stats(stats)
-            if st is not None and st.get("numRecords") == 0:
-                # empty staging part (e.g. a no-insert MERGE): don't
-                # commit a zero-row file
-                if _mfs is None:
-                    _mfs = _ff(snap.table_path, spark)
-                _mfs.delete(os.path.join(snap.table_path, rel))
-                continue
-            pv = {p2l.get(k, k): v for k, v in pv_phys.items()}
-            actions.append(
-                {
-                    "add": {
-                        "path": _url_encode_path(rel),
-                        "partitionValues": pv,
-                        "size": size,
-                        "modificationTime": mtime_ms,
-                        "dataChange": True,
-                        "stats": stats,
-                    }
-                }
-            )
+        actions.extend(adds)
         if _ident_assigned:
             # advance the minted columns' high-water marks from the
             # written footer stats, riding this commit's metaData
             import json as _json
 
             from deltalake_datafusion_spark.delta.identity import (
-                high_water_mark_from_stats,
-                schema_with_hwm,
+                advance_hwm_from_adds,
             )
             from deltalake_datafusion_spark.delta.writer import (
                 _metadata_action as _md_act,
             )
 
-            stats_list = [
-                a["add"]["stats"] for a in actions if a.get("add")
-            ]
-            new_schema = logical
-            changed = False
-            for c, step in _ident_assigned.items():
-                li = logical.fieldNames().index(c)
-                pn = phys.fields[li].name
-                hwm = high_water_mark_from_stats(stats_list, pn, step)
-                if hwm is not None:
-                    new_schema = schema_with_hwm(new_schema, c, hwm)
-                    changed = True
-            if changed:
+            new_schema, advanced = advance_hwm_from_adds(
+                logical, adds, _ident_assigned
+            )
+            if advanced:
                 if md_action is not None:
                     md_action["metaData"]["schemaString"] = _json.dumps(
                         new_schema.jsonValue()
@@ -2482,10 +2322,9 @@ def _optimize_attempt(
         )
         if rt_cols else data_schema
     )
-    fs = fs_for(snap.table_path, spark)
+    from deltalake_datafusion_spark.delta.writer import write_data_files
 
     def _rewrite_group(key, group) -> list[dict]:
-        group_actions: list[dict] = []
         total = sum(f.size for f in group)
         n_out = max(1, -(-total // target_file_size))
         paths = [os.path.join(snap.table_path, f.path) for f in group]
@@ -2534,62 +2373,12 @@ def _optimize_attempt(
         else:
             df = df.coalesce(n_out)
 
-        if id_mode:
-            from deltalake_datafusion_spark.delta.writer import (
-                stamp_field_ids,
-            )
-
-            df = stamp_field_ids(df, logical)
-        staging = os.path.join(snap.table_path, f"_optimize_{uuid.uuid4().hex}")
-        df.write.mode("overwrite").parquet(staging)
-        pv = dict(key)
-        part_dir = "/".join(f"{k}={v}" for k, v in key if v is not None)
-        renamed: list[tuple[str, int, int]] = []
-        for st in fs.list_recursive(staging):
-            if st.is_dir or not st.path.endswith(".parquet"):
-                continue
-            new_name = f"part-{uuid.uuid4().hex}.snappy.parquet"
-            rel = os.path.join(part_dir, new_name) if part_dir else new_name
-            fs.rename(st.path, os.path.join(snap.table_path, rel))
-            # size/mtime from the pre-move listing — the rename
-            # preserves both; no local-FS stat
-            renamed.append((rel, st.size, st.mtime_ms))
-        from deltalake_datafusion_spark.delta.stats import (
-            collect_stats_batch as _csb,
-            data_skipping_stats_columns as _dssc2,
+        group_actions = write_data_files(
+            spark, df, snap.table_path, logical, part_cols,
+            snap.metadata.configuration, snap.column_mapping_mode,
+            extra_cols=rt_cols, data_change=False, tags=cluster_tag,
+            partition_values=dict(key),
         )
-
-        stats_by_rel = _csb(
-            spark,
-            snap.table_path,
-            [(rel, size) for rel, size, _mt in renamed],
-            skip_columns=set(
-                phys.fields[logical.fieldNames().index(p)].name
-                for p in part_cols
-            ) | set(rt_cols),
-            stats_columns=_dssc2(logical, snap.metadata.configuration),
-        )
-        for rel, size, mtime_ms in renamed:
-            group_actions.append(
-                {
-                    "add": {
-                        "path": _url_encode_path(rel),
-                        "partitionValues": pv,
-                        "size": size,
-                        "modificationTime": mtime_ms,
-                        "dataChange": False,
-                        "stats": stats_by_rel[rel],
-                        **(
-                            {"tags": cluster_tag}
-                            if cluster_tag is not None
-                            else {}
-                        ),
-                    }
-                }
-            )
-        for st in sorted(fs.list_recursive(staging), key=lambda s: -len(s.path)):
-            fs.delete(st.path)
-        fs.delete(staging)
         for f in group:
             a = _remove_action(f)
             a["remove"]["dataChange"] = False
@@ -2861,20 +2650,6 @@ def _row_id_fields(f) -> dict:
     if getattr(f, "tags", None):
         out["tags"] = f.tags
     return out
-
-
-def _remove_action(f) -> dict:
-    return {
-        "remove": {
-            "path": _url_encode_path(f.path),
-            "deletionTimestamp": _now_ms(),
-            "dataChange": True,
-            "extendedFileMetadata": True,
-            "partitionValues": f.partition_values,
-            "size": f.size,
-            **({"deletionVector": _dv_to_json(f.dv)} if f.dv else {}),
-        }
-    }
 
 
 def _relativize(file_path: str, table_path: str) -> str:

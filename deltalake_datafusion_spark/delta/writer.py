@@ -23,6 +23,7 @@ field metadata, exercising the dual logical/physical schema machinery
 from __future__ import annotations
 
 import json
+import logging
 import os
 import time
 import uuid
@@ -47,6 +48,8 @@ from deltalake_datafusion_spark.delta.snapshot import (
     load_snapshot,
 )
 from deltalake_datafusion_spark.delta.stats import collect_stats_batch
+
+_log = logging.getLogger(__name__)
 
 
 class DeltaWriteError(Exception):
@@ -998,77 +1001,234 @@ def _add_body_as_file(body: dict, decoded_path: str):
 OPTIMIZE_WRITE_PROP = "delta.autoOptimize.optimizeWrite"
 
 
+def _part_name(_i: int, _n: int) -> str:
+    return f"part-{uuid.uuid4().hex}.snappy.parquet"
+
+
 def _stage_and_move(
     spark,
     df: DataFrame,
-    table_path: str,
-    partition_by: list[str],
+    root: str,
+    staging_prefix: str = "_staging_",
+    *,
+    name=_part_name,
+    part_dir: str = "",
+    partition_by: list[str] | None = None,
     max_records_per_file: int | None = None,
-    optimize_write: bool = False,
 ) -> list[tuple[str, dict[str, str | None], int, int]]:
-    """Write data via Spark into a staging dir, then move part-files to
-    their final (unique) names under the table root. Returns
-    [(relative_path, partitionValues, size, mtime_ms)] — size/mtime
-    come from the pre-move listing (rename preserves them), so callers
-    never re-stat: no per-file os.stat (breaks on object stores) and
-    no extra HEAD round-trip per file at 100k-file scale.
+    """THE write-out step of every staged Delta file — data, CDC and
+    checkpoint parts: write ``df`` as parquet into a unique staging
+    dir ``root/<staging_prefix><uuid>``, rename each part file to its
+    final name under ``root``, then remove the staging skeleton.
+    Nothing is visible to readers until a log commit references the
+    moved files.
 
-    ``optimize_write`` (``delta.autoOptimize.optimizeWrite``): the
-    pre-write shuffle becomes an AQE REBALANCE — partitions are
-    coalesced toward ``spark.sql.adaptive.advisoryPartitionSizeInBytes``
-    AND oversized/skewed ones are split, so an unpartitioned append
-    from a 2000-task upstream lands a handful of right-sized files
-    instead of 2000 shards, and a hot partition value still splits
-    across files (plain hash repartition would serialize it)."""
-    fs = fs_for(table_path, spark)
-    staging = os.path.join(table_path, f"_staging_{uuid.uuid4().hex}")
-    if optimize_write:
-        from pyspark.sql import functions as F
+    Final names: ``name(i, n)`` for the i-th of n part files (in
+    listing order), placed under ``part_dir`` when given, else under
+    the hive directories ``partition_by`` wrote. Returns
+    ``[(rel, partitionValues, size, mtime_ms)]`` with ``rel`` relative
+    to ``root`` and partitionValues parsed from the hive directories
+    (physical names). size/mtime come from the pre-move listing
+    (rename preserves them), so callers never re-stat: no per-file
+    os.stat (breaks on object stores) and no extra HEAD round-trip per
+    file at 100k-file scale."""
+    import urllib.parse as up
 
-        df = df.hint("rebalance", *[F.col(f"`{p}`") for p in partition_by])
-    elif partition_by:
-        # Cluster rows by partition value before the write so each
-        # partition yields a handful of right-sized files instead of
-        # (shuffle.partitions × values) tiny ones. At 100 TB the
-        # repartition cost is one shuffle; the small-files cost is
-        # paid by every future scan.
-        df = df.repartition(*[f"`{p}`" for p in partition_by])
+    from deltalake_datafusion_spark.delta.fs import fs_for as _fs_for
+
+    fs = _fs_for(root, spark)
+    stage_name = f"{staging_prefix}{uuid.uuid4().hex}"
+    staging = os.path.join(root, stage_name)
     writer = df.write.mode("overwrite")
     if max_records_per_file:
-        # Upper-bound file sizes even after optimize-write clustering —
-        # a partition holding TBs must still split into many files.
         writer = writer.option("maxRecordsPerFile", max_records_per_file)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    writer.parquet(staging)
-
-    import urllib.parse as up
-
     moved: list[tuple[str, dict[str, str | None], int, int]] = []
-    for st in fs_for(staging, spark).list_recursive(staging):
-        if st.is_dir or not st.path.endswith(".parquet"):
-            continue
-        rel = os.path.relpath(st.path, staging)
-        part_values: dict[str, str | None] = {}
-        segs = rel.split(os.sep)[:-1]
-        for seg in segs:
-            if "=" in seg:
-                k, v = seg.split("=", 1)
-                part_values[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else up.unquote(v)
-        new_name = f"part-{uuid.uuid4().hex}.snappy.parquet"
-        rel_dir = os.sep.join(segs)
-        final_rel = os.path.join(rel_dir, new_name) if rel_dir else new_name
-        fs.rename(st.path, os.path.join(table_path, final_rel))
-        moved.append((final_rel, part_values, st.size, st.mtime_ms))
-
-    # Clean the staging skeleton (best-effort).
-    for st in sorted(
-        fs_for(staging, spark).list_recursive(staging),
-        key=lambda s: -len(s.path),
-    ):
-        fs.delete(st.path)
-    fs.delete(staging)
+    try:
+        writer.parquet(staging)
+        parts = [
+            st for st in fs.list_recursive(staging)
+            if not st.is_dir and st.path.endswith(".parquet")
+        ]
+        if part_dir:
+            fs.mkdirs(os.path.join(root, part_dir))
+        for i, st in enumerate(parts):
+            # path below the staging dir; split on the unique dir name
+            # so a scheme-qualified listing (HadoopFS) parses the same
+            segs = st.path.split(stage_name + "/", 1)[1].split("/")[:-1]
+            pv: dict[str, str | None] = {}
+            for seg in segs:
+                if "=" in seg:
+                    k, v = seg.split("=", 1)
+                    pv[k] = (
+                        None if v == "__HIVE_DEFAULT_PARTITION__"
+                        else up.unquote(v)
+                    )
+            rel = os.path.join(part_dir or "/".join(segs), name(i, len(parts)))
+            fs.rename(st.path, os.path.join(root, rel))
+            moved.append((rel, pv, st.size, st.mtime_ms))
+    finally:
+        for st in sorted(
+            fs.list_recursive(staging), key=lambda s: -len(s.path)
+        ):
+            fs.delete(st.path)
+        fs.delete(staging)
     return moved
+
+
+def write_data_files(
+    spark,
+    df: DataFrame,
+    table_path: str,
+    schema: StructType,
+    partition_cols: list[str],
+    configuration: dict[str, str],
+    mapping_mode: str = "none",
+    *,
+    extra_cols: list[str] | None = None,
+    data_change: bool = True,
+    tags: dict[str, str] | None = None,
+    partition_values: dict[str, str | None] | None = None,
+    max_records_per_file: int | None = None,
+) -> list[dict]:
+    """Write new data files for ``df`` and return their ``add``
+    actions — the one data-file writer of append / overwrite, UPDATE,
+    MERGE and OPTIMIZE. Nothing is committed; the caller commits the
+    adds (or, on a failed attempt, deletes them through
+    ``ops._cleanup_staged_adds``).
+
+    ``df`` holds the table's logical columns (``schema``) plus
+    ``extra_cols`` — already-physical row-tracking columns, written
+    through unrenamed and kept out of the stats. In order:
+
+    1. CHECK constraints validate ``df`` (one aggregate, only when the
+       table declares any);
+    2. the physical projection: column-mapped names, plus parquet
+       field ids in mode ``id``;
+    3. the stage (:func:`_stage_and_move`), clustered by partition
+       value — or rebalanced under ``delta.autoOptimize.optimizeWrite``;
+    4. footer stats (:func:`collect_stats_batch`); zero-row parts are
+       deleted, never committed;
+    5. NOT NULL verification from the kept files' ``nullCount`` (no
+       second pass over the plan).
+
+    ``data_change=False`` marks a rewrite of rows already in the table
+    (OPTIMIZE): ``df`` is then in PHYSICAL names as read from the
+    files (only mode-``id`` field ids are stamped), and CHECK / NOT
+    NULL are skipped — the rows were validated when first written.
+    ``partition_values`` (logical) fixes the one partition every row
+    belongs to: the files land in its directory as ``df`` is laid out,
+    with no repartition. ``tags`` ride every add."""
+    from pyspark.sql import functions as F
+
+    from deltalake_datafusion_spark.delta.constraints import (
+        notnull_columns_to_verify,
+        table_constraints,
+        validate_constraints,
+        verify_notnull_from_stats,
+    )
+    from deltalake_datafusion_spark.delta.stats import (
+        data_skipping_stats_columns,
+        parse_stats,
+    )
+
+    extra_cols = list(extra_cols or [])
+    notnull_verify: list[str] = []
+    if data_change:
+        validate_constraints(df, table_constraints(configuration))
+        notnull_verify = notnull_columns_to_verify(schema, df)
+    phys = physical_schema(schema)
+    phys_parts = [
+        phys.fields[schema.fieldNames().index(p)].name for p in partition_cols
+    ]
+    if not data_change:
+        out_df = stamp_field_ids(df, schema) if mapping_mode == "id" else df
+    elif mapping_mode != "none":
+        out_df = _rename_to_physical(
+            df, schema, extra_cols=extra_cols or None,
+            field_ids=mapping_mode == "id",
+        )
+    else:
+        cols = schema.fieldNames() + extra_cols
+        out_df = df if df.columns == cols else df.select(
+            *[F.col(f"`{c}`") for c in cols]
+        )
+    if partition_values is not None:
+        moved = _stage_and_move(
+            spark, out_df, table_path, "_optimize_",
+            part_dir="/".join(
+                f"{k}={v}" for k, v in partition_values.items()
+                if v is not None
+            ),
+        )
+    else:
+        if (
+            str(configuration.get(OPTIMIZE_WRITE_PROP, "false")).lower()
+            == "true"
+        ):
+            # optimize write: the pre-write shuffle becomes an AQE
+            # REBALANCE — partitions coalesce toward
+            # spark.sql.adaptive.advisoryPartitionSizeInBytes AND
+            # skewed ones split, so a 2000-task upstream lands a
+            # handful of right-sized files and a hot partition value
+            # still splits across files
+            out_df = out_df.hint(
+                "rebalance", *[F.col(f"`{p}`") for p in phys_parts]
+            )
+        elif phys_parts:
+            # cluster rows by partition value so each partition yields
+            # a handful of files, not (shuffle.partitions × values)
+            # tiny ones — one shuffle now against a small-files cost
+            # every future scan pays
+            out_df = out_df.repartition(*[f"`{p}`" for p in phys_parts])
+        moved = _stage_and_move(
+            spark, out_df, table_path, partition_by=phys_parts,
+            # bounds file size even after clustering
+            max_records_per_file=max_records_per_file,
+        )
+    stats_by_rel = collect_stats_batch(
+        spark,
+        table_path,
+        [(rel, size) for rel, _pv, size, _mt in moved],
+        skip_columns=set(phys_parts) | set(extra_cols),
+        stats_columns=data_skipping_stats_columns(schema, configuration),
+    )
+    fs = fs_for(table_path, spark)
+    kept = []
+    for m in moved:
+        st = parse_stats(stats_by_rel[m[0]])
+        if st is not None and st.get("numRecords") == 0:
+            fs.delete(os.path.join(table_path, m[0]))  # never committed
+        else:
+            kept.append(m)
+    if notnull_verify:
+        verify_notnull_from_stats(
+            spark, table_path, notnull_verify, kept, stats_by_rel,
+            schema, partition_cols, fs,
+        )
+    p2l = dict(zip(phys_parts, partition_cols))
+    adds = []
+    for rel, pv, size, mtime_ms in kept:
+        stats = stats_by_rel[rel]
+        adds.append(
+            {
+                "add": {
+                    "path": _url_encode_path(rel),
+                    "partitionValues": (
+                        dict(partition_values)
+                        if partition_values is not None
+                        else {p2l.get(k, k): v for k, v in pv.items()}
+                    ),
+                    "size": size,
+                    "modificationTime": mtime_ms,
+                    "dataChange": data_change,
+                    "stats": stats,
+                    **({"tags": tags} if tags else {}),
+                }
+            }
+        )
+    return adds
 
 
 CLUSTERING_DOMAIN = "delta.clustering"
@@ -1173,24 +1333,7 @@ def _replace_table_empty(
             )
         if cluster_by:
             actions.append(clustering_domain_action(schema, cluster_by))
-        for f in current.files:
-            actions.append(
-                {
-                    "remove": {
-                        "path": _url_encode_path(f.path),
-                        "deletionTimestamp": _now_ms(),
-                        "dataChange": True,
-                        "extendedFileMetadata": True,
-                        "partitionValues": f.partition_values,
-                        "size": f.size,
-                        **(
-                            {"deletionVector": _dv_to_json(f.dv)}
-                            if f.dv
-                            else {}
-                        ),
-                    }
-                }
-            )
+        actions.extend(_remove_action(f) for f in current.files)
         try:
             commit(
                 table_path, current.version + 1, actions,
@@ -1542,27 +1685,14 @@ def write_delta(
                                      str(_max_field_id(write_schema)))
         mapping = column_mapping
 
-    # Table-feature enforcement: CHECK constraints validate the batch
-    # (one aggregate, riding the write scan); appendOnly rejects
-    # overwrite (it removes files).
-    from deltalake_datafusion_spark.delta.constraints import (
-        check_append_only,
-        notnull_columns_to_verify,
-        table_constraints,
-        validate_constraints,
-    )
+    # appendOnly rejects overwrite (it removes files)
+    from deltalake_datafusion_spark.delta.constraints import check_append_only
 
     active_conf = (
         existing.metadata.configuration if existing is not None else configuration
     )
     if mode == "overwrite" and existing is not None:
         check_append_only(active_conf, "overwrite")
-    # CHECK constraints validate the batch up front (one aggregate,
-    # only when the table declares any); NOT NULL column invariants
-    # are enforced from the written files' footer nullCount stats
-    # after the stage — zero extra passes over the batch plan.
-    validate_constraints(df, table_constraints(active_conf))
-    notnull_verify = notnull_columns_to_verify(write_schema, df)
 
     if replace_where is not None:
         # delta-spark replaceWhere constraint: every incoming row must
@@ -1586,87 +1716,31 @@ def write_delta(
                 "to allow)"
             )
 
-    # Physical projection (identity when unmapped). Mode 'id' tables
-    # (Iceberg-converted / foreign) additionally stamp parquet field
-    # ids so the new files resolve by id like the existing ones.
-    id_mode = (
-        existing.column_mapping_mode == "id"
-        if existing is not None
-        else configuration.get("delta.columnMapping.mode") == "id"
+    # Mode 'id' tables (Iceberg-converted / foreign) stamp parquet
+    # field ids so the new files resolve by id like the existing ones.
+    if not mapping:
+        mapping_mode = "none"
+    elif existing is not None:
+        mapping_mode = existing.column_mapping_mode
+    else:
+        mapping_mode = configuration.get("delta.columnMapping.mode", "name")
+    adds = write_data_files(
+        spark, df, table_path, write_schema, partition_by, active_conf,
+        mapping_mode, max_records_per_file=max_records_per_file,
     )
-    out_df = (
-        _rename_to_physical(df, write_schema, field_ids=id_mode)
-        if mapping else df
-    )
-    phys = physical_schema(write_schema)
-    phys_partition_by = [
-        phys.fields[write_schema.fieldNames().index(p)].name for p in partition_by
-    ]
-
-    moved = _stage_and_move(
-        spark, out_df, table_path, phys_partition_by, max_records_per_file,
-        optimize_write=(
-            str(active_conf.get(OPTIMIZE_WRITE_PROP, "false")).lower()
-            == "true"
-        ),
-    )
-
-    # Stats from footers; partition columns excluded (their values are
-    # in partitionValues). Logical partition names for the action map.
-    # Footer reads are executor-distributed for large writes.
-    phys_to_logical_part = dict(zip(phys_partition_by, partition_by))
-    adds = []
-    from deltalake_datafusion_spark.delta.stats import (
-        data_skipping_stats_columns,
-    )
-
-    stats_by_rel = collect_stats_batch(
-        spark,
-        table_path,
-        [(rel, size) for rel, _pv, size, _mt in moved],
-        skip_columns=set(phys_partition_by),
-        stats_columns=data_skipping_stats_columns(write_schema, active_conf),
-    )
-    if notnull_verify:
-        from deltalake_datafusion_spark.delta.constraints import (
-            verify_notnull_from_stats,
-        )
-
-        verify_notnull_from_stats(
-            spark, table_path, notnull_verify, moved, stats_by_rel,
-            write_schema, partition_by, fs_for(table_path, spark),
-        )
-    for rel, pv_phys, size, mtime_ms in moved:
-        stats = stats_by_rel[rel]
-        pv = {phys_to_logical_part.get(k, k): v for k, v in pv_phys.items()}
-        adds.append(
-            {
-                "add": {
-                    "path": _url_encode_path(rel),
-                    "partitionValues": pv,
-                    "size": size,
-                    "modificationTime": mtime_ms,
-                    "dataChange": True,
-                    "stats": stats,
-                }
-            }
-        )
 
     hwm_advance: dict[str, int] = {}
     if ident_assigned:
-        # advance each assigned column's high-water mark from the
-        # footer stats already in the add actions — zero extra scans
+        # the assigned columns' high-water marks come from the footer
+        # stats already in the add actions — zero extra scans
         from deltalake_datafusion_spark.delta.identity import (
-            high_water_mark_from_stats,
-            schema_with_hwm,
+            advance_hwm_from_adds,
         )
 
-        stats_list = [a["add"].get("stats") for a in adds]
-        for c, info in ident_assigned.items():
-            hwm = high_water_mark_from_stats(stats_list, c, info["step"])
-            if hwm is not None:
-                write_schema = schema_with_hwm(write_schema, c, hwm)
-                hwm_advance[c] = hwm
+        write_schema, hwm_advance = advance_hwm_from_adds(
+            write_schema, adds,
+            {c: info["step"] for c, info in ident_assigned.items()},
+        )
 
     cdc_overwrite: list[dict] | None = None
     cdc_staged_version: int | None = None
@@ -1848,24 +1922,7 @@ def write_delta(
                     ]
                 else:
                     removed_files = list(current.files)
-                for f in removed_files:
-                    removes.append(
-                        {
-                            "remove": {
-                                "path": _url_encode_path(f.path),
-                                "deletionTimestamp": _now_ms(),
-                                "dataChange": True,
-                                "extendedFileMetadata": True,
-                                "partitionValues": f.partition_values,
-                                "size": f.size,
-                                **(
-                                    {"deletionVector": _dv_to_json(f.dv)}
-                                    if f.dv
-                                    else {}
-                                ),
-                            }
-                        }
-                    )
+                removes = [_remove_action(f) for f in removed_files]
         # REPLACE TABLE is a schema boundary: change files for this
         # commit would have to carry the NEW schema while the staging
         # machinery writes under the replaced table's metadata — and
@@ -2084,9 +2141,81 @@ def _dv_to_json(dv) -> dict:
     }
 
 
+def _remove_action(f) -> dict:
+    """``remove`` action (dataChange) for a live file of a snapshot."""
+    return {
+        "remove": {
+            "path": _url_encode_path(f.path),
+            "deletionTimestamp": _now_ms(),
+            "dataChange": True,
+            "extendedFileMetadata": True,
+            "partitionValues": f.partition_values,
+            "size": f.size,
+            **({"deletionVector": _dv_to_json(f.dv)} if f.dv else {}),
+        }
+    }
+
+
 # ------------------------------------------------------------------ #
 # Checkpoints                                                         #
 # ------------------------------------------------------------------ #
+
+
+def state_actions(snapshot) -> list[dict]:
+    """The table-state actions of a snapshot besides its files, as log
+    actions: protocol, metaData, the latest ``txn`` per appId and the
+    live ``domainMetadata`` — what every checkpoint carries, what the
+    ``.crc`` summarizes, and what a clone starts from. txn state must
+    survive checkpointing (spec: checkpoints carry the latest txn per
+    appId): COPY INTO's per-file ledger and streaming-sink idempotence
+    depend on it once ``cleanup_expired_logs`` deletes the commits."""
+    pr, md = snapshot.protocol, snapshot.metadata
+    return [
+        {
+            "protocol": {
+                "minReaderVersion": pr.min_reader_version,
+                "minWriterVersion": pr.min_writer_version,
+                **(
+                    {"readerFeatures": pr.reader_features}
+                    if pr.reader_features else {}
+                ),
+                **(
+                    {"writerFeatures": pr.writer_features}
+                    if pr.writer_features else {}
+                ),
+            }
+        },
+        {
+            "metaData": {
+                "id": md.id,
+                "name": md.name,
+                "description": md.description,
+                "format": {"provider": "parquet", "options": {}},
+                "schemaString": md.schema_string,
+                "partitionColumns": md.partition_columns,
+                "configuration": md.configuration,
+                "createdTime": md.created_time,
+            }
+        },
+        *(
+            {"txn": {"appId": a, "version": v}}
+            for a, v in sorted(snapshot.app_transactions.items())
+        ),
+        *(
+            {"domainMetadata": {"domain": d, "configuration": c,
+                                "removed": False}}
+            for d, c in sorted(snapshot.domain_metadata.items())
+        ),
+    ]
+
+
+def _log_rows_df(spark, rows: list[dict], schema) -> DataFrame:
+    """Driver-built log actions as a frame of ``schema``, through the
+    JSON parse every checkpoint writer shares."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame([(json.dumps(r),) for r in rows], "value string")
+    return df.select(F.from_json("value", schema).alias("a")).select("a.*")
 
 
 def write_checkpoint(spark, snapshot: Snapshot) -> str:
@@ -2094,50 +2223,7 @@ def write_checkpoint(spark, snapshot: Snapshot) -> str:
     ``_last_checkpoint`` (read side: snapshot.load_snapshot)."""
     from deltalake_datafusion_spark.delta.log_schema import LOG_SCHEMA
 
-    rows: list[dict] = []
-    rows.append(
-        {
-            "protocol": {
-                "minReaderVersion": snapshot.protocol.min_reader_version,
-                "minWriterVersion": snapshot.protocol.min_writer_version,
-                "readerFeatures": snapshot.protocol.reader_features or None,
-                "writerFeatures": snapshot.protocol.writer_features or None,
-            }
-        }
-    )
-    rows.append(
-        {
-            "metaData": {
-                "id": snapshot.metadata.id,
-                "name": snapshot.metadata.name,
-                "description": snapshot.metadata.description,
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": snapshot.metadata.schema_string,
-                "partitionColumns": snapshot.metadata.partition_columns,
-                "configuration": snapshot.metadata.configuration,
-                "createdTime": snapshot.metadata.created_time,
-            }
-        }
-    )
-    # txn state must survive checkpointing (spec: checkpoints carry the
-    # latest txn action per appId) — COPY INTO's per-file ledger and
-    # streaming-sink idempotence depend on it once cleanup_expired_logs
-    # deletes the superseded commit JSONs.
-    for app_id in sorted(snapshot.app_transactions):
-        rows.append(
-            {"txn": {"appId": app_id,
-                     "version": snapshot.app_transactions[app_id]}}
-        )
-    for domain in sorted(snapshot.domain_metadata):
-        rows.append(
-            {
-                "domainMetadata": {
-                    "domain": domain,
-                    "configuration": snapshot.domain_metadata[domain],
-                    "removed": False,
-                }
-            }
-        )
+    rows = state_actions(snapshot)
     for f in snapshot.files:
         rows.append(
             {
@@ -2158,36 +2244,23 @@ def write_checkpoint(spark, snapshot: Snapshot) -> str:
                 }
             }
         )
-
+    cp_name = f"{snapshot.version:020d}.checkpoint.parquet"
     log_dir = os.path.join(snapshot.table_path, "_delta_log")
-    staging = os.path.join(log_dir, f".cp_{uuid.uuid4().hex}")
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame([(json.dumps(r),) for r in rows], "value string")
-    parsed = df.select(F.from_json("value", LOG_SCHEMA).alias("a")).select("a.*")
-    parsed = _with_stats_parsed(parsed, snapshot)
     # repartition(1), not coalesce(1): the rows come from
     # createDataFrame (defaultParallelism pickled-RDD slices) and
     # coalesce would make ONE task drain every slice sequentially,
     # paying a Python-worker round trip per slice (~5 s measured);
     # repartition evaluates the slices as parallel map tasks first.
-    parsed.repartition(1).write.mode("overwrite").parquet(staging)
-
-    fs = fs_for(snapshot.table_path, spark)
-    cp_name = f"{snapshot.version:020d}.checkpoint.parquet"
-    final = os.path.join(log_dir, cp_name)
-    for st in fs.list_recursive(staging):
-        if not st.is_dir and st.path.endswith(".parquet"):
-            fs.rename(st.path, final)
-    for st in sorted(fs.list_recursive(staging), key=lambda s: -len(s.path)):
-        fs.delete(st.path)
-    fs.delete(staging)
-
-    fs.write_bytes(
+    parsed = _with_stats_parsed(_log_rows_df(spark, rows, LOG_SCHEMA), snapshot)
+    _stage_and_move(
+        spark, parsed.repartition(1), log_dir, ".cp_",
+        name=lambda _i, _n: cp_name,
+    )
+    fs_for(snapshot.table_path, spark).write_bytes(
         os.path.join(log_dir, "_last_checkpoint"),
         json.dumps({"version": snapshot.version, "size": len(rows)}).encode(),
     )
-    return final
+    return os.path.join(log_dir, cp_name)
 
 
 def _stats_struct_type(schema: StructType):
@@ -2267,88 +2340,64 @@ def _with_stats_parsed(df, snapshot):
     return df.withColumn("add", add)
 
 
-def write_checkpoint_spark(
-    spark, table_path: str, version: int | None = None, parts: int | None = None
-) -> list[str]:
-    """Distributed multi-part checkpoint: the live add set is derived
-    from the log ON THE EXECUTORS (checkpoint-aware ``actions_df`` +
-    window dedup — the same replay ``log_replay_df`` uses) and written
-    as ``N.checkpoint.<i>.<n>.parquet`` parts, so checkpointing a
-    1e6-file table never funnels the file list through one JSON-string
-    loop or one output file. The driver contributes only the
-    protocol/metaData/txn rows (O(1) + O(apps)).
-
-    The single-part :func:`write_checkpoint` remains the small-table
-    path; :func:`maybe_checkpoint` switches on file count.
-    """
-    import math
-
+def _live_adds_df(spark, snap) -> DataFrame:
+    """The live add set of ``snap`` derived ON THE EXECUTORS
+    (checkpoint-aware ``actions_df`` + window dedup — the same replay
+    ``log_replay_df`` uses), each add restamped ``dataChange=false``;
+    one ``add`` column. The file set never touches the driver."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from deltalake_datafusion_spark.delta.log_schema import LOG_SCHEMA
-    from deltalake_datafusion_spark.delta.snapshot import actions_df, load_snapshot
+    from deltalake_datafusion_spark.delta.snapshot import actions_df
 
-    # metadata-only replay: the file set never touches the driver
-    snap = load_snapshot(
-        table_path, version=version, spark=spark, with_files=False
-    )
-    df = actions_df(spark, snap.table_path, snap.version)
-    acts = df.select(
+    acts = actions_df(spark, snap.table_path, snap.version).select(
         "version",
         F.coalesce(F.col("add.path"), F.col("remove.path")).alias("path"),
         F.col("add").alias("add_action"),
         F.col("add.path").isNotNull().alias("is_add"),
     ).filter(F.col("path").isNotNull())
     w = Window.partitionBy("path").orderBy(F.desc("version"), F.desc("is_add"))
-    live = (
+    return (
         acts.withColumn("rn", F.row_number().over(w))
         .filter((F.col("rn") == 1) & F.col("is_add"))
         .select(
             F.col("add_action").withField("dataChange", F.lit(False)).alias("add")
         )
     )
+
+
+def write_checkpoint_spark(
+    spark, table_path: str, version: int | None = None, parts: int | None = None
+) -> list[str]:
+    """Distributed multi-part checkpoint: the live add set is derived
+    on the executors (:func:`_live_adds_df`) and written as
+    ``N.checkpoint.<i>.<n>.parquet`` parts, so checkpointing a
+    1e6-file table never funnels the file list through one JSON-string
+    loop or one output file. The driver contributes only the
+    :func:`state_actions` rows (O(1) + O(apps)).
+
+    The single-part :func:`write_checkpoint` remains the small-table
+    path; :func:`maybe_checkpoint` switches on file count.
+    """
+    import math
+
+    from pyspark.sql import functions as F
+
+    from deltalake_datafusion_spark.delta.log_schema import LOG_SCHEMA
+
+    # metadata-only replay: the file set never touches the driver
+    snap = load_snapshot(
+        table_path, version=version, spark=spark, with_files=False
+    )
+    live = _live_adds_df(spark, snap)
     other = [f for f in LOG_SCHEMA.fieldNames() if f not in ("add", "commitInfo")]
     ck = live.select(
         "add",
         *[F.lit(None).cast(LOG_SCHEMA[f].dataType).alias(f) for f in other],
     )
-
-    # Driver rows: protocol + metaData + app transactions, shipped
-    # through the same JSON-parse path the single-part writer uses.
-    head_rows = [
-        {
-            "protocol": {
-                "minReaderVersion": snap.protocol.min_reader_version,
-                "minWriterVersion": snap.protocol.min_writer_version,
-                "readerFeatures": snap.protocol.reader_features or None,
-                "writerFeatures": snap.protocol.writer_features or None,
-            }
-        },
-        {
-            "metaData": {
-                "id": snap.metadata.id,
-                "name": snap.metadata.name,
-                "description": snap.metadata.description,
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": snap.metadata.schema_string,
-                "partitionColumns": snap.metadata.partition_columns,
-                "configuration": snap.metadata.configuration,
-                "createdTime": snap.metadata.created_time,
-            }
-        },
-    ] + [
-        {"txn": {"appId": app, "version": v}}
-        for app, v in sorted(snap.app_transactions.items())
-    ] + [
-        {"domainMetadata": {"domain": d, "configuration": c,
-                            "removed": False}}
-        for d, c in sorted(snap.domain_metadata.items())
-    ]
+    head_rows = state_actions(snap)
     head = (
-        spark.createDataFrame([(json.dumps(r),) for r in head_rows], "value string")
-        .select(F.from_json("value", LOG_SCHEMA).alias("a"))
-        .select("a.*")
+        _log_rows_df(spark, head_rows, LOG_SCHEMA)
         .drop("commitInfo")
         .select(*ck.columns)
     )
@@ -2356,71 +2405,50 @@ def write_checkpoint_spark(
     n_live = live.count()  # metadata-scale count, sizes the parts
     n_parts = parts or max(1, math.ceil(n_live / 500_000))
     log_dir = os.path.join(snap.table_path, "_delta_log")
-    staging = os.path.join(log_dir, f".cp_{uuid.uuid4().hex}")
-    _with_stats_parsed(head.unionByName(ck), snap).repartition(
-        n_parts
-    ).write.mode("overwrite").parquet(staging)
 
-    fs = fs_for(snap.table_path, spark)
-    staged = sorted(
-        st.path
-        for st in fs.list_recursive(staging)
-        if not st.is_dir and st.path.endswith(".parquet")
+    def name(i: int, n: int) -> str:
+        if n == 1:
+            return f"{snap.version:020d}.checkpoint.parquet"
+        return f"{snap.version:020d}.checkpoint.{i + 1:010d}.{n:010d}.parquet"
+
+    moved = _stage_and_move(
+        spark,
+        _with_stats_parsed(head.unionByName(ck), snap).repartition(n_parts),
+        log_dir, ".cp_", name=name,
     )
-    finals = []
-    total = len(staged)
-    for i, src in enumerate(staged):
-        if total == 1:
-            name = f"{snap.version:020d}.checkpoint.parquet"
-        else:
-            name = (
-                f"{snap.version:020d}.checkpoint."
-                f"{i + 1:010d}.{total:010d}.parquet"
-            )
-        dst = os.path.join(log_dir, name)
-        fs.rename(src, dst)
-        finals.append(dst)
-    for st in sorted(fs.list_recursive(staging), key=lambda s: -len(s.path)):
-        fs.delete(st.path)
-    fs.delete(staging)
-
-    fs.write_bytes(
+    fs_for(snap.table_path, spark).write_bytes(
         os.path.join(log_dir, "_last_checkpoint"),
         json.dumps(
             {
                 "version": snap.version,
                 "size": n_live + len(head_rows),
-                **({"parts": total} if total > 1 else {}),
+                **({"parts": len(moved)} if len(moved) > 1 else {}),
             }
         ).encode(),
     )
-    return finals
+    return [os.path.join(log_dir, rel) for rel, _pv, _sz, _mt in moved]
 
 
 def write_checkpoint_v2(
     spark, table_path: str, version: int | None = None, parts: int | None = None
 ) -> str:
     """V2 checkpoint (Delta's v2Checkpoint table feature): the live
-    add set is derived on the executors (same metadata-only replay as
-    :func:`write_checkpoint_spark`) and written as UUID-named sidecar
-    parquet files under ``_delta_log/_sidecars/``; the top-level
-    ``N.checkpoint.<uuid>.parquet`` carries only protocol / metaData /
-    txn rows plus a ``checkpointMetadata`` action and one ``sidecar``
-    pointer per part. UUID naming means concurrent checkpointers can
-    never clobber each other, and readers pick any single complete
-    checkpoint instead of assembling classic multipart fragments."""
+    add set is derived on the executors (:func:`_live_adds_df`) and
+    written as UUID-named sidecar parquet files under
+    ``_delta_log/_sidecars/``; the top-level
+    ``N.checkpoint.<uuid>.parquet`` carries only the
+    :func:`state_actions` rows plus a ``checkpointMetadata`` action and
+    one ``sidecar`` pointer per part. UUID naming means concurrent
+    checkpointers can never clobber each other, and readers pick any
+    single complete checkpoint instead of assembling classic multipart
+    fragments."""
     import math
 
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from deltalake_datafusion_spark.delta.log_schema import (
         CHECKPOINT_V2_SCHEMA,
         LOG_SCHEMA,
-    )
-    from deltalake_datafusion_spark.delta.snapshot import (
-        actions_df,
-        load_snapshot,
     )
 
     snap = load_snapshot(
@@ -2431,119 +2459,40 @@ def write_checkpoint_v2(
             "v2 checkpoints need the v2Checkpoint table feature — "
             "SET TBLPROPERTIES ('delta.checkpointPolicy' = 'v2') first"
         )
-    df = actions_df(spark, snap.table_path, snap.version)
-    acts = df.select(
-        "version",
-        F.coalesce(F.col("add.path"), F.col("remove.path")).alias("path"),
-        F.col("add").alias("add_action"),
-        F.col("add.path").isNotNull().alias("is_add"),
-    ).filter(F.col("path").isNotNull())
-    w = Window.partitionBy("path").orderBy(F.desc("version"), F.desc("is_add"))
-    live = (
-        acts.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & F.col("is_add"))
-        .select(
-            F.col("add_action").withField("dataChange", F.lit(False)).alias("add"),
-            F.lit(None).cast(LOG_SCHEMA["remove"].dataType).alias("remove"),
-        )
+    live = _live_adds_df(spark, snap).withColumn(
+        "remove", F.lit(None).cast(LOG_SCHEMA["remove"].dataType)
     )
-
     n_live = live.count()
     n_parts = parts or max(1, math.ceil(n_live / 500_000))
     log_dir = os.path.join(snap.table_path, "_delta_log")
-    sidecar_dir = os.path.join(log_dir, "_sidecars")
-    staging = os.path.join(log_dir, f".cp2_{uuid.uuid4().hex}")
-    _with_stats_parsed(live, snap).repartition(n_parts).write.mode(
-        "overwrite"
-    ).parquet(staging)
-
-    fs = fs_for(snap.table_path, spark)
-    fs.mkdirs(sidecar_dir)
-    sidecars = []
-    for st in sorted(
-        (
-            s
-            for s in fs.list_recursive(staging)
-            if not s.is_dir and s.path.endswith(".parquet")
-        ),
-        key=lambda s: s.path,
-    ):
-        name = f"{uuid.uuid4()}.parquet"
-        fs.rename(st.path, os.path.join(sidecar_dir, name))
-        sidecars.append(
-            {
-                "path": name,
-                "sizeInBytes": st.size,
-                "modificationTime": st.mtime_ms,
-            }
-        )
-    for st in sorted(fs.list_recursive(staging), key=lambda s: -len(s.path)):
-        fs.delete(st.path)
-    fs.delete(staging)
-
-    head_rows: list[dict] = [
-        {"checkpointMetadata": {"version": snap.version}},
-        {
-            "protocol": {
-                "minReaderVersion": snap.protocol.min_reader_version,
-                "minWriterVersion": snap.protocol.min_writer_version,
-                "readerFeatures": snap.protocol.reader_features or None,
-                "writerFeatures": snap.protocol.writer_features or None,
-            }
-        },
-        {
-            "metaData": {
-                "id": snap.metadata.id,
-                "name": snap.metadata.name,
-                "description": snap.metadata.description,
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": snap.metadata.schema_string,
-                "partitionColumns": snap.metadata.partition_columns,
-                "configuration": snap.metadata.configuration,
-                "createdTime": snap.metadata.created_time,
-            }
-        },
-    ]
-    head_rows += [
-        {"txn": {"appId": app, "version": v}}
-        for app, v in sorted(snap.app_transactions.items())
-    ]
-    head_rows += [
-        {"domainMetadata": {"domain": d, "configuration": c,
-                            "removed": False}}
-        for d, c in sorted(snap.domain_metadata.items())
-    ]
-    head_rows += [{"sidecar": s} for s in sidecars]
-
-    top_staging = os.path.join(log_dir, f".cp2t_{uuid.uuid4().hex}")
-    head = (
-        spark.createDataFrame(
-            [(json.dumps(r),) for r in head_rows], "value string"
-        )
-        .select(F.from_json("value", CHECKPOINT_V2_SCHEMA).alias("a"))
-        .select("a.*")
+    sidecars = _stage_and_move(
+        spark, _with_stats_parsed(live, snap).repartition(n_parts),
+        log_dir, ".cp2_", part_dir="_sidecars",
+        name=lambda _i, _n: f"{uuid.uuid4()}.parquet",
     )
-    # repartition(1): see the v1 checkpoint writer — coalesce over a
-    # createDataFrame frame drains its slices sequentially in 1 task
-    head.repartition(1).write.mode("overwrite").parquet(top_staging)
+    head_rows = [
+        {"checkpointMetadata": {"version": snap.version}},
+        *state_actions(snap),
+        *(
+            {"sidecar": {"path": os.path.basename(rel), "sizeInBytes": size,
+                         "modificationTime": mtime}}
+            for rel, _pv, size, mtime in sidecars
+        ),
+    ]
     cp_name = f"{snap.version:020d}.checkpoint.{uuid.uuid4()}.parquet"
-    final = os.path.join(log_dir, cp_name)
-    for st in fs.list_recursive(top_staging):
-        if not st.is_dir and st.path.endswith(".parquet"):
-            fs.rename(st.path, final)
-    for st in sorted(
-        fs.list_recursive(top_staging), key=lambda s: -len(s.path)
-    ):
-        fs.delete(st.path)
-    fs.delete(top_staging)
-
-    fs.write_bytes(
+    # repartition(1): see write_checkpoint
+    _stage_and_move(
+        spark,
+        _log_rows_df(spark, head_rows, CHECKPOINT_V2_SCHEMA).repartition(1),
+        log_dir, ".cp2t_", name=lambda _i, _n: cp_name,
+    )
+    fs_for(snap.table_path, spark).write_bytes(
         os.path.join(log_dir, "_last_checkpoint"),
         json.dumps(
             {"version": snap.version, "size": n_live + len(head_rows)}
         ).encode(),
     )
-    return final
+    return os.path.join(log_dir, cp_name)
 
 
 # Above this live-file count, checkpoints are derived and written
@@ -2570,6 +2519,7 @@ def write_version_checksum(
             "numDeletedRecordsOpt": sum(d.cardinality for d in dvs),
             "numDeletionVectorsOpt": len(dvs),
         }
+    state = state_actions(snapshot)
     body = {
         "tableSizeBytes": totals["tableSizeBytes"],
         "numFiles": totals["numFiles"],
@@ -2577,34 +2527,11 @@ def write_version_checksum(
         "numProtocol": 1,
         "numDeletedRecordsOpt": totals["numDeletedRecordsOpt"],
         "numDeletionVectorsOpt": totals["numDeletionVectorsOpt"],
-        "metadata": {
-            "id": snapshot.metadata.id,
-            "name": snapshot.metadata.name,
-            "format": {"provider": "parquet", "options": {}},
-            "schemaString": snapshot.metadata.schema_string,
-            "partitionColumns": snapshot.partition_columns,
-            "configuration": snapshot.metadata.configuration,
-            "createdTime": snapshot.metadata.created_time,
-        },
-        "protocol": {
-            "minReaderVersion": snapshot.protocol.min_reader_version,
-            "minWriterVersion": snapshot.protocol.min_writer_version,
-            **(
-                {"readerFeatures": snapshot.protocol.reader_features}
-                if snapshot.protocol.reader_features else {}
-            ),
-            **(
-                {"writerFeatures": snapshot.protocol.writer_features}
-                if snapshot.protocol.writer_features else {}
-            ),
-        },
-        "setTransactions": [
-            {"appId": a, "version": v}
-            for a, v in sorted(snapshot.app_transactions.items())
-        ],
+        "metadata": state[1]["metaData"],
+        "protocol": state[0]["protocol"],
+        "setTransactions": [a["txn"] for a in state if "txn" in a],
         "domainMetadata": [
-            {"domain": d, "configuration": c, "removed": False}
-            for d, c in sorted(snapshot.domain_metadata.items())
+            a["domainMetadata"] for a in state if "domainMetadata" in a
         ],
     }
     path = os.path.join(
@@ -2661,10 +2588,7 @@ def maybe_checkpoint_light(spark, table_path: str) -> None:
     memory stays ∝ metadata, never ∝ file count."""
     from pyspark.sql import functions as F
 
-    from deltalake_datafusion_spark.delta.snapshot import (
-        load_snapshot,
-        log_replay_df,
-    )
+    from deltalake_datafusion_spark.delta.snapshot import log_replay_df
 
     snapshot = load_snapshot(table_path, spark=spark, with_files=False)
     row = (
@@ -2705,33 +2629,28 @@ def maybe_checkpoint_light(spark, table_path: str) -> None:
             "numDeletionVectorsOpt": row["dv_count"],
         },
     )
-    interval = int(snapshot.get_property("delta.checkpointInterval", "10") or "10")
-    if interval > 0 and snapshot.version > 0 and (snapshot.version % interval == 0):
-        if snapshot.get_property("delta.checkpointPolicy", "").lower() == "v2":
-            write_checkpoint_v2(spark, snapshot.table_path, snapshot.version)
-        else:
-            write_checkpoint_spark(spark, snapshot.table_path, snapshot.version)
-        if (
-            snapshot.get_property(
-                "delta.enableExpiredLogCleanup", "true"
-            ).lower()
-            != "false"
-        ):
-            from deltalake_datafusion_spark.delta.log_cleanup import (
-                cleanup_expired_logs,
-            )
-
-            cleanup_expired_logs(spark, snapshot.table_path)
-    maybe_compact_log(spark, snapshot)
+    _after_checksum(spark, snapshot, distributed=True)
 
 
 def maybe_checkpoint(spark, snapshot: Snapshot) -> None:
     write_version_checksum(snapshot, spark)
+    _after_checksum(
+        spark, snapshot,
+        distributed=len(snapshot.files) > DISTRIBUTED_CHECKPOINT_THRESHOLD,
+    )
+
+
+def _after_checksum(spark, snapshot: Snapshot, distributed: bool) -> None:
+    """The post-commit tail both checkpoint hooks share: on every
+    ``delta.checkpointInterval``-th version write a v2 checkpoint
+    (``delta.checkpointPolicy=v2``), else a classic one — the Spark-job
+    writer when ``distributed``, the driver writer otherwise — and
+    clean up expired logs; then the auto log compaction."""
     interval = int(snapshot.get_property("delta.checkpointInterval", "10") or "10")
     if interval > 0 and snapshot.version > 0 and (snapshot.version % interval == 0):
         if snapshot.get_property("delta.checkpointPolicy", "").lower() == "v2":
             write_checkpoint_v2(spark, snapshot.table_path, snapshot.version)
-        elif len(snapshot.files) > DISTRIBUTED_CHECKPOINT_THRESHOLD:
+        elif distributed:
             write_checkpoint_spark(spark, snapshot.table_path, snapshot.version)
         else:
             write_checkpoint(spark, snapshot)
@@ -2757,9 +2676,10 @@ def maybe_compact_log(spark, snapshot: Snapshot) -> None:
     commit JSONs into ``{v-n+1}.{v}.compacted.json``, so cold loads
     between checkpoints open ~interval-fold fewer log files.
     Best-effort like the checkpoint hook: compaction is purely
-    additive and idempotent, so any failure (or losing the
-    create-if-absent race to a concurrent writer) leaves a correct
-    log."""
+    additive and idempotent, so a failure (a log-cleaned commit in
+    the range, an I/O or JVM filesystem error) leaves a correct log;
+    it is logged, not raised. Losing the create-if-absent race to a
+    concurrent writer is success inside ``compact_log``."""
     try:
         n = int(
             spark.conf.get("lakehouse.delta.log_compaction.interval", "0")
@@ -2770,9 +2690,14 @@ def maybe_compact_log(spark, snapshot: Snapshot) -> None:
     v = snapshot.version
     if n < 2 or v < n - 1 or (v + 1) % n != 0:
         return
+    from py4j.protocol import Py4JError
+
     from deltalake_datafusion_spark.delta.logcompact import compact_log
 
     try:
         compact_log(spark, snapshot.table_path, start=v - n + 1, end=v)
-    except Exception:
-        pass
+    except (DeltaNotFoundError, OSError, ValueError, Py4JError) as e:
+        _log.warning(
+            "log compaction of %s commits %d..%d skipped: %s",
+            snapshot.table_path, v - n + 1, v, e,
+        )

@@ -34,6 +34,43 @@ def test_update_basic(spark, tmp_path):
     assert any(f.dv is not None for f in snap.files)
 
 
+def test_update_matching_no_row_commits_nothing(spark, tmp_path):
+    """An UPDATE whose predicate matches no row writes no data file and
+    commits no version — it returns the snapshot it read, like a
+    no-match DELETE."""
+    import os
+
+    path = str(tmp_path / "upd_none")
+    write_delta(spark, spark.range(10).select("id", (F.col("id") * 2).alias("k")), path)
+    res = update_delta(spark, path, {"k": "k + 1"}, predicate="id < 0")
+    assert res == {"rows_updated": 0, "files_added": 0, "version": 0}
+    assert load_snapshot(path).version == 0
+    data = [f for f in os.listdir(path) if f.endswith(".parquet")]
+    assert len(data) == len(load_snapshot(path).files)
+
+
+def test_empty_write_commits_without_data_file(spark, tmp_path):
+    """An empty append still commits its version, with no add: no
+    zero-row data file enters the log. An empty first write creates a
+    readable, file-less table."""
+    import json
+    import os
+
+    path = str(tmp_path / "empty_app")
+    n_files = len(write_delta(spark, spark.range(5), path).files)
+    snap = write_delta(spark, spark.range(0), path, mode="append")
+    assert snap.version == 1 and len(snap.files) == n_files
+    with open(os.path.join(path, "_delta_log", f"{1:020d}.json")) as fh:
+        assert not any("add" in json.loads(ln) for ln in fh)
+    assert read_delta(spark, path).count() == 5
+
+    empty = str(tmp_path / "empty_new")
+    snap = write_delta(spark, spark.range(0), empty)
+    assert snap.version == 0 and snap.files == []
+    out = read_delta(spark, empty)
+    assert out.columns == ["id"] and out.count() == 0
+
+
 def test_update_expression_uses_row_values(spark, tmp_path):
     path = str(tmp_path / "upd2")
     write_delta(spark, spark.range(10).select("id", (F.col("id") * 1.0).alias("v")), path)
@@ -226,6 +263,27 @@ def test_merge_strict_passes_unique_source(spark, tmp_path):
     )
     out = {r.id: r.val for r in read_delta(spark, path).collect()}
     assert out[1] == "x" and out[9] == "y" and out[0] == "old"
+
+
+def test_merge_strict_duplicate_match_tiny(spark, tmp_path):
+    """Tier-1 twin of ``test_merge_strict_rejects_duplicate_source_match``:
+    a strict MERGE whose source matches one target row twice raises
+    before anything is staged or committed."""
+    import os
+
+    from deltalake_datafusion_spark.delta.ops import MergeCardinalityError
+
+    path = str(tmp_path / "mrg_strict_tiny")
+    write_delta(spark, spark.range(3).select("id", F.lit("old").alias("val")), path)
+    before = sorted(os.listdir(path))
+    dup = spark.createDataFrame([(2, "a"), (2, "b")], "id long, val string")
+    with pytest.raises(MergeCardinalityError):
+        merge_delta(
+            spark, path, dup, on="t.id = s.id",
+            when_matched_update={"val": "s.val"}, strict=True,
+        )
+    assert load_snapshot(path).version == 0
+    assert sorted(os.listdir(path)) == before
 
 
 def test_delete_partition_drop_is_metadata_only(spark, tmp_path, monkeypatch):
@@ -954,6 +1012,39 @@ def test_merge_dv_cdf_images_match_cow(spark, tmp_path):
             for r in table_changes(spark, path, 1).collect()
         }
     assert feeds["dv"] == feeds["cow"]
+
+
+def test_merge_dv_cdf_images_match_cow_tiny(spark, tmp_path):
+    """Tier-1 twin of ``test_merge_dv_cdf_images_match_cow`` on a
+    4-row, one-file table: the dv strategy's pre/post images and
+    insert are exactly the feed copy-on-write commits for this merge
+    (the slow original compares the two strategies run side by side)."""
+    from deltalake_datafusion_spark.delta.cdf import table_changes
+
+    path = str(tmp_path / "cdf_tiny_dv")
+    write_delta(
+        spark,
+        spark.createDataFrame(
+            [(i, float(i)) for i in range(4)], "k long, v double"
+        ).coalesce(1),
+        path,
+        configuration={"delta.enableChangeDataFeed": "true"},
+    )
+    merge_delta(
+        spark, path,
+        spark.createDataFrame([(1, 11.0), (9, 9.0)], "k long, v double"),
+        on="t.k = s.k", when_matched_update={"v": "s.v"},
+        when_not_matched_insert=True, strategy="dv",
+    )
+    assert any(f.dv is not None for f in load_snapshot(path).files)
+    assert {
+        (r["k"], r["v"], r["_change_type"])
+        for r in table_changes(spark, path, 1).collect()
+    } == {
+        (1, 1.0, "update_preimage"),
+        (1, 11.0, "update_postimage"),
+        (9, 9.0, "insert"),
+    }
 
 
 def test_merge_dv_no_matched_clause_leaves_rows(spark, tmp_path):

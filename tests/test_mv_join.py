@@ -391,6 +391,10 @@ def test_streaming_join_mv_fresh_checkpoint_no_double_apply(
 # ------------------------------------------------------------------ #
 
 
+def _at(spark, path, version):
+    return load_snapshot(path, version=version, spark=spark)
+
+
 def test_term_reads_pinned_to_target_versions(spark, tmp_path):
     """The 'current' fact/dim reads of terms 1 and 2 are pinned to
     the versions the watermarks will record — a commit landing after
@@ -415,8 +419,8 @@ def test_term_reads_pinned_to_target_versions(spark, tmp_path):
     write_delta(spark, race, fp, mode="append", configuration=CDF)
 
     rows = _join_mv_delta_rows(
-        spark, fp, dp, **KW, f_changes=None,
-        d_changes=table_changes(spark, dp, d0 + 1, d1), f_ver=f0, d_ver=d1,
+        spark, _at(spark, fp, f0), _at(spark, dp, d1), **KW, f_changes=None,
+        d_changes=table_changes(spark, dp, d0 + 1, d1),
     )
     sums = {
         r.seg: r.s
@@ -437,8 +441,8 @@ def test_term_reads_pinned_to_target_versions(spark, tmp_path):
     update_delta(spark, dp, set_exprs={"seg": "'s8'"}, predicate="dk = 2")
 
     rows = _join_mv_delta_rows(
-        spark, fp, dp, **KW, f_changes=table_changes(spark, fp, f2, f2),
-        d_changes=None, f_ver=f2, d_ver=d1,
+        spark, _at(spark, fp, f2), _at(spark, dp, d1), **KW,
+        f_changes=table_changes(spark, fp, f2, f2), d_changes=None,
     )
     got = {(r["seg"], r["amt"], r["__sign"]) for r in rows.collect()}
     # dim AS OF d1 still maps dk=2 → 's2', not the raced 's8'
@@ -464,9 +468,8 @@ def test_join_refresh_concurrent_fully_covered_skips(spark, tmp_path):
     f1 = load_snapshot(fp, spark=spark).version
     # stale maintainer computes + freezes its rows…
     rows = _join_mv_delta_rows(
-        spark, fp, dp, **KW,
-        f_changes=table_changes(spark, fp, f0 + 1, f1),
-        d_changes=None, f_ver=f1, d_ver=d0,
+        spark, _at(spark, fp, f1), _at(spark, dp, d0), **KW,
+        f_changes=table_changes(spark, fp, f0 + 1, f1), d_changes=None,
     ).localCheckpoint(eager=True)
     # …concurrent refresh wins
     refresh_join_mv(spark, fp, dp, mp, **KW)
@@ -506,15 +509,13 @@ def test_join_refresh_concurrent_partial_overlap_raises(spark, tmp_path):
     f2 = load_snapshot(fp, spark=spark).version
     # stale maintainer freezes the FULL fact range (f0, f2]
     rows = _join_mv_delta_rows(
-        spark, fp, dp, **KW,
-        f_changes=table_changes(spark, fp, f0 + 1, f2),
-        d_changes=None, f_ver=f2, d_ver=d0,
+        spark, _at(spark, fp, f2), _at(spark, dp, d0), **KW,
+        f_changes=table_changes(spark, fp, f0 + 1, f2), d_changes=None,
     ).localCheckpoint(eager=True)
     # concurrent refresh applies only (f0, f1]
     sub = _join_mv_delta_rows(
-        spark, fp, dp, **KW,
-        f_changes=table_changes(spark, fp, f0 + 1, f1),
-        d_changes=None, f_ver=f1, d_ver=d0,
+        spark, _at(spark, fp, f1), _at(spark, dp, d0), **KW,
+        f_changes=table_changes(spark, fp, f0 + 1, f1), d_changes=None,
     )
     apply_signed_rows(
         spark, mp, sub, KW["group_cols"], KW["sum_cols"],
@@ -935,17 +936,43 @@ def test_join_txns_only_commit_revalidates_after_concurrent_txn(
     assert wm[0] == f_applied + 5  # not regressed by the loser
 
 
-def test_join_minmax_small_extremum_delete_and_dim_update(spark, tmp_path):
+def test_join_minmax_small_extremum_delete_and_dim_update(
+    spark, tmp_path, monkeypatch
+):
     """Tier-1 twin of the join-MV min/max refresh on ≤16-row bases: a
     fact delete that removes a group's maximum plus a dim update that
-    moves standing fact rows between groups, in one refresh."""
+    moves standing fact rows between groups, in one refresh. That
+    refresh runs every term and the group recompute, yet opens each
+    base's log ONCE outside the data readers (read_delta /
+    table_changes): the attempt's two snapshots serve the version pin,
+    both schemas and the dim size."""
+    import sys
+
+    import deltalake_datafusion_spark.delta.snapshot as snapmod
+
     fp, dp, m = (str(tmp_path / x) for x in ("f", "d", "m"))
     _bases(spark, fp, dp, n=16, n_dim=4)  # s0 ⊃ fk 0,3: amt 1,51,16,66
     build_join_mv(spark, fp, dp, m, **MMKW)
     delete_delta(spark, fp, "id = 13")  # amt 66: s0's maximum
     update_delta(spark, dp, set_exprs={"seg": "'sx'"}, predicate="dk = 1")
+
+    orig = snapmod.load_snapshot
+    loads = {fp: 0, dp: 0}
+
+    def spy(path, *a, **kw):
+        f, callers = sys._getframe(1), set()
+        while f is not None:
+            callers.add(f.f_code.co_name)
+            f = f.f_back
+        if path in loads and not callers & {"read_delta", "table_changes"}:
+            loads[path] += 1
+        return orig(path, *a, **kw)
+
+    monkeypatch.setattr(snapmod, "load_snapshot", spy)
     res = refresh_join_mv(spark, fp, dp, m, **MMKW)
+    monkeypatch.undo()
     assert res["mode"] == "incremental"
+    assert loads == {fp: 1, dp: 1}
     st = _mm_state(spark, m)
     assert st == _mm_expected(spark, fp, dp)
     assert st["s0"] == (3, 68, 1, 51) and "s1" not in st
