@@ -82,11 +82,7 @@ def _dml_snapshot(spark, table_path: str, predicate: str | None):
     driver-side as before)."""
     from deltalake_datafusion_spark.delta import scan as scanmod
 
-    if (
-        predicate is not None
-        and scanmod.estimate_log_actions(table_path, spark)
-        > scanmod.SPARK_PLANNER_FILE_THRESHOLD
-    ):
+    if predicate is not None and scanmod.plan_on_spark(table_path, spark):
         snap = load_snapshot(table_path, spark=spark, with_files=False)
         check_writable(snap)
         return snap, scanmod.collect_planned_files(
@@ -1298,7 +1294,7 @@ def _merge_attempt(
     # replaces the pre-r13 two sequential collects (guide §1.2).
     # Non-strict merges keep the cheaper single-shuffle distinct, and
     # by-source merges need no file list at all (touched = all files).
-    _bs_active = bool(bs_clauses)
+    bs_active = bool(bs_clauses)
     if strict:
         _per_file = (
             matched.groupBy("__file_path")
@@ -1309,7 +1305,7 @@ def _merge_attempt(
             .collect()
         )
         _touched_abs = [r["__file_path"] for r in _per_file]
-    elif not _bs_active:
+    elif not bs_active:
         _touched_abs = [
             r["__file_path"]
             for r in matched.select("__file_path").distinct().collect()
@@ -1336,7 +1332,6 @@ def _merge_attempt(
                 "deduplicate the source or run with strict=False"
             )
 
-    bs_active = bool(bs_clauses)
     for _cl in bs_clauses:
         import re as _re0
 
@@ -1363,6 +1358,15 @@ def _merge_attempt(
         ]
         by_path = {f.path: f for f in all_files}
         touched = [by_path[p] for p in touched_files]
+    # Every target row that some source row matches lies in a touched
+    # file, so the rewrite and the not-matched anti-join read only
+    # those files; a by-source clause touches every file.
+    touched_target = target
+    if touched and not bs_active:
+        touched_target = _scan_with_rowmeta(
+            spark, snap, None, files=touched,
+            row_id_col=rt_mat, row_ver_col=rt_ver,
+        )
 
     if strategy == "auto":
         # Cost model: copy-on-write moves every touched byte; the DV
@@ -1408,14 +1412,7 @@ def _merge_attempt(
     new_parts = []
     dv_enc = None
     if touched:
-        if bs_active:
-            tf = target
-        else:
-            tf = target.join(
-                matched.select("__file_path").distinct(),
-                "__file_path",
-                "left_semi",
-            )
+        tf = touched_target
         m = matched.select(
             "__file_path", "__row_index", "__s___matched",
             *[f"__s_{c}" for c in source.columns],
@@ -1700,7 +1697,10 @@ def _merge_attempt(
         )
         from deltalake_datafusion_spark.delta.writer import DeltaWriteError
 
-        anti = s.join(t, cond, "left_anti")
+        anti = (
+            s.join(touched_target.alias("t"), cond, "left_anti")
+            if touched else s
+        )
         id_cols = identity_columns(logical)
         # Ordered WHEN NOT MATCHED clauses: per source row the first
         # clause whose condition holds inserts it (null cond = false);
@@ -2175,10 +2175,7 @@ def _optimize_attempt(
     collects ~nothing, the same cutover the read and DML paths make."""
     from deltalake_datafusion_spark.delta import scan as scanmod
 
-    distributed = (
-        scanmod.estimate_log_actions(table_path, spark)
-        > scanmod.SPARK_PLANNER_FILE_THRESHOLD
-    )
+    distributed = scanmod.plan_on_spark(table_path, spark)
     snap = load_snapshot(table_path, spark=spark, with_files=not distributed)
     check_writable(snap)
     threshold = small_file_threshold or target_file_size // 2

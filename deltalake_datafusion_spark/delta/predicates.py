@@ -821,7 +821,7 @@ def skipping_column(pred, schema: StructType, partition_columns,
 def prune_files_df(files_df, predicate_sql: str | None, schema: StructType,
                    partition_columns, logical_to_physical=None):
     """Spark-side pruning over a log-replay files DataFrame (one row
-    per live add-file, as produced by ``snapshot.log_replay_df``):
+    per live add-file, as produced by ``snapshot.log_replay_spark``):
     parse stats with ``from_json``, keep files that may match. The
     whole planning step is then a distributed job — nothing about the
     table's file count ever needs to fit on the driver until after

@@ -36,6 +36,7 @@ Scale design:
 from __future__ import annotations
 
 import functools
+import logging
 import os
 import re
 
@@ -48,6 +49,8 @@ from deltalake_datafusion_spark.delta.schema_apply import apply_schema
 from deltalake_datafusion_spark.delta.snapshot import AddFile, Snapshot, load_snapshot
 from deltalake_datafusion_spark.delta.stats import parse_stats
 from deltalake_datafusion_spark.delta.writer import physical_schema
+
+_log = logging.getLogger(__name__)
 
 
 def _logical_to_physical_map(schema: StructType) -> dict[str, str]:
@@ -309,7 +312,10 @@ def scan_files_spark(
     :func:`scan_files` produces.
     """
     from deltalake_datafusion_spark.delta.predicates import prune_files_df
-    from deltalake_datafusion_spark.delta.snapshot import log_replay_df, load_snapshot
+    from deltalake_datafusion_spark.delta.snapshot import (
+        load_snapshot,
+        log_replay_spark,
+    )
 
     # metadata-only replay: the whole point of this planner is that
     # the DRIVER never parses the add actions — schema / partition
@@ -317,7 +323,7 @@ def scan_files_spark(
     snap = load_snapshot(
         table_path, version=version, spark=spark, with_files=False
     )
-    files_df = log_replay_df(spark, table_path, version)
+    files_df = log_replay_spark(spark, table_path, version)
     l2p = _logical_to_physical_map(snap.schema)
     return prune_files_df(
         files_df, _pruning_predicate(snap, predicate), snap.schema,
@@ -385,6 +391,21 @@ def estimate_log_actions(table_path: str, spark=None) -> int:
         if m and int(m.group(1)) > cp_version:
             tail_bytes += st.size
     return est + tail_bytes // _LOG_BYTES_PER_ACTION
+
+
+def plan_on_spark(table_path: str, spark=None) -> bool:
+    """The planner cutover every "auto" site shares (reads, DML and
+    OPTIMIZE planning, the log-replay table): True — replay and plan
+    as a Spark job — when :func:`estimate_log_actions` exceeds
+    ``SPARK_PLANNER_FILE_THRESHOLD``, else the driver replays."""
+    est = estimate_log_actions(table_path, spark)
+    on_spark = est > SPARK_PLANNER_FILE_THRESHOLD
+    _log.debug(
+        "planner cutover for %s: ~%d log actions, threshold %d → %s",
+        table_path, est, SPARK_PLANNER_FILE_THRESHOLD,
+        "spark" if on_spark else "driver",
+    )
+    return on_spark
 
 
 def collect_planned_files(
@@ -681,9 +702,8 @@ def read_delta(
         )
     if planner not in ("auto", "driver", "spark"):
         raise ValueError(f"unknown planner {planner!r}")
-    if planner == "auto":
-        if estimate_log_actions(table_path, spark) > SPARK_PLANNER_FILE_THRESHOLD:
-            planner = "spark"
+    if planner == "auto" and plan_on_spark(table_path, spark):
+        planner = "spark"
     if planner == "spark":
         return scan_spark_planned(
             spark, table_path, version=version, predicate=predicate,

@@ -25,12 +25,10 @@ def local_rows_df(spark, rows, schema):
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
 
-    if not rows:
-        return spark.createDataFrame([], schema)
-    columns = list(zip(*rows))
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
     arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [[] for _ in arrow]
     return spark.createDataFrame(
         pa.table(
             [pa.array(c, f.type) for c, f in zip(columns, arrow)],

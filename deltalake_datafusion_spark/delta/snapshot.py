@@ -15,7 +15,7 @@ plain Python on the driver:
 
 Scale: log replay is metadata-scale (KBs..GBs of JSON/parquet, not
 table data). Driver-side replay handles logs up to ~1e6 actions
-comfortably; :func:`log_replay_df` provides the same replay as a
+comfortably; :func:`log_replay_spark` provides the same replay as a
 Spark job (window dedup over the actions DataFrame) for tables whose
 logs outgrow the driver — the cutover mirrors the reference running
 snapshot loads on blocking threads (``session.rs:294-299``).
@@ -79,6 +79,12 @@ class AddFile:
     base_row_id: int | None = None  # rowTracking feature
     default_row_commit_version: int | None = None
     tags: dict[str, str] | None = None  # e.g. liquid-clustering marker
+    # What the log-replay table shows (set by the replay): the path
+    # as the log spells it (URL-encoded) and the version of the log
+    # file that supplied this add — the checkpoint version, the commit
+    # version or a compacted file's range end.
+    log_path: str | None = None
+    log_version: int | None = None
 
     @property
     def dv_id(self) -> str:
@@ -247,8 +253,7 @@ def _read_checkpoint_actions(
                 if c in avail
             ]
             table = papq.read_table(p, columns=cols)
-        for row in table.to_pylist():
-            row = {k: v for k, v in row.items() if v is not None}
+        for row in _checkpoint_rows(table):
             if "sidecar" in row:
                 # V2 checkpoint: file actions live in _sidecars/
                 sidecars.append(row["sidecar"]["path"])
@@ -259,11 +264,113 @@ def _read_checkpoint_actions(
         base = os.path.join(os.path.dirname(checkpoint_paths[0]), "_sidecars")
         for name in sidecars:
             table = papq.read_table(os.path.join(base, name))
-            for row in table.to_pylist():
-                row = {k: v for k, v in row.items() if v is not None}
-                if row:
-                    actions.append(row)
+            actions.extend(row for row in _checkpoint_rows(table) if row)
     return actions
+
+
+def _checkpoint_rows(table) -> list[dict]:
+    """Checkpoint (or sidecar) rows as action dicts without their null
+    columns. A typed ``add.stats_parsed`` struct (DAT
+    ``stats_as_struct``, ``writeStatsAsStruct``) is folded into the
+    JSON ``stats`` string when the add has none, written as
+    :func:`_conform_to_log_schema` writes it on the Spark side — so
+    the skipping evaluator sees one format and both replays agree."""
+    import pyarrow as pa
+
+    rows = table.to_pylist()
+    names = table.schema.names
+    add_t = table.schema.field("add").type if "add" in names else None
+    if (
+        isinstance(add_t, pa.StructType)
+        and add_t.get_field_index("stats_parsed") >= 0
+    ):
+        st_t = add_t.field("stats_parsed").type
+        for row in rows:
+            ad = row.get("add")
+            if ad and ad.get("stats") is None and ad.get("stats_parsed"):
+                ad["stats"] = _stats_json(ad["stats_parsed"], st_t)
+    return [{k: v for k, v in row.items() if v is not None} for row in rows]
+
+
+# to_json options of the Spark-side stats_parsed fold: timestamps keep
+# their microseconds (Spark's default millisecond format would round a
+# max DOWN, below the true bound) and are written in UTC whatever the
+# session time zone.
+_STATS_JSON_OPTIONS = {
+    "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
+    "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
+    "timeZone": "UTC",
+}
+
+
+def _stats_json(value, typ) -> str:
+    """``value`` (a pyarrow ``to_pylist`` value of Arrow type ``typ``)
+    as the JSON text Spark's ``to_json`` writes with
+    :data:`_STATS_JSON_OPTIONS`: compact, null fields left out, floats
+    in Java's ``toString`` form, timestamps with microseconds."""
+    import datetime as dt
+
+    import pyarrow.types as pat
+
+    if pat.is_struct(typ):
+        return "{" + ",".join(
+            json.dumps(f.name, ensure_ascii=False) + ":"
+            + _stats_json(value[f.name], f.type)
+            for f in typ
+            if value.get(f.name) is not None
+        ) + "}"
+    if pat.is_boolean(typ):
+        return "true" if value else "false"
+    if pat.is_floating(typ):
+        return _java_float_str(value, single=pat.is_float32(typ))
+    if pat.is_integer(typ) or pat.is_decimal(typ):
+        return str(value)
+    if pat.is_date(typ):
+        return f'"{value.isoformat()}"'
+    if pat.is_timestamp(typ):
+        zone = ""
+        if typ.tz is not None:
+            value, zone = value.astimezone(dt.timezone.utc), "Z"
+        return f'"{value:%Y-%m-%dT%H:%M:%S}.{value.microsecond:06d}{zone}"'
+    return json.dumps(value, ensure_ascii=False, default=str)
+
+
+def _java_float_str(x: float, single: bool = False) -> str:
+    """Java's ``Double.toString`` / ``Float.toString`` (what Jackson
+    writes for Spark ``to_json``): shortest round-trip digits, plain
+    notation for 1e-3 ≤ |x| < 1e7, else ``d.dddE±n``; non-finite
+    values quoted."""
+    import decimal
+    import math
+
+    if math.isnan(x):
+        return '"NaN"'
+    if math.isinf(x):
+        return '"Infinity"' if x > 0 else '"-Infinity"'
+    if x == 0:
+        return "-0.0" if math.copysign(1.0, x) < 0 else "0.0"
+    if single:
+        import numpy as np
+
+        text = str(np.float32(x))
+    else:
+        text = repr(x)
+    sign, digits, exp = decimal.Decimal(text).as_tuple()
+    digits = list(digits)
+    while len(digits) > 1 and digits[-1] == 0:
+        digits.pop()
+        exp += 1
+    mag = exp + len(digits) - 1  # power of ten of the first digit
+    ds = "".join(map(str, digits))
+    if -3 <= mag < 7:
+        if mag >= 0:
+            ds = ds.ljust(mag + 1, "0")
+            body = ds[: mag + 1] + "." + (ds[mag + 1:] or "0")
+        else:
+            body = "0." + "0" * (-mag - 1) + ds
+    else:
+        body = ds[0] + "." + (ds[1:] or "0") + f"E{mag}"
+    return ("-" if sign else "") + body
 
 
 _META_ACTION_MARKS = (
@@ -393,7 +500,13 @@ class _ReplayState:
         self.domain_metadata: dict[str, str] = domain_metadata or {}
 
 
-def _apply_actions(actions, state: _ReplayState, with_files: bool) -> None:
+def _apply_actions(
+    actions, state: _ReplayState, with_files: bool,
+    version: int | None = None,
+) -> None:
+    """Replay ``actions`` — all read from one log file, whose version
+    (checkpoint, commit or compacted range end) is ``version`` — into
+    ``state``."""
     for a in actions:
         if "metaData" in a and a["metaData"]:
             md = a["metaData"]
@@ -419,24 +532,18 @@ def _apply_actions(actions, state: _ReplayState, with_files: bool) -> None:
                 continue
             ad = a["add"]
             path = urllib.parse.unquote(ad["path"])
-            dv = _parse_dv(ad.get("deletionVector"))
-            stats = ad.get("stats")
-            if not stats and ad.get("stats_parsed"):
-                # DAT ``stats_as_struct``: checkpoints may carry stats
-                # as a typed struct column instead of the JSON string —
-                # normalize so the skipping evaluator sees one format
-                # (dates/timestamps serialize to their ISO strings).
-                stats = json.dumps(ad["stats_parsed"], default=str)
             state.adds[path] = AddFile(
                 path=path,
                 size=ad.get("size", 0),
                 modification_time=ad.get("modificationTime", 0),
                 partition_values=dict(ad.get("partitionValues") or {}),
-                stats=stats,
-                dv=dv,
+                stats=ad.get("stats"),
+                dv=_parse_dv(ad.get("deletionVector")),
                 base_row_id=ad.get("baseRowId"),
                 default_row_commit_version=ad.get("defaultRowCommitVersion"),
-                tags=dict(ad["tags"]) if ad.get("tags") else None,
+                tags=dict(ad["tags"]) if ad.get("tags") is not None else None,
+                log_path=ad["path"],
+                log_version=version,
             )
         elif "remove" in a and a["remove"]:
             if not with_files:
@@ -556,7 +663,7 @@ def load_snapshot(
         actual_version = base.version
         for v, p in tail:
             _apply_actions(
-                _iter_commit_actions(p, fs, with_files), state, with_files
+                _iter_commit_actions(p, fs, with_files), state, with_files, v
             )
             actual_version = v
         return _finish_snapshot(table_path, actual_version, state)
@@ -596,13 +703,17 @@ def load_snapshot(
     # the previous entry — so replay is O(1) per action regardless of
     # log length.
     state = _ReplayState()
-    _apply_actions(_read_checkpoint_actions(cp_paths, with_files), state, with_files)
+    _apply_actions(
+        _read_checkpoint_actions(cp_paths, with_files), state, with_files,
+        cp_version,
+    )
     actual_version = cp_version
     for _kind, _s, seg_end, p in _plan_commit_replay(
         replay_commits, compacted, cp_version, version
     ):
         _apply_actions(
-            _iter_commit_actions(p, fs, with_files), state, with_files
+            _iter_commit_actions(p, fs, with_files), state, with_files,
+            seg_end,
         )
         actual_version = seg_end
     return _finish_snapshot(table_path, actual_version, state)
@@ -794,7 +905,10 @@ def _conform_to_log_schema(df):
                         df_add.getField("stats")
                         if "stats" in {sf.name for sf in actual.fields}
                         else F.lit(None).cast("string"),
-                        F.to_json(df_add.getField("stats_parsed")),
+                        F.to_json(
+                            df_add.getField("stats_parsed"),
+                            _STATS_JSON_OPTIONS,
+                        ),
                     ),
                 ),
             ).otherwise(F.lit(None).cast(f.dataType))
@@ -824,6 +938,11 @@ def actions_df(
     table_path = strip_scheme(table_path)
     commits, checkpoints, compacted = list_log_files_all(table_path, spark)
     if version is not None:
+        tip = max((v for v, _ in commits + checkpoints), default=-1)
+        if version > tip:
+            raise DeltaNotFoundError(
+                f"version {version} not available (latest {tip})"
+            )
         commits = [(v, p) for v, p in commits if v <= version]
         checkpoints = [(v, p) for v, p in checkpoints if v <= version]
 
@@ -906,10 +1025,12 @@ def actions_df(
     return out
 
 
-def log_replay_df(spark, table_path: str, version: int | None = None):
-    """Surviving add-files as a DataFrame (one row per live file):
-    window dedup by path over (version, is_add), keep latest adds not
-    followed by a remove. Scales to arbitrarily large logs."""
+def live_adds_spark(spark, table_path: str, version: int | None = None):
+    """The live add set as a Spark job, for logs too large for the
+    driver: one row per surviving file with its ``add`` action and
+    the ``version`` of the log file that supplied it. A window over
+    each path's actions keeps the latest (an add beats a remove of the
+    same version) and drops paths whose latest action is a remove."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -917,27 +1038,80 @@ def log_replay_df(spark, table_path: str, version: int | None = None):
     acts = df.select(
         "version",
         F.coalesce(F.col("add.path"), F.col("remove.path")).alias("path"),
-        F.col("add").alias("add_action"),
+        "add",
         F.col("add.path").isNotNull().alias("is_add"),
     ).filter(F.col("path").isNotNull())
     w = Window.partitionBy("path").orderBy(
         F.desc("version"), F.desc("is_add")
     )
-    latest = (
+    return (
         acts.withColumn("rn", F.row_number().over(w))
         .filter((F.col("rn") == 1) & F.col("is_add"))
+        .select("add", "version")
     )
-    return latest.select(
-        F.col("add_action.path").alias("path"),
-        F.col("add_action.size").alias("size"),
-        F.col("add_action.modificationTime").alias("modificationTime"),
-        F.col("add_action.partitionValues").alias("partitionValues"),
-        F.col("add_action.stats").alias("stats"),
-        F.col("add_action.deletionVector").alias("deletionVector"),
-        F.col("add_action.baseRowId").alias("baseRowId"),
-        F.col("add_action.defaultRowCommitVersion").alias(
-            "defaultRowCommitVersion"
-        ),
-        F.col("add_action.tags").alias("tags"),
+
+
+# Columns of the log-replay table, in order: the add action's fields
+# plus the version of the log file that supplied the add.
+_REPLAY_COLUMNS = (
+    "path", "size", "modificationTime", "partitionValues", "stats",
+    "deletionVector", "baseRowId", "defaultRowCommitVersion", "tags",
+)
+
+
+def log_replay_spark(spark, table_path: str, version: int | None = None):
+    """The log-replay table computed by Spark (:func:`live_adds_spark`)
+    — what :func:`log_replay_df` runs above the planner cutover, and
+    what callers that exist for logs too large for the driver use
+    directly."""
+    from pyspark.sql import functions as F
+
+    return live_adds_spark(spark, table_path, version).select(
+        *[F.col(f"add.{c}").alias(c) for c in _REPLAY_COLUMNS],
         F.col("version").alias("commit_version"),
     )
+
+
+def log_replay_df(spark, table_path: str, version: int | None = None):
+    """Surviving add-files as a DataFrame, one row per live file: the
+    ``log_replay`` metadata table (reference ``DeltaLogReplayProvider``,
+    ``delta_log.rs:139-421``). Raises :class:`DeltaNotFoundError` for
+    a version past the tip.
+
+    The replay runs where ``read_delta`` plans (``scan.plan_on_spark``):
+    at or below the cutover the driver replays the log
+    (:func:`load_snapshot`) and the rows ship as one Arrow
+    ``LocalRelation``, so no Spark job runs; above it
+    :func:`log_replay_spark` replays on the executors. Both give the
+    same rows. The driver side loads uncached: a cached snapshot
+    refreshed across a later checkpoint or compacted file would name
+    the commit files it replayed, not the file a full replay reads."""
+    from deltalake_datafusion_spark.delta.log_schema import ADD_SCHEMA
+    from deltalake_datafusion_spark.delta.scan import plan_on_spark
+    from deltalake_datafusion_spark.delta.smalldf import local_rows_df
+    from pyspark.sql.types import LongType, StructField
+
+    if plan_on_spark(table_path, spark):
+        return log_replay_spark(spark, table_path, version)
+    snap = load_snapshot(table_path, version=version, spark=spark)
+    schema = StructType(
+        [ADD_SCHEMA[c] for c in _REPLAY_COLUMNS]
+        + [StructField("commit_version", LongType())]
+    )
+    rows = [
+        (
+            f.log_path, f.size, f.modification_time, f.partition_values,
+            f.stats,
+            f.dv and {
+                "storageType": f.dv.storage_type,
+                "pathOrInlineDv": f.dv.path_or_inline,
+                "offset": f.dv.offset,
+                "sizeInBytes": f.dv.size_in_bytes,
+                "cardinality": f.dv.cardinality,
+            },
+            f.base_row_id, f.default_row_commit_version, f.tags,
+            f.log_version,
+        )
+        for f in snap.files
+    ]
+    return local_rows_df(spark, rows, schema)

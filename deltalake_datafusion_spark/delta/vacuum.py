@@ -312,7 +312,7 @@ def _referenced_paths_df(spark, table_path: str, snap):
     small_enough_to_broadcast).
 
     Small tables build the set on the driver. Past the distributed-
-    planning threshold the set comes from :func:`log_replay_df` as a
+    planning threshold the set comes from ``log_replay_spark`` as a
     Spark job — a 1e7-file table's referenced set never materializes
     driver-side (the anti-join then runs shuffle-to-shuffle instead of
     against a broadcast)."""
@@ -338,9 +338,9 @@ def _referenced_paths_df(spark, table_path: str, snap):
 
     import pandas as pd
 
-    from deltalake_datafusion_spark.delta.snapshot import log_replay_df
+    from deltalake_datafusion_spark.delta.snapshot import log_replay_spark
 
-    live = log_replay_df(spark, table_path)
+    live = log_replay_spark(spark, table_path)
     root = table_path.rstrip("/")
     data_paths = live.select(
         F.when(

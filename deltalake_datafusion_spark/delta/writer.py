@@ -2342,27 +2342,15 @@ def _with_stats_parsed(df, snapshot):
 
 def _live_adds_df(spark, snap) -> DataFrame:
     """The live add set of ``snap`` derived ON THE EXECUTORS
-    (checkpoint-aware ``actions_df`` + window dedup — the same replay
-    ``log_replay_df`` uses), each add restamped ``dataChange=false``;
-    one ``add`` column. The file set never touches the driver."""
-    from pyspark.sql import Window
+    (``snapshot.live_adds_spark``), each add restamped
+    ``dataChange=false``; one ``add`` column. The file set never
+    touches the driver."""
     from pyspark.sql import functions as F
 
-    from deltalake_datafusion_spark.delta.snapshot import actions_df
+    from deltalake_datafusion_spark.delta.snapshot import live_adds_spark
 
-    acts = actions_df(spark, snap.table_path, snap.version).select(
-        "version",
-        F.coalesce(F.col("add.path"), F.col("remove.path")).alias("path"),
-        F.col("add").alias("add_action"),
-        F.col("add.path").isNotNull().alias("is_add"),
-    ).filter(F.col("path").isNotNull())
-    w = Window.partitionBy("path").orderBy(F.desc("version"), F.desc("is_add"))
-    return (
-        acts.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & F.col("is_add"))
-        .select(
-            F.col("add_action").withField("dataChange", F.lit(False)).alias("add")
-        )
+    return live_adds_spark(spark, snap.table_path, snap.version).select(
+        F.col("add").withField("dataChange", F.lit(False)).alias("add")
     )
 
 
@@ -2583,19 +2571,19 @@ def maybe_checkpoint_light(spark, table_path: str) -> None:
     """:func:`maybe_checkpoint` for tables whose file lists stay OFF
     the driver (the distributed DML planner path): the ``.crc`` state
     totals come from ONE aggregate over the Spark-side log replay
-    (``log_replay_df``), the checkpoint — when the interval hits —
+    (``log_replay_spark``), the checkpoint — when the interval hits —
     from the Spark-job writers, and log cleanup runs as usual. Driver
     memory stays ∝ metadata, never ∝ file count."""
     from pyspark.sql import functions as F
 
-    from deltalake_datafusion_spark.delta.snapshot import log_replay_df
+    from deltalake_datafusion_spark.delta.snapshot import log_replay_spark
 
     snapshot = load_snapshot(table_path, spark=spark, with_files=False)
     row = (
         # pinned to the snapshot's version: a commit landing between
         # the two reads must not leak NEWER totals into THIS version's
         # .crc (verify would raise on the mismatch later)
-        log_replay_df(spark, table_path, snapshot.version)
+        log_replay_spark(spark, table_path, snapshot.version)
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.coalesce(F.sum("size"), F.lit(0)).alias("bytes"),

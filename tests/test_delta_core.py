@@ -15,7 +15,6 @@ from deltalake_datafusion_spark.delta.scan import read_delta, scan_files
 from deltalake_datafusion_spark.delta.snapshot import (
     DeltaNotFoundError,
     load_snapshot,
-    log_replay_df,
 )
 from deltalake_datafusion_spark.delta.writer import (
     DeltaWriteError,
@@ -279,12 +278,14 @@ def test_nested_types_roundtrip(spark, tmp_path):
 
 def test_log_replay_df_matches_driver_replay(spark, tmp_path):
     """Spark-side log replay (S8) agrees with driver-side replay."""
+    from deltalake_datafusion_spark.delta.snapshot import log_replay_spark
+
     path = str(tmp_path / "replaydf")
     write_delta(spark, spark.range(10), path)
     write_delta(spark, spark.range(10, 20), path, mode="append")
     delete_delta(spark, path, "id = 5")
     snap = load_snapshot(path)
-    df = log_replay_df(spark, path)
+    df = log_replay_spark(spark, path)
     spark_side = sorted(r["path"] for r in df.collect())
     driver_side = sorted(f.path for f in snap.files)
     assert spark_side == driver_side
@@ -321,7 +322,7 @@ def test_projection_and_limit(spark, tmp_path):
 
 
 def test_spark_side_pruning_matches_driver_side(spark, tmp_path):
-    """The distributed planning path (log_replay_df + stats Column)
+    """The distributed planning path (log_replay_spark + stats Column)
     must keep exactly the files the driver-side evaluator keeps —
     or a superset never smaller (both conservative), and both must
     retain every truly-matching file."""
@@ -501,7 +502,7 @@ def test_replay_100k_actions_is_linear(spark, tmp_path):
 
     from deltalake_datafusion_spark.delta.snapshot import (
         load_snapshot,
-        log_replay_df,
+        log_replay_spark,
     )
 
     path = str(tmp_path / "big_log")
@@ -591,7 +592,8 @@ def test_replay_100k_actions_is_linear(spark, tmp_path):
 
     # distributed replay agrees with the driver-side replay
     spark_paths = {
-        r.path for r in log_replay_df(spark, path).select("path").collect()
+        r.path
+        for r in log_replay_spark(spark, path).select("path").collect()
     }
     assert spark_paths == {f.path for f in snap.files}
 

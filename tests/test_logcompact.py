@@ -357,21 +357,24 @@ def test_auto_log_compaction_conf(spark, tmp_path):
 
 
 def test_distributed_replay_uses_compacted(spark, tmp_path):
-    """log_replay_df (the Spark-planner replay) reads compacted files
-    in place of covered commit runs and lands the identical file set;
-    the delta_log metadata table keeps the real per-commit stream."""
+    """log_replay_spark (the Spark-planner replay) reads compacted
+    files in place of covered commit runs and lands the identical file
+    set; the delta_log metadata table keeps the real per-commit
+    stream."""
     from deltalake_datafusion_spark.delta.snapshot import (
         actions_df,
-        log_replay_df,
+        log_replay_spark,
     )
 
     path = _build(spark, tmp_path)
     expected = sorted(
         f.path for f in load_snapshot(path, spark=spark).files
     )
-    before = sorted(r["path"] for r in log_replay_df(spark, path).collect())
+    before = sorted(
+        r["path"] for r in log_replay_spark(spark, path).collect()
+    )
     compact_log(spark, path)
-    after_df = log_replay_df(spark, path)
+    after_df = log_replay_spark(spark, path)
     after = sorted(r["path"] for r in after_df.collect())
     assert before == after == expected
     # the replay's json scan reads the compacted file, not the
